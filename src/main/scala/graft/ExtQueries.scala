@@ -1948,7 +1948,9 @@ object ExtQueries {
     * ranks), while every superstep shuffle and the persisted
     * adjacency carry an 8-byte long instead of a 16+-byte string.
     * [[graphNodeLabel]] decodes back to the EXACT declared string
-    * label ("c123"/"s42"/"n7") in the final projection only. */
+    * label ("c123"/"s42"/"n7") in the final projection only.
+    * `key << 2` overflows for keys at or above 2^61 (the encoding is
+    * injective only below that); TPC-H keys sit far below it. */
   private def graphNodeId(tag: Int, key: Column): Column =
     shiftleft(key.cast("long"), 2).bitwiseOR(lit(tag.toLong))
 
@@ -2982,10 +2984,11 @@ object ExtQueries {
   /** Incremental near-dup curation (`Dedup.curateIncrement`): the
     * live-corpus update shape — prior survivors (curated from the
     * even docs exactly as x137 does) absorb the odd-doc batch through
-    * the bipartite screen + self screen + component merge + weighted
-    * re-election, with `n_copies` accumulating. FULL exact oracle
-    * (maxHamming = 0 ⇒ hash-equality groups = the mod-251 residues;
-    * cross-seed floor 14 probed — x137's margin discipline): DuckDB
+    * the curation kernel's weighted re-election (at maxHamming = 0
+    * one full-hash class aggregate), with `n_copies` accumulating.
+    * FULL exact oracle (maxHamming = 0 ⇒ hash-equality groups = the
+    * mod-251 residues; cross-seed floor 14 probed — x137's margin
+    * discipline): DuckDB
     * recomputes the even-phase survivor per residue, then the final
     * argmax over {even survivor} ∪ odds with n_copies = n_evens +
     * n_odds. The hashed frame is cut eagerly (localCheckpoint) so the
@@ -3006,10 +3009,9 @@ object ExtQueries {
     // even-phase Σk² clique pairs + components round-trip
     val survivors = Dedup.curateOneShot(evens, "doc_id", "ph", "quality",
       maxHamming = 0)
-    // THIS update: screen the odd batch against it and re-elect.
-    // odds is a filter of the checkpointed hashed frame — vouch it
+    // THIS update: screen the odd batch against it and re-elect
     Dedup.curateIncrement(survivors, odds, "doc_id", "ph", "quality",
-        maxHamming = 0, batchMaterialized = true)
+        maxHamming = 0)
       .select(col("doc_id"), col("quality"), col("n_copies"))
       .orderBy(col("doc_id"))
   }
@@ -3206,20 +3208,15 @@ object ExtQueries {
     // sized, ~32 B/row — same size class as one snapshot) so the
     // store can be deleted before the caller acts on the result.
     try {
-      // batchMaterialized: each batch is a filter of the eagerly
-      // checkpointed hashed frame — skip the per-update defensive cut
       CurationRunner.applyIncrement(store,
         hashed.filter(col("doc_id") % 2 === 0), 0L,
-        "doc_id", "ph", "quality", maxHamming = 0,
-        batchMaterialized = true)
+        "doc_id", "ph", "quality", maxHamming = 0)
       CurationRunner.applyIncrement(store,
         hashed.filter(col("doc_id") % 4 === 1), 1L,
-        "doc_id", "ph", "quality", maxHamming = 0,
-        batchMaterialized = true)
+        "doc_id", "ph", "quality", maxHamming = 0)
       CurationRunner.applyIncrement(store,
         hashed.filter(col("doc_id") % 4 === 3), 2L,
-        "doc_id", "ph", "quality", maxHamming = 0,
-        batchMaterialized = true)
+        "doc_id", "ph", "quality", maxHamming = 0)
       CurationRunner.prune(store, keep = 2)
       CurationRunner.survivors(s, store, "doc_id", "ph", "quality")
         .select(col("doc_id"), col("quality"), col("n_copies"))

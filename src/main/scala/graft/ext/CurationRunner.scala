@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
 
 /** [EXT] The DEPLOYMENT shape of incremental curation: a versioned
   * survivor store updated once per micro-batch through
-  * [[Dedup.curateIncrementCapped]] — "each crawl increment screens
-  * against the current corpus, merges, re-elects, and the survivor
-  * table rolls forward".
+  * [[Dedup.curateIncrementCapped]], the one curation kernel that
+  * `curateOneShot` also runs — "each crawl increment screens against
+  * the current corpus, merges, re-elects, and the survivor table rolls
+  * forward".
   *
   * Store layout under `dir` (any Hadoop-FileSystem URI — local path,
   * `file:`, `hdfs:`, `s3a:`, ... — every pointer/prune operation goes
@@ -56,10 +57,14 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shape: the store holds only (id, 64-bit hash, quality,
   * count) — ~32 B per surviving doc; each increment reads ONE
-  * snapshot and the batch, runs the capped screens (never quadratic
-  * in a hot hash), and writes one snapshot. [[prune]] bounds snapshot
-  * (and marker) count; old versions are what make time-travel reads
-  * and crash recovery trivial.
+  * snapshot and the batch, collapses both into full-hash classes in
+  * one aggregate, runs the capped screens over one representative per
+  * class (never quadratic in a hot hash; none at maxHamming = 0), and
+  * writes one snapshot. The cap counts distinct hashes, not docs, so
+  * exact copies always merge; at maxHamming = 0 it is unused and the
+  * overflow snapshot is empty. [[prune]] bounds snapshot (and marker)
+  * count; old versions are what make time-travel reads and crash
+  * recovery trivial.
   */
 object CurationRunner {
 
@@ -149,8 +154,7 @@ object CurationRunner {
   def applyIncrement(dir: String, batch: DataFrame, batchId: Long,
       idCol: String, hashCol: String, qualityCol: String,
       maxHamming: Int = 3,
-      maxBucket: Option[Int] = Some(1 << 12),
-      batchMaterialized: Boolean = false): Boolean = {
+      maxBucket: Option[Int] = Some(1 << 12)): Boolean = {
     val spark = batch.sparkSession
     val cur = current(dir, Some(spark))
     if (cur.exists(_.batchId >= batchId)) return false
@@ -164,7 +168,7 @@ object CurationRunner {
     val next = cur.map(_.version + 1).getOrElse(0L)
     val (out, overflow) = Dedup.curateIncrementCapped(surv, batch,
       idCol, hashCol, qualityCol, maxHamming = maxHamming,
-      maxBucket = maxBucket, batchMaterialized = batchMaterialized)
+      maxBucket = maxBucket)
     // The two snapshots are independent writes with no ordering
     // requirement between them (only the COMMIT MARKER below makes the
     // version visible) — overlap them so the tiny overflow write rides

@@ -591,12 +591,15 @@ object Dedup {
     *  - Survivor-survivor pairs are NOT searched: the survivor set is
     *    pairwise non-duplicate BY CONSTRUCTION of the previous update
     *    (each group kept one member), so the only new edges a batch
-    *    can introduce are batch×batch and batch×survivor — the
-    *    bipartite screen ([[graft.ext.Multimodal.hashNearDupAgainst]])
-    *    plus the self screen ([[graft.ext.Multimodal.hashNearDup]]).
+    *    can introduce are batch×batch and batch×survivor.
     *    (Two old survivors CAN land in one group when a batch doc
     *    bridges them — hamming is not transitive; the component merge
     *    handles that, and the loser's accumulated weight folds in.)
+    *  - Survivors that SHARE a hash merge: documents collapse into
+    *    full-hash classes before any search (see [[curateKernel]]).
+    *    Every `curateOneShot` or increment output holds distinct
+    *    hashes, so only a store left by an earlier capped run (which
+    *    could skip an exact pair) can contain such survivors.
     *  - Ids must be globally unique across survivors and batch (the
     *    usual content-addressed / monotonically-assigned id regimes).
     *  - DELETED BRIDGES: under a NON-transitive pair relation
@@ -610,11 +613,12 @@ object Dedup {
     *    of the union — winners and n_copies both (property-tested
     *    over random geometries).
     *
-    * Scale shape: both screens are chunk-pigeonhole bucket joins (no
-    * all-pairs stage), the component step is the O(log n)
-    * large-star/small-star [[components]], and the election is one
-    * map-side-combining groupBy over dup-group membership — every
-    * stage is the already-audited x13/x137/x138 machinery, composed.
+    * Under the store precondition (no two survivors share a hash) the
+    * output equals the doc-level composition — self screen
+    * ([[graft.ext.Multimodal.hashNearDup]]) + bipartite screen
+    * ([[graft.ext.Multimodal.hashNearDupAgainst]]) → [[components]]
+    * → [[keepBestInGroupsWeighted]]; differential spec:
+    * CurateKernelSpec.
     *
     * @param survivors current survivor set: idCol, hashCol,
     *                  qualityCol, nCopiesCol (+ anything else, dropped)
@@ -624,20 +628,25 @@ object Dedup {
     */
   def curateIncrement(survivors: DataFrame, batch: DataFrame, idCol: String,
       hashCol: String, qualityCol: String, nCopiesCol: String = "n_copies",
-      maxHamming: Int = 3, batchMaterialized: Boolean = false): DataFrame =
+      maxHamming: Int = 3): DataFrame =
     curateIncrementCapped(survivors, batch, idCol, hashCol, qualityCol,
-      nCopiesCol, maxHamming, maxBucket = None,
-      batchMaterialized = batchMaterialized)._1
+      nCopiesCol, maxHamming, maxBucket = None)._1
 
   /** [[curateIncrement]] under the family's drop-and-report cap: both
-    * screens skip hot (chunk, value) buckets past `maxBucket`
-    * members (the self screen by its member count, the bipartite
-    * screen by the two-sided sum), so one update is never quadratic
-    * in a hot hash — the certainty at billions of docs. A skipped
-    * bucket can only UNDER-merge (a missed pair leaves two docs in
-    * separate groups; pairs are never invented), so survivors remain
-    * a superset of the uncapped run's and every reported n_copies is
-    * exact for the groups that did form.
+    * screens skip hot (chunk, value) buckets past `maxBucket` members,
+    * so one update is never quadratic in a hot hash — the certainty at
+    * billions of docs. Members are distinct-hash class
+    * REPRESENTATIVES, not documents: exact copies always collapse, and
+    * a bucket turns hot only through more than `maxBucket` distinct
+    * hashes (the self screen counts batch-class representatives, the
+    * bipartite screen the two-sided sum with survivor-only ones). A
+    * skipped bucket can only UNDER-merge (a missed pair leaves two
+    * classes in separate groups; pairs are never invented), so the
+    * survivor count lies between the uncapped run's and a doc-counted
+    * cap's, output equals the uncapped output whenever overflow is
+    * empty, and every reported n_copies is exact for the groups that
+    * did form. At maxHamming = 0 there is no pair search: the cap is
+    * unused and overflow is empty.
     *
     * @return (new survivor set — [[curateIncrement]]'s contract;
     *         overflow (side ∈ self|cross, chunk, cval, n_ids) per
@@ -646,244 +655,125 @@ object Dedup {
   def curateIncrementCapped(survivors: DataFrame, batch: DataFrame,
       idCol: String, hashCol: String, qualityCol: String,
       nCopiesCol: String = "n_copies", maxHamming: Int = 3,
-      maxBucket: Option[Int] = Some(1 << 12),
-      batchMaterialized: Boolean = false): (DataFrame, DataFrame) = {
-    // Each input feeds several consumers (screen(s) + election); an
-    // expensive upstream pipeline — survivors is typically itself a
-    // curation output — would re-execute per consumer. Cut the narrow
-    // projections once, eagerly (the hashNearDup* pattern: ~32 B/row).
-    // batchMaterialized (round-17): the caller vouches the batch is
-    // already a materialized slice (e.g. a filter of its own eager
-    // checkpoint — the x140/x145 shape, or a foreachBatch micro-batch
-    // frame) whose re-scan is a cached-block read at any scale, so the
-    // defensive eager cut (one job per update) is skipped; the
-    // survivor side keeps its cut — it is typically a whole pipeline.
-    val surv = survivors.select(col(idCol), col(hashCol), col(qualityCol),
-      col(nCopiesCol).cast("long").as("__w")).localCheckpoint(true)
-    val bat0 = batch.select(col(idCol), col(hashCol), col(qualityCol))
-    val bat = if (batchMaterialized) bat0 else bat0.localCheckpoint(true)
-    val (labels, hotSelf, hotCross) =
-      if (maxHamming == 0)
-        equalityIncrementLabels(surv, bat, idCol, hashCol, maxBucket)
-      else {
-        // inputMaterialized: surv/bat were checkpointed just above, so
-        // the screens' defensive per-side checkpoints (3 jobs per
-        // update) are skipped
-        val (pairsSelf, hs) = Multimodal.hashNearDupCapped(
-          bat.select(col(idCol), col(hashCol)), idCol, hashCol, maxHamming,
-          maxBucket, inputMaterialized = true)
-        val (pairsCross, hc) = Multimodal.hashNearDupAgainstCapped(
-          bat.select(col(idCol), col(hashCol)),
-          surv.select(col(idCol), col(hashCol)), idCol, hashCol, maxHamming,
-          maxBucket, inputMaterialized = true)
-        val edges = pairsSelf.select(col("id_a"), col("id_b"))
-          .unionByName(pairsCross.select(col("id_a"), col("id_b")))
-        (components(edges, aCol = "id_a", bCol = "id_b"), hs, hc)
-      }
-    val all = surv.select(col(idCol), col(hashCol), col(qualityCol),
-        col("__w"))
-      .unionByName(bat.select(col(idCol), col(hashCol), col(qualityCol),
-        lit(1L).as("__w")))
-    val out = keepBestInGroupsWeighted(all, labels, idCol, qualityCol, "__w")
-      .select(col(idCol), col(hashCol), col(qualityCol), col("n_copies"))
-    val overflow = hotSelf.select(lit("self").as("side"), col("chunk"),
-        col("cval"), col("n_ids"))
-      .unionByName(hotCross.select(lit("cross").as("side"), col("chunk"),
-        col("cval"), col("n_ids")))
-    (out, overflow)
-  }
-
-  /** maxHamming = 0 fast path for [[curateIncrementCapped]] (round-17
-    * optimization, guide §1.2 "the distributed algorithm"): under hash
-    * EQUALITY the pair relation is transitive, so connected components
-    * over the screens' pairwise output equal the full-hash classes —
-    * the quadratic clique generation (Σ k² candidate pairs + their
-    * dedup shuffle + a components run: a raw-pair checkpoint, a gate
-    * count and a driver collect per update on the driver path) is
-    * replaced by DIRECT per-class labels (Σ k rows, zero extra jobs,
-    * zero driver traffic), which are exactly the component labeling
-    * the star/clique edges would produce (min id per component).
-    *
-    * Cap semantics are replicated exactly. At h = 0 every member of a
-    * class shares all four (chunk, value) buckets, so the generic
-    * screens' drop is all-or-nothing per class per screen:
-    *  - a SELF pair survives iff some chunk's bucket holds ≤ cap
-    *    BATCH members (the self screen counts only its input);
-    *  - a CROSS pair survives iff some chunk's bucket holds ≤ cap
-    *    members counted over BOTH sides (bL + bR — the bipartite
-    *    screen's as-joined accounting; the radius-0 ball is exact).
-    * Per class the component content is therefore decided by two
-    * exclusive cases (note cold-cross ⇒ cold-self, since
-    * n_tot ≥ n_bat):
-    *  - CROSS case (cross-alive ∧ both sides non-empty): the biclique
-    *    connects every member through any batch member → one
-    *    component of ALL members, label = global min id;
-    *  - else SELF case (self-alive ∧ ≥ 2 batch members): the batch
-    *    clique → one component of the BATCH members, label = min
-    *    batch id; survivor members stay unlabeled (pass through);
-    *  - else: no pairs, everyone unlabeled.
-    * Proved against the generic path (screens + components + weighted
-    * election, composed verbatim) in CurateEqualityFastPathSpec.
-    * Overflow reporting is unchanged: the SAME hot buckets, with the
-    * same per-screen counts, from ONE fused histogram pass instead of
-    * the generic path's two.
-    *
-    * With maxBucket = None no bucket is ever hot; the generic path's
-    * ungoverned-surface audit is NOT run because no quadratic join is
-    * planned — a hot-structured corpus that the audit would refuse is
-    * handled exactly (in linear candidate space) here. */
-  private def equalityIncrementLabels(surv: DataFrame, bat: DataFrame,
-      idCol: String, hashCol: String, maxBucket: Option[Int])
-      : (DataFrame, DataFrame, DataFrame) = {
-    import graft.functions.{HashFunctions => H}
-    val members = bat.select(col(idCol).as("id"), col(hashCol).as("ph"),
-        lit(true).as("__bat"))
-      .unionByName(surv.select(col(idCol).as("id"), col(hashCol).as("ph"),
-        lit(false).as("__bat")))
-      .filter(col("ph").isNotNull)
-    // per-class facts: batch-side root, global root, side counts
-    val classes = members.groupBy(col("ph"))
-      .agg(min(when(col("__bat"), col("id"))).as("__batRoot"),
-        min(col("id")).as("__root"),
-        sum(when(col("__bat"), 1L).otherwise(0L)).as("__nBat"),
-        count(lit(1)).as("__nTot"))
-    val (alive, hotSelf, hotCross) = maxBucket match {
-      case Some(cap) =>
-        // ONE histogram pass carries both screens' hot detection:
-        // n_bat is the self screen's bucket count, n_tot the bipartite
-        // screen's two-sided count
-        val hot = members.select(col("__bat"),
-            posexplode(H.simhashChunks(col("ph"))).as(Seq("chunk", "cval")))
-          .groupBy(col("chunk"), col("cval"))
-          .agg(sum(when(col("__bat"), 1L).otherwise(0L)).as("n_bat"),
-            count(lit(1)).as("n_tot"))
-          .filter(col("n_bat") > cap || col("n_tot") > cap)
-          .localCheckpoint(true) // hot buckets only — tiny by the cap
-        // class aliveness: a class survives a screen iff ANY of its
-        // four buckets is cold for that screen (hot is bucket-bounded
-        // small — broadcast, the generic path's hotKeys discipline)
-        val aliveness = classes
-          .select(col("ph"), col("__batRoot"), col("__root"),
-            col("__nBat"), col("__nTot"),
-            posexplode(H.simhashChunks(col("ph"))).as(Seq("chunk", "cval")))
-          .join(broadcast(hot), Seq("chunk", "cval"), "left")
-          .groupBy(col("ph"), col("__batRoot"), col("__root"),
-            col("__nBat"), col("__nTot"))
-          .agg(
-            max(when(col("n_bat").isNull || col("n_bat") <= cap, 1)
-              .otherwise(0)).as("__aliveSelf"),
-            max(when(col("n_tot").isNull || col("n_tot") <= cap, 1)
-              .otherwise(0)).as("__aliveCross"))
-        (aliveness,
-          hot.filter(col("n_bat") > cap)
-            .select(col("chunk"), col("cval"), col("n_bat").as("n_ids")),
-          hot.filter(col("n_tot") > cap)
-            .select(col("chunk"), col("cval"), col("n_tot").as("n_ids")))
-      case None =>
-        val spark = surv.sparkSession
-        import spark.implicits._
-        val empty = Seq.empty[(Int, Long, Long)].toDF("chunk", "cval", "n_ids")
-        (classes.select(col("ph"), col("__batRoot"), col("__root"),
-          col("__nBat"), col("__nTot"),
-          lit(1).as("__aliveSelf"), lit(1).as("__aliveCross")), empty, empty)
-    }
-    // exclusive per-class cases (see scaladoc): cross → all members
-    // labeled with the global root; self-only → batch members labeled
-    // with the batch root; exactly one label row per labeled member,
-    // the components contract keepBestInGroupsWeighted's left join
-    // relies on
-    val crossCase = col("__aliveCross") === 1 && col("__nBat") >= 1 &&
-      col("__nTot") > col("__nBat")
-    val selfCase = col("__aliveSelf") === 1 && col("__nBat") >= 2
-    val grouped = alive
-      .select(col("ph"),
-        when(crossCase, col("__root")).otherwise(col("__batRoot")).as("__g"),
-        crossCase.as("__all"), (crossCase || selfCase).as("__any"))
-      .filter(col("__any"))
-    val labels = members.join(grouped, Seq("ph"))
-      .filter(col("__all") || col("__bat"))
-      .select(col("id").as("doc_id"), col("__g").as("group_id"))
-    (labels, hotSelf, hotCross)
-  }
+      maxBucket: Option[Int] = Some(1 << 12)): (DataFrame, DataFrame) =
+    curateKernel(Some(survivors.select(col(idCol), col(hashCol),
+        col(qualityCol), col(nCopiesCol).cast("long").as("__wt"))),
+      batch, idCol, hashCol, qualityCol, maxHamming, maxBucket)
 
   /** ONE-SHOT near-dup curation over a precomputed 64-bit hash —
     * result-identical to the composed pipeline
     * `Multimodal.hashNearDup(docs) → components → keepBestInGroups`
     * (x137's showcase shape, which stays declared verbatim), computed
-    * in LINEAR candidate space (round-18, opt guide §1.2 "the
-    * distributed algorithm" / §2.3 "aggregate before you shuffle"):
-    *
-    *  1. docs collapse to their full-hash EQUALITY CLASSES in one
-    *     map-side-combining groupBy carrying each class's size, min id
-    *     (= the component label a class clique would produce) and
-    *     per-class winner partial (`min(struct(nullflag, -q, id))` —
-    *     associative, so per-class partials combine exactly);
-    *  2. `maxHamming == 0`: classes ARE the groups (hash equality is
-    *     transitive) — no pair generation, no components, no driver
-    *     traffic: Σk rows instead of Σk² clique pairs per class;
-    *  3. `maxHamming > 0`: only ONE REPRESENTATIVE per distinct hash
-    *     (the class min id) enters the chunk-pigeonhole pair search +
-    *     [[components]] — hamming is a function of the hash VALUES, so
-    *     the doc-level component partition equals (class cliques ∪
-    *     representative pairs)'s, and the rep labels (min rep id = min
-    *     doc id of the merged component) match the composed labels;
-    *     merged groups fold the per-class partials (sum of sizes, min
-    *     of winner structs).
-    *
+    * in LINEAR candidate space by [[curateKernel]] with no survivors.
     * Null-hash docs never pair (the hashNearDup contract) and pass
     * through with n_copies = 1, exactly as the composed pipeline's
-    * ungrouped fall-through. Differential spec:
-    * CurateOneShotSpec (vs the composed pipeline, over random
-    * clustered geometries with cross-class near-collisions, null
-    * hashes, null/tied qualities).
+    * ungrouped fall-through. Differential spec: CurateOneShotSpec
+    * (vs the composed pipeline, over random clustered geometries with
+    * cross-class near-collisions, null hashes, null/tied qualities).
     *
     * @return (idCol, hashCol, qualityCol, n_copies) — the surviving
     *         member per group with the group's size; feeds
     *         [[curateIncrement]] directly as its survivor set
     */
   def curateOneShot(docs: DataFrame, idCol: String, hashCol: String,
-      qualityCol: String, maxHamming: Int = 3): DataFrame = {
-    val base = docs.select(col(idCol), col(hashCol), col(qualityCol))
+      qualityCol: String, maxHamming: Int = 3): DataFrame =
+    curateKernel(None, docs, idCol, hashCol, qualityCol, maxHamming,
+      maxBucket = None)._1
+
+  /** The one curation kernel behind [[curateOneShot]],
+    * [[curateIncrement]] and [[curateIncrementCapped]]. Input is
+    * survivors (weight `__wt` = their n_copies) ∪ batch (weight 1);
+    * round-18 optimization (opt guide §1.2 "the distributed
+    * algorithm" / §2.3 "aggregate before you shuffle"):
+    *
+    *  1. all input collapses to its full-hash EQUALITY CLASSES in one
+    *     map-side-combining groupBy carrying each class's weight Σk,
+    *     min id (= the component label a class clique would produce),
+    *     whether it holds a batch doc, and its winner partial
+    *     (`min(struct(nullflag, -q, id))` — associative, so per-class
+    *     partials combine exactly);
+    *  2. `maxHamming == 0`: classes ARE the groups (hash equality is
+    *     transitive) — no pair search, no components, no cut, no
+    *     driver traffic: Σk rows instead of Σk² clique pairs;
+    *  3. `maxHamming > 0`: only ONE REPRESENTATIVE per distinct hash
+    *     (the class min id) enters the chunk-pigeonhole search — the
+    *     self screen over batch-holding classes, plus (when there are
+    *     survivors) the bipartite screen from those to survivor-only
+    *     classes — then [[components]]. Hamming is a function of the
+    *     hash VALUES, so the doc-level partition equals (class cliques
+    *     ∪ representative pairs)'s; merged groups fold the per-class
+    *     partials (sum of weights, min of winner structs).
+    *
+    * Null-hash rows never pair: they are singleton classes keyed by
+    * their own id and pass through with their own weight.
+    */
+  private def curateKernel(survivors: Option[DataFrame], batch: DataFrame,
+      idCol: String, hashCol: String, qualityCol: String, maxHamming: Int,
+      maxBucket: Option[Int]): (DataFrame, DataFrame) = {
+    val bat = batch.select(col(idCol), col(hashCol), col(qualityCol),
+      lit(1L).as("__wt"), lit(true).as("__bat"))
+    val input = survivors.fold(bat)(
+      _.withColumn("__bat", lit(false)).unionByName(bat))
     val nnFlag = when(col(qualityCol).isNull, lit(1)).otherwise(lit(0))
-    // Null-hash rows never pair and pass through individually — they
-    // are folded into THE SAME aggregate as singleton groups keyed by
-    // their own id (a separate `base.filter(hash isNull)` branch would
-    // be a SECOND full pass over the upstream pipeline — for the media
-    // callers, a second decode wave; one grouping key does both).
+    // Null-hash rows are folded into THE SAME aggregate as singleton
+    // groups keyed by their own id (a separate `hash isNull` branch
+    // would be a SECOND full pass over the upstream pipeline — for the
+    // media callers, a second decode wave; one grouping key does both).
     // Winner struct: (null-flag, -quality, id) is the keepBest election
     // ordering and is UNIQUE per doc (id is), so the trailing payload
     // fields (the winner's hash and quality) never influence the min.
-    val classes = base
+    val classes = input
       .groupBy(col(hashCol).as("__ph"),
         when(col(hashCol).isNull, col(idCol)).as("__nullKey"))
       .agg(min(col(idCol)).as("__rep"),
-        count(lit(1)).as("__k"),
+        sum(col("__wt")).as("__k"),
+        max(col("__bat")).as("__hasBat"),
         min(struct(nnFlag.as("nn"), (-col(qualityCol)).as("nq"),
           col(idCol).as("wid"), col(hashCol).as("wph"),
           col(qualityCol).as("wq"))).as("__w"))
-    val merged =
-      if (maxHamming == 0)
+    val (merged, overflow) =
+      if (maxHamming == 0) {
         // hash equality is transitive: classes ARE the groups — one
         // lazy DAG, no pair generation, no components, no extra jobs
-        classes.select(col("__k").as("n_copies"), col("__w"))
-      else {
-        // classes feeds two consumers (the rep pair search and the
-        // merge join) and its upstream is typically an expensive
-        // decode pipeline — cut it ONCE (distinct-hash cardinality,
-        // ~40 B/row), then both consumers read the checkpoint
+        val spark = batch.sparkSession
+        import spark.implicits._
+        (classes.select(col("__k").as("n_copies"), col("__w")),
+          Seq.empty[(String, Int, Long, Long)]
+            .toDF("side", "chunk", "cval", "n_ids"))
+      } else {
+        // classes feeds the pair search and the merge join, and its
+        // upstream is typically an expensive decode pipeline (or a
+        // survivor snapshot plus a fingerprinted batch) — cut it ONCE
+        // (distinct-hash cardinality, ~40 B/row), then every consumer
+        // reads the checkpoint
         val classesM = classes.localCheckpoint(true)
         val reps = classesM.filter(col("__ph").isNotNull)
-          .select(col("__rep").as("__rid"), col("__ph"))
-        val (repPairs, _) = Multimodal.hashNearDupCapped(reps, "__rid",
-          "__ph", maxHamming, maxBucket = None, inputMaterialized = true)
-        val repLabels = components(repPairs, aCol = "id_a", bCol = "id_b")
+          .select(col("__rep").as("__rid"), col("__ph"), col("__hasBat"))
+        val batReps = reps.filter(col("__hasBat"))
+        val (selfPairs, hotSelf) = Multimodal.hashNearDupCapped(batReps,
+          "__rid", "__ph", maxHamming, maxBucket, inputMaterialized = true)
+        val selfOvf = hotSelf.select(lit("self").as("side"), col("chunk"),
+          col("cval"), col("n_ids"))
+        // no survivors (the one-shot): no bipartite screen, so the plan
+        // is the self screen's alone
+        val (pairs, ovf) = survivors.fold((selfPairs, selfOvf)) { _ =>
+          val (crossPairs, hotCross) = Multimodal.hashNearDupAgainstCapped(
+            batReps, reps.filter(!col("__hasBat")), "__rid", "__ph",
+            maxHamming, maxBucket, inputMaterialized = true)
+          (selfPairs.select(col("id_a"), col("id_b"))
+              .unionByName(crossPairs.select(col("id_a"), col("id_b"))),
+            selfOvf.unionByName(hotCross.select(lit("cross").as("side"),
+              col("chunk"), col("cval"), col("n_ids"))))
+        }
+        val repLabels = components(pairs, aCol = "id_a", bCol = "id_b")
           .withColumnRenamed("doc_id", "__rep")
-        classesM.join(repLabels, Seq("__rep"), "left")
+        (classesM.join(repLabels, Seq("__rep"), "left")
           .groupBy(coalesce(col("group_id"), col("__rep")).as("__g"))
-          .agg(sum(col("__k")).as("n_copies"), min(col("__w")).as("__w"))
+          .agg(sum(col("__k")).as("n_copies"), min(col("__w")).as("__w")),
+          ovf)
       }
-    merged.select(col("__w.wid").as(idCol), col("__w.wph").as(hashCol),
-      col("__w.wq").as(qualityCol), col("n_copies"))
+    (merged.select(col("__w.wid").as(idCol), col("__w.wph").as(hashCol),
+      col("__w.wq").as(qualityCol), col("n_copies")), overflow)
   }
 
   /** Corpus-level first-occurrence span dedup (the C4-style "remove

@@ -121,6 +121,7 @@ object Retrieval {
       querySets: Seq[(Long, Seq[String])], k: Int, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
+    require(k1 >= 0 && b >= 0 && b <= 1, s"invalid BM25 params k1=$k1 b=$b")
     require(querySets.nonEmpty, "at least one query set required")
     require(querySets.map(_._1).distinct.size == querySets.size,
       s"duplicate query ids in ${querySets.map(_._1)}")

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, EvalMode, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Custom Catalyst expressions for the sketch hot paths.
@@ -706,8 +707,15 @@ object Expressions {
     *  - a NULL INPUT yields a NON-null struct of (null, null) — the
     *    struct() constructor never nulls out, so the expression is
     *    non-nullable with custom null handling, like
-    *    [[HyperplaneRankedExpr]]. */
-  case class QuantizeInt8Expr(child: Expression) extends UnaryExpression {
+    *    [[HyperplaneRankedExpr]].
+    *
+    * `evalMode` is the session's ANSI mode captured once when the
+    * expression is built, like Spark's `Cast`: evaluation never reads
+    * the executor-side SQLConf, which can differ from the session
+    * that planned the query. */
+  case class QuantizeInt8Expr(child: Expression,
+      evalMode: EvalMode.Value = EvalMode.fromSQLConf(SQLConf.get))
+      extends UnaryExpression {
     override def dataType: DataType = StructType(Seq(
       StructField("q", ArrayType(IntegerType, containsNull = true)),
       StructField("scale", DoubleType, nullable = true)))
@@ -723,7 +731,7 @@ object Expressions {
       * quantized values can never overflow (|x| ≤ scale ⇒ |q| ≤ 127). */
     private def sparkRoundToInt(v: Double): Int = {
       if (v.isNaN || v.isInfinite) {
-        if (org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
+        if (evalMode == EvalMode.ANSI)
           throw new ArithmeticException(
             s"[CAST_OVERFLOW] The value $v of the type \"DOUBLE\" cannot " +
               "be cast to \"INT\" due to an overflow.")

@@ -26,6 +26,18 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** Node ids keep the caller's type, so src and dst must share it: a
+    * string/bigint mix would otherwise meet through implicit
+    * union/join coercion (compared as doubles, lossy above 2^53). */
+  private def requireUniformIds(edges: DataFrame, srcCol: String,
+      dstCol: String): Unit = {
+    val Seq(st, dt) = edges.select(col(srcCol), col(dstCol)).schema
+      .map(_.dataType)
+    require(st == dt, s"edge endpoint types differ: $srcCol is " +
+      s"${st.simpleString}, $dstCol is ${dt.simpleString} — cast both " +
+      "to one node id type")
+  }
+
   /** PageRank over `edges` (srcCol → dstCol, duplicates allowed — they
     * are distinct'd). Nodes = src ∪ dst. Uniform initial rank 1/N;
     * per iteration
@@ -51,6 +63,7 @@ object Graph {
       materializeEvery: Int = 1): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
+    requireUniformIds(edges, srcCol, dstCol)
     // NULL endpoints drop: an edge with a null src/dst can't join
     // anything, but the null NODE it would mint still entered N and
     // absorbed (1-d)/N + dangling mass every iteration — a phantom
@@ -193,6 +206,7 @@ object Graph {
       damping: Double = 0.85, materializeEvery: Int = 1): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
+    requireUniformIds(edges, srcCol, dstCol)
     // one edge shuffle for dedup + degrees + eDeg — [[pageRank]]'s
     // round-17 batch-6 shape (shared __src exchange)
     // node ids keep the caller's type — see [[pageRank]] (round-18)

@@ -123,29 +123,46 @@ class CurateIncrementSpec extends SparkSpec {
   }
 
   test("capped increment: hot batch hash drops-and-reports, election still runs") {
-    // 6 identical batch docs under cap 2: every chunk bucket of that
-    // hash holds 6 > 2 on the self side and 6+1 on the cross side —
-    // all skipped and reported, so the hot docs stay ungrouped
-    // (under-merge only; pairs never invented), while a distinct cold
-    // batch pair still merges with its survivor normally.
+    // The cap counts distinct-hash class representatives, not docs:
+    // 6 identical batch docs are one class and merge with survivor 1
+    // under any cap. The hot bucket is built from 3 > cap DISTINCT
+    // hashes sharing chunk 0's 16-bit value 0xBEEF: it is skipped on
+    // both screens and reported once per side, so the hamming-3 pair
+    // (b1, b2) — equal ONLY at chunk 0 — is missed (under-merge only;
+    // pairs never invented), while a cold batch doc still merges with
+    // its survivor normally.
     val cold = 0x0F0F_F0F0_5A5AL
+    val b1 = 0x1234_5678_9ABC_BEEFL
+    val b2 = b1 ^ (1L << 20) ^ (1L << 36) ^ (1L << 52)
+    val b3 = 0x7777_8888_9999_BEEFL
     val surv = Seq((1L, h1, 5L, 2L), (2L, cold, 9L, 3L))
       .toDF("doc_id", "ph", "quality", "n_copies")
     val hotDocs = (10L to 15L).map(i => (i, h1, i % 4))
-    val batch = (hotDocs :+ ((20L, cold, 4L))).toDF("doc_id", "ph", "quality")
+    val batch = (hotDocs ++ Seq((20L, cold, 4L), (30L, b1, 1L),
+      (31L, b2, 2L), (32L, b3, 3L))).toDF("doc_id", "ph", "quality")
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.select(col("doc_id"), col("n_copies"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val (out, overflow) = Dedup.curateIncrementCapped(surv, batch,
       "doc_id", "ph", "quality", maxBucket = Some(2))
-    val rows = out.select(col("doc_id"), col("n_copies"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    // cold group: survivor 2 (quality 9) absorbs doc 20 -> weight 4
-    assert(rows(2L) === 4L)
-    // hot docs and survivor 1 all pass through ungrouped
-    assert(rows(1L) === 2L)
-    for (i <- 10L to 15L) assert(rows(i) === 1L, s"doc $i")
-    val sides = overflow.select("side").as[String].collect()
-    assert(sides.count(_ == "self") === 4 && sides.count(_ == "cross") === 4,
-      s"all four chunk buckets of the hot hash reported per side: " +
-        sides.mkString(","))
+    // survivor 1 (quality 5) absorbs the 6 copies; survivor 2
+    // (quality 9) absorbs doc 20; the hot-bucket docs stay apart
+    assert(rowsOf(out) ===
+      Map(1L -> 8L, 2L -> 4L, 30L -> 1L, 31L -> 1L, 32L -> 1L))
+    val hot = overflow.select(col("side"), col("chunk"), col("cval"),
+      col("n_ids")).as[(String, Int, Long, Long)].collect().toSet
+    assert(hot === Set(("self", 0, 0xBEEFL, 3L), ("cross", 0, 0xBEEFL, 3L)))
+    // uncapped, the missed pair merges (31 outscores 30)
+    assert(rowsOf(Dedup.curateIncrement(surv, batch, "doc_id", "ph",
+        "quality")) ===
+      Map(1L -> 8L, 2L -> 4L, 31L -> 2L, 32L -> 1L))
+    // maxHamming = 0: no pair search, so the cap is unused and
+    // nothing overflows
+    val (out0, overflow0) = Dedup.curateIncrementCapped(surv, batch,
+      "doc_id", "ph", "quality", maxHamming = 0, maxBucket = Some(2))
+    assert(rowsOf(out0) ===
+      Map(1L -> 8L, 2L -> 4L, 30L -> 1L, 31L -> 1L, 32L -> 1L))
+    assert(overflow0.isEmpty)
   }
 
   test("chained updates accumulate across rounds (output feeds back in)") {

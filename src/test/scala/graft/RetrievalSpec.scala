@@ -111,6 +111,12 @@ class RetrievalSpec extends SparkSpec {
       Retrieval.bm25(corpus, "doc_id", "text", Seq("a", "A")) }
     intercept[IllegalArgumentException] {
       Retrieval.bm25(corpus, "doc_id", "text", Seq("a"), b = 1.5) }
+    intercept[IllegalArgumentException] {
+      Retrieval.bm25TopKMulti(corpus, "doc_id", "text",
+        Seq(0L -> Seq("a")), k = 2, b = 1.5) }
+    intercept[IllegalArgumentException] {
+      Retrieval.bm25TopKMulti(corpus, "doc_id", "text",
+        Seq(0L -> Seq("a")), k = 2, k1 = -1.0) }
   }
 
   test("rrf fusion matches the hand computation, ranks and ties included") {

@@ -99,6 +99,27 @@ class VectorExprEquivSpec extends SparkSpec {
     }
   }
 
+  test("quantizeInt8 NaN/Infinity: the ANSI mode is fixed when the expression is built") {
+    val key = "spark.sql.ansi.enabled"
+    val prior = spark.conf.get(key)
+    val df = Seq((0L, Array(Float.NaN, 1.0f)),
+      (1L, Array(Float.PositiveInfinity, 1.0f))).toDF("id", "v")
+    try {
+      // built in a legacy session, run in an ANSI one: clamps (NaN → 0)
+      spark.conf.set(key, "false")
+      val legacy = V.quantizeInt8(col("v")).getField("q")
+      spark.conf.set(key, "true")
+      assert(df.select(legacy).as[Seq[Int]].collect().toSeq ===
+        Seq(Seq(0, 0), Seq(0, 0)))
+      // built in an ANSI session, run in a legacy one: still throws
+      val ansi = V.quantizeInt8(col("v"))
+      spark.conf.set(key, "false")
+      val e = intercept[Exception] { df.select(ansi).collect() }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("CAST_OVERFLOW")), e.getMessage)
+    } finally spark.conf.set(key, prior)
+  }
+
   test("quantizeInt8: null elements — zero branch maps them to 0, " +
       "otherwise branch keeps them null") {
     val df = Seq(

@@ -72,6 +72,17 @@ class GraphSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Graph.pageRank(e, "s", "t", 1, damping = 1.0) }
   }
 
+  test("mixed src/dst id types fail loudly instead of coercing") {
+    // string vs bigint would meet as doubles in the node union/joins
+    val mixed = Seq(("9007199254740993", 9007199254740993L)).toDF("s", "t")
+    val e1 = intercept[IllegalArgumentException] {
+      Graph.pageRank(mixed, "s", "t", 1) }
+    assert(e1.getMessage.contains("edge endpoint types differ"))
+    intercept[IllegalArgumentException] {
+      Graph.personalizedPageRank(mixed, "s", "t", Seq("a").toDF("n"), "n", 1)
+    }
+  }
+
   private def refPpr(edges: Seq[(String, String)], seeds: Set[String],
       iters: Int, d: Double = 0.85): Map[String, Double] = {
     val e = edges.distinct
