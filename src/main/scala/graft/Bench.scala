@@ -607,13 +607,19 @@ object Bench {
         s""""n_queries":${results.size}""" +
         (if (errors.nonEmpty) s""","n_errors":${errors.size}""" else "") +
         s""","queries":${entries.take(n).mkString("{", ",", "}")},""" +
-        s""""queries_truncated":${results.size - n},"sf":"$sfDir"}"""
+        s""""queries_truncated":${results.size - n},"sf":"${jstr(sfDir)}"}"""
     var n = entries.length
     var line = render(n)
     while (n > 0 && line.length > FinalLineBudget) {
       n -= 1
       line = render(n)
     }
+    // even with no entries the line overflows (a very long sf path):
+    // the driver would parse a truncated tail, so refuse to emit it
+    if (line.length > FinalLineBudget)
+      throw new IllegalStateException(
+        s"final line is ${line.length} bytes with no query entries, over " +
+          s"the $FinalLineBudget-byte budget (sf path of ${sfDir.length} chars)")
     line
   }
 
@@ -666,7 +672,7 @@ object Bench {
       s""""median_ratio_vs_baseline":${secStr(med)},""" +
       s""""worst_ratios":$qs$contStr$reqStr,""" +
       s""""cal":[${calShort(calBefore)},${calShort(calAfter)}],""" +
-      s""""queries_full":"bench_diag.json","sf":"$sfDir"}"""
+      s""""queries_full":"bench_diag.json","sf":"${jstr(sfDir)}"}"""
   }
 
   // ---- JSON formatting (shared by main and the line-budget spec) -------
@@ -761,6 +767,6 @@ object Bench {
           s""","more_contended":${contended.size - 8}""" else ""
         s""","contended":$body$more"""
       }
-    s"""{"metric":"total","value":${secStr(total)},"unit":"sec","queries":$qs$errStr$contStr,"cal":[${calShort(calBefore)},${calShort(calAfter)}],"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${secStr(total)},"unit":"sec","queries":$qs$errStr$contStr,"cal":[${calShort(calBefore)},${calShort(calAfter)}],"sf":"${jstr(sfDir)}"}"""
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 /** Dialect-aware bulk upsert/delete SQL generation — the engine's version
   * of the reference's MassUpdater (`lib/deimos/active_record_consume/
@@ -8,10 +9,13 @@ import org.apache.spark.sql.{DataFrame, Row}
   * `ON CONFLICT DO UPDATE`, plain INSERT when keyless) and bulk delete
   * (`batch_consumption.rb:92-98,241-247`).
   *
-  * In Spark this runs inside `foreachBatch`: each executor-side partition
-  * opens one connection and issues batched statements, so merge
-  * throughput scales with partitions rather than a single writer. The SQL
-  * builders are pure functions (unit-testable without a database).
+  * In Spark the merge runs inside `foreachBatch` as ONE action per call
+  * ([[mergeIntoJdbc]]): each executor-side partition opens one
+  * connection and applies its rows in transactions of `maxBatchSize`
+  * rows, so merge throughput scales with partitions rather than a
+  * single writer, and a crash leaves whole groups, never half of one.
+  * The SQL builders are pure functions (unit-testable without a
+  * database).
   */
 object JdbcMerger {
 
@@ -25,8 +29,8 @@ object JdbcMerger {
   case object Sqlite extends Dialect
   /** ANSI/DB2-family engines (Derby, DB2): upsert is the SQL-standard
     * single-row `MERGE INTO … USING SYSIBM.SYSDUMMY1` (no multi-row
-    * VALUES source, no `INSERT … ON CONFLICT`), and compound-key
-    * delete is OR-of-ANDs (no row-constructor IN). This is the one
+    * VALUES source, no `INSERT … ON CONFLICT`), and the merge paths
+    * delete one key per statement (see [[deleteSql]]). This is the one
     * dialect the sandbox can execute against a REAL database — the
     * embedded Derby on Spark's own classpath — so it live-validates
     * the shared merge machinery (`JdbcMergerDerbySpec`) that the
@@ -143,8 +147,17 @@ object JdbcMerger {
     * constructor IN list, as the reference builds `WHERE (k1,k2) IN …`
     * (`batch_consumption.rb:241-247`); the Ansi dialect (Derby rejects
     * row constructors in IN) uses the equivalent OR-of-ANDs with the
-    * same parameter order. */
-  /** @param versionCol when set, each delete is version-guarded like
+    * same parameter order.
+    *
+    * Ansi keyed deletes are single-row on every merge path
+    * ([[mergeIntoJdbc]], [[applyOrderedRows]]): they prepare this
+    * statement once with `nRows = 1` and reuse it per tombstone, so
+    * Derby finds each row through the primary-key index. A multi-row
+    * OR-list makes Derby scan the whole table, and with `versionCol` it
+    * is rejected at prepare above ~440 keys ("statement too complex",
+    * 42ZA0). MySQL, Postgres and SQLite keep the multi-row statements.
+    *
+    * @param versionCol when set, each delete is version-guarded like
     *   the upserts: a row is removed only when its stored version is
     *   STRICTLY OLDER than the tombstone's (`stored < ?`) — without
     *   this, a replayed/stale tombstone would delete a newer live row
@@ -224,7 +237,12 @@ object JdbcMerger {
     * sees same-key versions in exactly the batch order — BatchSlicer
     * semantics without one Spark job per wave.
     *
-    * Single-row statements are prepared once per partition and reused.
+    * Single-row statements are prepared once per partition and reused;
+    * rows are read by name, so they must carry their schema (a
+    * Dataset's rows do). Consecutive rows commit in transactions of [[OrderedGroupRows]]
+    * (the [[mergeIntoJdbc]] discipline): a deadlock rolls the group
+    * back and replays it whole, any other failure rolls it back and
+    * propagates, leaving earlier groups committed.
     */
   def applyOrderedRows(rows: Iterator[Row], url: String, table: String,
       cols: Seq[String], keyCols: Seq[String], isTombstone: Row => Boolean,
@@ -232,128 +250,161 @@ object JdbcMerger {
       versionCol: Option[String] = None,
       retrySleeper: Long => Unit = Thread.sleep): Unit = {
     if (rows.isEmpty) return
+    val buffered = rows.buffered
+    val schema = buffered.head.schema
+    val upIdx = upsertParamOrder(cols, keyCols, dialect, versionCol)
+      .map(schema.fieldIndex)
+    // version-guarded tombstone: same stale-replay protection as the
+    // upsert guard
+    val delIdx = (keyCols ++ versionCol).map(schema.fieldIndex)
     val conn = java.sql.DriverManager.getConnection(url, props)
     try {
       val upSt = conn.prepareStatement(
         upsertSql(table, cols, keyCols, 1, dialect, versionCol))
       val delSt = conn.prepareStatement(
         deleteSql(table, keyCols, 1, dialect, versionCol))
-      val paramOrder = upsertParamOrder(cols, keyCols, dialect, versionCol)
-      try rows.foreach { r =>
-        withDeadlockRetry(sleeper = retrySleeper) {
-          if (isTombstone(r)) {
-            keyCols.zipWithIndex.foreach { case (k, i) =>
-              delSt.setObject(i + 1, r.getAs[Any](k))
-            }
-            // version-guarded tombstone: same stale-replay protection
-            // as the upsert guard
-            versionCol.foreach(v =>
-              delSt.setObject(keyCols.size + 1, r.getAs[Any](v)))
-            delSt.executeUpdate()
-          } else {
-            paramOrder.zipWithIndex.foreach { case (c, i) =>
-              upSt.setObject(i + 1, r.getAs[Any](c))
-            }
-            upSt.executeUpdate()
-          }
-        }
-      } finally { upSt.close(); delSt.close() }
+      try commitPerGroup(conn, buffered, OrderedGroupRows, retrySleeper)(
+        applyRowAtATime(_, isTombstone, upSt, upIdx, delSt, delIdx))
+      finally { upSt.close(); delSt.close() }
     } finally conn.close()
   }
 
+  /** Rows per transaction on the ordered path — the default
+    * `maxBatchSize` of [[mergeIntoJdbc]] (reference
+    * `max_db_batch_size`). */
+  private val OrderedGroupRows = 1000
+
+  /** One transaction per `groupSize` consecutive rows on `conn` — the
+    * reference's per-chunk transaction with deadlock retry
+    * (`batch_consumption.rb:143-164`, `deadlock_retry.rb:11-43`).
+    * Autocommit goes off; each group runs `applyGroup` then commits. On
+    * a deadlock the group rolls back and is replayed whole (the groups
+    * are materialized, so a replay re-binds the same rows); any other
+    * failure rolls the group back and propagates. Either way a group
+    * lands all or nothing, and the connection is left with no open
+    * transaction, so the caller's `close` cannot fail over one. */
+  private def commitPerGroup(conn: java.sql.Connection, rows: Iterator[Row],
+      groupSize: Int, retrySleeper: Long => Unit)(
+      applyGroup: Seq[Row] => Unit): Unit = {
+    conn.setAutoCommit(false)
+    rows.grouped(groupSize).foreach { group =>
+      withDeadlockRetry(sleeper = retrySleeper) {
+        try { applyGroup(group); conn.commit() }
+        catch {
+          case e: Throwable =>
+            try conn.rollback() catch { case _: java.sql.SQLException => () }
+            throw e
+        }
+      }
+    }
+  }
+
+  /** One statement per row of `group`, in order, on prepared single-row
+    * statements: the keyed delete where `isDelete` holds, else the
+    * upsert. */
+  private def applyRowAtATime(group: Seq[Row], isDelete: Row => Boolean,
+      upSt: java.sql.PreparedStatement, upIdx: Seq[Int],
+      delSt: java.sql.PreparedStatement, delIdx: Seq[Int]): Unit =
+    group.foreach { r =>
+      val (st, idx) = if (isDelete(r)) (delSt, delIdx) else (upSt, upIdx)
+      bindRows(st, Seq(r), idx)
+      st.executeUpdate()
+    }
+
+  /** Bind `rows` into `st`'s `?` positions, row after row, reading each
+    * row's fields at `idx`. */
+  private def bindRows(st: java.sql.PreparedStatement, rows: Seq[Row],
+      idx: Seq[Int]): Unit = {
+    var i = 1
+    rows.foreach(r => idx.foreach { c => st.setObject(i, r.get(c)); i += 1 })
+  }
+
   /** Execute a keyed merge of `batch` into a JDBC table inside
-    * `foreachBatch`: tombstone split → per-partition batched upsert +
-    * delete with deadlock retry. Sub-batches capped at `maxBatchSize`
-    * rows per statement (reference `max_db_batch_size`,
-    * `batch_consumption.rb:148-163`).
+    * `foreachBatch`: upserts and deletes (rows where `tombstone` holds)
+    * applied in ONE Spark action, a `foreachPartition` over the batch
+    * with the tombstone flag computed once as an extra column. The
+    * caller's plan — its compaction exchange included — therefore runs
+    * once per call.
+    *
+    * Each non-empty partition opens one connection and walks its rows
+    * in groups of `maxBatchSize` (reference `max_db_batch_size`,
+    * `batch_consumption.rb:148-163`). A group's upserts and deletes are
+    * ONE transaction, committed at the end of the group and replayed
+    * whole after a rollback on deadlock (reference
+    * `deadlock_retry.rb:11-43`). The VALUES dialects send a group as
+    * one multi-row upsert then one multi-row delete; the Ansi dialect
+    * runs a single-row `MERGE` or keyed `DELETE` per row, both prepared
+    * once per partition (see [[deleteSql]]).
+    *
+    * Crash and replay: a failure inside a group rolls that group back
+    * and fails the task, so the store holds every group committed
+    * before it and none of the failed group's rows. Groups of one
+    * partition commit in order; partitions are independent. Replaying
+    * the batch converges to a single clean application because the
+    * upserts are key-idempotent and, with `versionCol`, both guards
+    * make re-applying an applied version a no-op.
     *
     * PRECONDITION — at most one action per key per batch: compact
     * first ([[Compaction.lastWins]] — `Streams.mergeSink` does). With
     * duplicate keys in one statement the dialects diverge (Postgres
     * errors with "cannot affect row a second time", MySQL applies in
-    * VALUES order), and because all upserts run before all deletes, a
-    * delete-then-reinsert sequence for one key would end wrongly
-    * deleted. Uncompacted hot-key topics belong on
-    * [[applyOrderedRows]], which applies per row in order. */
+    * VALUES order), and because a group's upserts run before its
+    * deletes, a delete-then-reinsert sequence for one key would end
+    * wrongly deleted. Uncompacted hot-key topics belong on
+    * [[applyOrderedRows]], which applies per row in order.
+    *
+    * A keyless merge has no way to address rows to delete: a tombstone
+    * row fails its group loudly (groups before it stay committed). */
   def mergeIntoJdbc(batch: DataFrame, url: String, table: String,
-      keyCols: Seq[String], tombstone: org.apache.spark.sql.Column,
+      keyCols: Seq[String], tombstone: Column,
       dialect: Dialect, props: java.util.Properties,
       maxBatchSize: Int = 1000, versionCol: Option[String] = None,
       retrySleeper: Long => Unit = Thread.sleep): Unit = {
-    val (upserts, deletes) = Materialize.splitTombstones(batch, tombstone)
-    val cols = upserts.columns.toSeq
-    // the Ansi MERGE has no multi-row source: one row per statement,
-    // prepared once per partition and reused
-    val effBatch =
-      if (dialect == Ansi && keyCols.nonEmpty) 1 else maxBatchSize
-    val paramOrder = upsertParamOrder(cols, keyCols, dialect, versionCol)
+    require(maxBatchSize >= 1, s"maxBatchSize must be >= 1, got $maxBatchSize")
+    val cols = batch.columns.toSeq
     val colIdx = cols.zipWithIndex.toMap
-    val paramIdx = paramOrder.map(colIdx)
-    upserts.foreachPartition { (rows: Iterator[Row]) =>
+    val upIdx = upsertParamOrder(cols, keyCols, dialect, versionCol).map(colIdx)
+    val delIdx = (keyCols ++ versionCol).map(colIdx)
+    // appended after every batch column, so it is read by position and
+    // cannot collide with a batch column's name
+    val flag = cols.size
+    val flagged = batch.select(col("*"), coalesce(tombstone, lit(false)))
+    // the Ansi MERGE has no multi-row source, and a multi-row Ansi
+    // delete is an OR-list Derby scans the table for: both run one row
+    // per statement, on statements prepared once per partition
+    val rowAtATime = dialect == Ansi && keyCols.nonEmpty
+    flagged.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.hasNext) {
-      val conn = java.sql.DriverManager.getConnection(url, props)
-      try {
-        if (effBatch == 1) {
-          // row-at-a-time (Ansi MERGE): the statement text never
-          // changes, so prepare ONCE per partition and reuse — a
-          // per-row prepare would pay a statement-compile round trip
-          // on the hot merge path
-          val st = conn.prepareStatement(
-            upsertSql(table, cols, keyCols, 1, dialect, versionCol))
-          try rows.foreach { r =>
-            withDeadlockRetry(sleeper = retrySleeper) {
-              var i = 1
-              paramIdx.foreach { c => st.setObject(i, r.get(c)); i += 1 }
-              st.executeUpdate()
+        val conn = java.sql.DriverManager.getConnection(url, props)
+        try {
+          val upSt = if (rowAtATime) conn.prepareStatement(
+            upsertSql(table, cols, keyCols, 1, dialect, versionCol)) else null
+          val delSt = if (rowAtATime) conn.prepareStatement(
+            deleteSql(table, keyCols, 1, dialect, versionCol)) else null
+          try commitPerGroup(conn, rows, maxBatchSize, retrySleeper) { group =>
+            if (keyCols.isEmpty)
+              require(!group.exists(_.getBoolean(flag)),
+                "keyless merge cannot delete: tombstone rows present but " +
+                  "no key columns to address them")
+            if (rowAtATime)
+              applyRowAtATime(group, _.getBoolean(flag), upSt, upIdx, delSt, delIdx)
+            else {
+              val (dels, ups) = group.partition(_.getBoolean(flag))
+              def run(sql: String, rs: Seq[Row], idx: Seq[Int]): Unit = {
+                val st = conn.prepareStatement(sql)
+                try { bindRows(st, rs, idx); st.executeUpdate() }
+                finally st.close()
+              }
+              if (ups.nonEmpty) run(upsertSql(table, cols, keyCols, ups.size,
+                dialect, versionCol), ups, upIdx)
+              if (dels.nonEmpty) run(deleteSql(table, keyCols, dels.size,
+                dialect, versionCol), dels, delIdx)
             }
-          } finally st.close()
-        } else rows.grouped(effBatch).foreach { group =>
-          val sql = upsertSql(table, cols, keyCols, group.size, dialect,
-            versionCol)
-          withDeadlockRetry(sleeper = retrySleeper) {
-            // close in finally: a deadlock retry or terminal failure
-            // would otherwise leak a statement per attempt
-            val st = conn.prepareStatement(sql)
-            try {
-              var i = 1
-              group.foreach(r => paramIdx.foreach { c =>
-                st.setObject(i, r.get(c)); i += 1
-              })
-              st.executeUpdate()
-            } finally st.close()
+          } finally {
+            if (upSt != null) upSt.close()
+            if (delSt != null) delSt.close()
           }
-        }
-      } finally conn.close()
-      }
-    }
-    if (keyCols.isEmpty) {
-      // a keyless merge has no way to ADDRESS rows to delete; a
-      // tombstone reaching this path is a caller bug — fail loudly
-      // instead of emitting malformed SQL
-      require(deletes.isEmpty,
-        "keyless merge cannot delete: tombstone rows present but no " +
-          "key columns to address them")
-      return
-    }
-    val delFields = keyCols ++ versionCol.toSeq
-    val delKeys = deletes.select(
-      delFields.map(org.apache.spark.sql.functions.col): _*)
-    delKeys.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-      val conn = java.sql.DriverManager.getConnection(url, props)
-      try rows.grouped(maxBatchSize).foreach { group =>
-        val sql = deleteSql(table, keyCols, group.size, dialect, versionCol)
-        withDeadlockRetry(sleeper = retrySleeper) {
-          val st = conn.prepareStatement(sql)
-          try {
-            var i = 1
-            group.foreach(r => delFields.indices.foreach { c =>
-              st.setObject(i, r.get(c)); i += 1
-            })
-            st.executeUpdate()
-          } finally st.close()
-        }
-      } finally conn.close()
+        } finally conn.close()
       }
     }
   }

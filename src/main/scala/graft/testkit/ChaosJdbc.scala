@@ -9,8 +9,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * `jdbc:graftchaos:<name>` URL delegates every call to a REAL
   * connection on the registered target URL, but `executeUpdate`
   * throws once the armed statement budget is spent — the merge dies
-  * MID-BATCH with earlier statements durably applied, exactly the
-  * torn state an executor loss leaves in a real store. Disarm and
+  * MID-BATCH, as on an executor loss. Transaction calls pass through,
+  * so what the store keeps is what the merge committed before the
+  * crash (the merge paths roll the crashed group back). Disarm and
   * re-run the batch to assert the at-least-once + idempotent-merge
   * contract (T1): the replay must converge to the same final state a
   * clean single application produces.

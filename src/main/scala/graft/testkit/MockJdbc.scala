@@ -32,6 +32,9 @@ object MockJdbc {
     val connectionsOpened = new AtomicInteger(0)
     /** Each executeUpdate consumes one pending deadlock while > 0. */
     val deadlocksRemaining = new AtomicInteger(0)
+    /** Attempts that run before pending deadlocks start to fire, so a
+      * deadlock can hit mid-transaction. */
+    val deadlockAfter = new AtomicInteger(0)
     def execList: List[Exec] = {
       val it = execs.iterator()
       val b = List.newBuilder[Exec]
@@ -75,8 +78,8 @@ object MockJdbc {
         params.put(args(0).asInstanceOf[Integer].intValue(),
           if (args(1) == null) NullParam else args(1)); null
       case ("executeUpdate", _) =>
-        d.attempts.incrementAndGet()
-        if (d.deadlocksRemaining.getAndUpdate(n => math.max(0, n - 1)) > 0)
+        if (d.attempts.incrementAndGet() > d.deadlockAfter.get() &&
+            d.deadlocksRemaining.getAndUpdate(n => math.max(0, n - 1)) > 0)
           throw new SQLException(
             "Deadlock found when trying to get lock; try restarting transaction",
             "40001")

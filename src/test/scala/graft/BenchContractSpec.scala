@@ -223,6 +223,26 @@ class BenchContractSpec extends AnyFunSuite {
     assert(!got.contains("n_errors"))
   }
 
+  test("sf path with a quote and a backslash stays valid JSON on every line") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val mapper = new ObjectMapper()
+    val sf = "C:\\data\\\"sf0.1\""
+    val few = Seq("q1_project" -> 1.0, "x1_dedup_exact" -> 0.5)
+    val lines = Seq(
+      Bench.finalLine(1.5, few, Map.empty, sf),
+      Bench.contractLine(1.5, few, Map.empty, calPair, calPair, sf),
+      Bench.summaryLine(1.5, few, Map.empty, calPair, calPair, sf))
+    lines.foreach(l => assert(mapper.readTree(l).get("sf").asText === sf, l))
+  }
+
+  test("final line fails loudly when even zero entries overflow the budget") {
+    val e = intercept[IllegalStateException] {
+      Bench.finalLine(1.5, Seq("q1_project" -> 1.0), Map.empty,
+        "/sf/" + "x" * Bench.FinalLineBudget)
+    }
+    assert(e.getMessage.contains("no query entries"), e.getMessage)
+  }
+
   test("median: odd, even, empty") {
     assert(Bench.median(Seq(3.0, 1.0, 2.0)) === 2.0)
     assert(Bench.median(Seq(4.0, 1.0, 2.0, 3.0)) === 2.5)

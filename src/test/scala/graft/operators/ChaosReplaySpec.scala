@@ -11,13 +11,15 @@ import graft.testkit.ChaosJdbc
   * `batch_consumption.rb:143-164`), which [[JdbcMergerDerbySpec]]
   * proves for CLEAN replays. Here the merge is KILLED mid-batch by a
   * [[ChaosJdbc]] driver double that lets N statements through and
-  * fails the rest — earlier statements stay durably applied, exactly
-  * the torn state a lost executor leaves — then the SAME batch is
-  * re-run and the final table state must equal a clean single
+  * fails the rest. The merge commits one transaction per
+  * `maxBatchSize` group, so the crash leaves every group committed
+  * before it and none of the crashed group's rows. Then the SAME batch
+  * is re-run and the final table state must equal a clean single
   * application, including the strict version-guard tie semantics
   * pinned in round 15 (equal-version upsert and tombstone are both
   * no-ops on replay). Ordered cases: mid-upsert, mid-delete,
-  * mid-association save in the assoc-first fan-out.
+  * mid-group with earlier groups committed, mid-association save in
+  * the assoc-first fan-out.
   */
 class ChaosReplaySpec extends SparkSpec {
   import spark.implicits._
@@ -77,11 +79,12 @@ class ChaosReplaySpec extends SparkSpec {
     assert(e.toString.toLowerCase.contains("chaos") ||
       Option(e.getCause).exists(_.toString.toLowerCase.contains("chaos")) ||
       e.toString.contains("SparkException"), e.toString)
-    // torn state: exactly 2 statements landed
+    // 2 statements executed, but all 5 rows are one group: it rolled
+    // back, and the table still holds only the pre-seed
     assert(ChaosJdbc.applied("c1") === 2)
-    val torn = readAll(real, """SELECT COUNT(*) FROM "tgt"""").head.head
-    assert(torn.asInstanceOf[Number].intValue() < 7,
-      s"expected a partial batch, got $torn rows")
+    assert(readAll(real,
+      """SELECT "k1", "v" FROM "tgt" ORDER BY "k1"""") ===
+      Seq(Seq(1L, "old"), Seq(99L, "keep")))
     // replay the SAME batch on the now-disarmed url
     ChaosJdbc.disarm("c1")
     merge(chaos, batch)
@@ -113,15 +116,16 @@ class ChaosReplaySpec extends SparkSpec {
       // STALE tombstone: version below the live row — must never
       // delete it, crash or not
       (5L, 1, null.asInstanceOf[String], 8L, true))
-    // 1 upsert runs first; maxBatch=1 chunks deletes one per
-    // statement; budget 3 = upsert + 2 deletes, crash on the 3rd
+    // maxBatch=1 makes every row its own transaction, applied in batch
+    // order: budget 3 = upsert + 2 deletes committed, crash on the 3rd
     val chaos = ChaosJdbc.arm("c2", real, failAfter = 3)
     intercept[Exception] { merge(chaos, batch, maxBatch = 1) }
     assert(ChaosJdbc.applied("c2") === 3)
-    val tornCount = readAll(real, """SELECT COUNT(*) FROM "tgt"""")
+    // a partial delete set: 5 seeded + 1 upsert - 2 committed deletes
+    val partialCount = readAll(real, """SELECT COUNT(*) FROM "tgt"""")
       .head.head.asInstanceOf[Number].intValue()
-    assert(tornCount > 2 && tornCount < 6,
-      s"expected a torn delete set, got $tornCount rows")
+    assert(partialCount === 4,
+      s"expected two committed deletes, got $partialCount rows")
     ChaosJdbc.disarm("c2")
     merge(chaos, batch, maxBatch = 1)
     merge(chaos, batch, maxBatch = 1) // replay once more
@@ -130,6 +134,35 @@ class ChaosReplaySpec extends SparkSpec {
       .map(r => (r(0), r(1), r(2)))
     // 1..3 deleted; 4 untouched; 5 survives its stale tombstone; 6 new
     assert(rows === Seq((4L, "d", 5L), (5L, "live", 9L), (6L, "f", 10L)))
+  }
+
+  test("crash inside a group leaves none of its rows; earlier groups stay; replay converges") {
+    val real = freshDb("chaos4")
+    withConn(real)(_.createStatement().execute(ddl))
+    withConn(real)(_.createStatement().execute(
+      """INSERT INTO "tgt" VALUES (7, 1, 'doomed', 1, false),
+        (99, 9, 'keep', 7, false)"""))
+    // maxBatch=3 over one partition: groups [1, 2, 3] and [4, del 7, 5]
+    val batch = Seq(
+      (1L, 1, "a", 10L, false), (2L, 1, "b", 11L, false),
+      (3L, 1, "c", 12L, false), (4L, 1, "d", 13L, false),
+      (7L, 1, null.asInstanceOf[String], 14L, true),
+      (5L, 1, "e", 15L, false))
+    // budget 5: the first group commits, the second runs its upsert and
+    // its delete, then dies on its last row
+    val chaos = ChaosJdbc.arm("c4", real, failAfter = 5)
+    intercept[Exception] { merge(chaos, batch, maxBatch = 3) }
+    assert(ChaosJdbc.applied("c4") === 5)
+    def table() = readAll(real,
+      """SELECT "k1", "v" FROM "tgt" ORDER BY "k1"""").map(r => (r(0), r(1)))
+    // the second group rolled back whole: row 4 absent, row 7 still there
+    assert(table() === Seq((1L, "a"), (2L, "b"), (3L, "c"),
+      (7L, "doomed"), (99L, "keep")))
+    ChaosJdbc.disarm("c4")
+    merge(chaos, batch, maxBatch = 3)
+    merge(chaos, batch, maxBatch = 3)
+    assert(table() === Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"),
+      (5L, "e"), (99L, "keep")))
   }
 
   test("crash mid-association save (assoc-first): replayed fan-out backfills every fk") {
@@ -161,7 +194,8 @@ class ChaosReplaySpec extends SparkSpec {
     // pins crash+replay of the save sequence
     val assocRows = assocBatch
       .select(col("bulk_import_id").as("pk"), col("city"), col("zip"))
-    // step 1: save associations — crash after 1 of the 3 rows
+    // step 1: save associations — crash after 1 of the 3 rows; the
+    // three are one group, so none of them stays
     val chaos = ChaosJdbc.arm("c3", real, failAfter = 1)
     intercept[Exception] {
       JdbcMerger.mergeIntoJdbc(assocRows.coalesce(1), chaos, "assoc",
@@ -169,6 +203,8 @@ class ChaosReplaySpec extends SparkSpec {
         retrySleeper = _ => ())
     }
     assert(ChaosJdbc.applied("c3") === 1)
+    assert(readAll(real, """SELECT COUNT(*) FROM "assoc"""")
+      .head.head.asInstanceOf[Number].intValue() === 0)
     // replay the association save to completion
     ChaosJdbc.disarm("c3")
     JdbcMerger.mergeIntoJdbc(assocRows.coalesce(1), chaos, "assoc",
@@ -183,7 +219,8 @@ class ChaosReplaySpec extends SparkSpec {
       .withColumn("bulk_import_id", col("pk"))
     val filled = Materialize.fillForeignKeys(
       staged, savedAssocs, pkCol = "pk", fkCol = "fk", assocCol = "a")
-    // step 3: save primaries — crash after 2 of 4, then replay
+    // step 3: save primaries — crash after 2 of 4 (one group, rolled
+    // back), then replay
     val chaos2 = ChaosJdbc.arm("c3b", real, failAfter = 2)
     intercept[Exception] {
       JdbcMerger.mergeIntoJdbc(

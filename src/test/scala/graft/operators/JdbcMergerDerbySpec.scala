@@ -117,6 +117,74 @@ class JdbcMergerDerbySpec extends SparkSpec {
     assert(readAll(url, """SELECT "v" FROM "tgt"""").isEmpty)
   }
 
+  test("version-guarded delete of 1500 keys: row-at-a-time, stale tombstones spare newer rows") {
+    // A multi-row guarded Ansi delete is one OR-list statement: Derby
+    // rejects it at prepare above ~440 keys (42ZA0), so a batch this
+    // size failed whole before deletes ran one key per statement.
+    val url = freshDb("bigdel")
+    withConn(url)(_.createStatement().execute(ddl))
+    // rows 0..1599; every 7th row carries a version NEWER than the
+    // tombstone aimed at it
+    def stored(k: Long): Long = if (k % 7 == 0) 50L else 5L
+    withConn(url) { c =>
+      c.setAutoCommit(false)
+      val ins = c.prepareStatement("""INSERT INTO "tgt" VALUES (?, 1, 'seed', ?, false)""")
+      (0L until 1600L).foreach { k =>
+        ins.setLong(1, k); ins.setLong(2, stored(k)); ins.addBatch()
+      }
+      ins.executeBatch(); c.commit()
+    }
+    val tombstones = (0L until 1500L)
+      .map(k => (k, 1, null.asInstanceOf[String], 10L, true))
+      .toDF("k1", "k2", "v", "version", "deleted").coalesce(1)
+    JdbcMerger.mergeIntoJdbc(tombstones, url, "tgt", Seq("k1", "k2"),
+      col("deleted"), JdbcMerger.Ansi, new java.util.Properties,
+      versionCol = Some("version"), retrySleeper = _ => ())
+    val left = readAll(url, """SELECT "k1" FROM "tgt" ORDER BY "k1"""")
+      .map(_.head.asInstanceOf[Long])
+    val expected = (0L until 1600L).filter(k => k >= 1500L || stored(k) >= 10L)
+    assert(left === expected)
+  }
+
+  test("mixed upserts and tombstones over 4 partitions end at the last-wins reference") {
+    val url = freshDb("mixed4")
+    withConn(url)(_.createStatement().execute(ddl))
+    withConn(url) { c =>
+      c.setAutoCommit(false)
+      val ins = c.prepareStatement("""INSERT INTO "tgt" VALUES (?, ?, 'seed', 0, false)""")
+      for (k1 <- 0L until 100L; k2 <- 0 until 2) {
+        ins.setLong(1, k1); ins.setInt(2, k2); ins.addBatch()
+      }
+      ins.executeBatch(); c.commit()
+    }
+    // versions are unique offsets above the seeded 0, so the last event
+    // of each key decides: a tombstone removes it, an upsert sets it
+    val rnd = new scala.util.Random(7)
+    val events = (1L to 2000L).map { off =>
+      val k1 = rnd.nextInt(150).toLong
+      val k2 = rnd.nextInt(2)
+      val dead = rnd.nextDouble() < 0.2
+      (k1, k2, if (dead) null else s"v$off", off, dead)
+    }
+    val batch = Compaction.lastWins(
+      events.toDF("k1", "k2", "v", "version", "deleted"),
+      Seq("k1", "k2"), col("version")).repartition(4)
+    assert(batch.rdd.getNumPartitions === 4)
+    JdbcMerger.mergeIntoJdbc(batch, url, "tgt", Seq("k1", "k2"),
+      col("deleted"), JdbcMerger.Ansi, new java.util.Properties,
+      maxBatchSize = 50, versionCol = Some("version"),
+      retrySleeper = _ => ())
+    val reference = scala.collection.mutable.Map[(Long, Int), (String, Long)]()
+    for (k1 <- 0L until 100L; k2 <- 0 until 2) reference((k1, k2)) = ("seed", 0L)
+    events.foreach { case (k1, k2, v, off, dead) =>
+      if (dead) reference.remove((k1, k2)) else reference((k1, k2)) = (v, off)
+    }
+    val got = readAll(url, """SELECT "k1", "k2", "v", "version" FROM "tgt"""")
+      .map(r => ((r(0).asInstanceOf[Long], r(1).asInstanceOf[Int]),
+        (r(2).asInstanceOf[String], r(3).asInstanceOf[Long]))).toMap
+    assert(got === reference.toMap)
+  }
+
   test("applyOrderedRows drives real single-row statements in order (M3 path)") {
     val url = freshDb("live3")
     withConn(url)(_.createStatement().execute(ddl))

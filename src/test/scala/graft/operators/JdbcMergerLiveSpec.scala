@@ -50,9 +50,9 @@ class JdbcMergerLiveSpec extends SparkSpec {
     // parameter binding order: first sub-batch = rows 1 and 2, col order
     val first = ups.find(_.params.size == 10).get.params
     assert(first.take(5) === Seq(1L, 1, "a", 10L, false))
-    // one connection per partition per statement kind (1 upsert
-    // partition + 1 delete partition)
-    assert(d.connectionsOpened.get() === 2)
+    // one connection per partition: upserts and deletes share it (one
+    // action over one partition)
+    assert(d.connectionsOpened.get() === 1)
   }
 
   test("sqlite dialect drives the same live path: ON CONFLICT + guard + row-value delete") {
@@ -82,7 +82,8 @@ class JdbcMergerLiveSpec extends SparkSpec {
       retrySleeper = _ => ())
     // all statements eventually executed: 1 upsert + 1 delete batch
     assert(d.execList.size === 2)
-    // the two deadlocked attempts are visible on top of the successes
+    // the two deadlocked attempts (each the group's first statement,
+    // replayed whole) are visible on top of the successes
     assert(d.attempts.get() === 4)
     assert(d.execList.head.sql.contains("ON DUPLICATE KEY UPDATE"))
   }
@@ -132,6 +133,28 @@ class JdbcMergerLiveSpec extends SparkSpec {
       assert(execs.forall(e =>
         e.sql.startsWith("DELETE") || e.sql.contains("VALUES (?, ?, ?, ?)")))
     } finally q.stop()
+  }
+
+  test("ordered apply replays the whole transaction group after a deadlock") {
+    import org.apache.spark.sql.types._
+    val d = MockJdbc.reset("ordered2")
+    d.deadlockAfter.set(2) // rows 1 and 2 run, then row 3 deadlocks once
+    d.deadlocksRemaining.set(1)
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("v", StringType), StructField("deleted", BooleanType)))
+    val rows = Seq(1L -> "a", 2L -> "b", 3L -> "c").map { case (k, v) =>
+      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+        Array[Any](k, v, false), schema): org.apache.spark.sql.Row
+    }
+    JdbcMerger.applyOrderedRows(rows.iterator, "jdbc:graftmock:ordered2",
+      "tgt", cols = Seq("k", "v", "deleted"), keyCols = Seq("k"),
+      isTombstone = r => r.getAs[Boolean]("deleted"), JdbcMerger.Postgres,
+      new java.util.Properties, retrySleeper = _ => ())
+    // the double keeps no transactions, so the rolled-back attempt's
+    // two statements stay recorded; the replay starts at the group's
+    // first row, not at the statement that deadlocked
+    assert(d.execList.map(_.params.head) === Seq(1L, 2L, 1L, 2L, 3L))
+    assert(d.attempts.get() === 6)
   }
 
   test("deadlocks beyond the retry budget propagate as task failures") {
