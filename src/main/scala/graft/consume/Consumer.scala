@@ -1,10 +1,12 @@
 package graft.consume
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.model.{MessageCols, TopicConfig}
-import graft.operators.Materialize
+import graft.observe.Metrics
+import graft.operators.{Compaction, Materialize, Pipeline}
 import graft.schema.SchemaBackend
 import graft.streaming.Streams
 
@@ -38,9 +40,34 @@ trait ConsumerHooks extends Serializable {
   def onError(e: Throwable, batchId: Long): Unit = ()
 }
 
-/** Batch consumer pipeline: decode → hooks → compact → merge, the full
-  * §3.2 consume lifecycle as one object. The sink receives compacted
-  * (upserts, deletes) per micro-batch.
+/** Batch consumer pipeline: the §3.2 consume lifecycle of one topic as
+  * one object. Both modes — [[consumeBatch]] over one Kafka-shaped
+  * frame, [[stream]] once per micro-batch — run the SAME per-batch
+  * stages, in this order:
+  *
+  *  1. decode (`Streams.fromKafkaFrame`, lenient when a
+  *     `deadLetterSink` is set);
+  *  1. dead-letter split (only with a `deadLetterSink`): the decoded
+  *     batch is persisted for the batch's duration, non-empty poison
+  *     goes to the sink with its raw bytes, the rest proceeds;
+  *  1. `preProcess` → `processMessage` filter →
+  *     `Pipeline.partitionValid(shouldConsume)` → `postProcessBatch`
+  *     → `recordAttributes` on the valid side. The predicates see the
+  *     decoded frame, not the shaped one;
+  *  1. compaction: `Compaction.lastWinsKeyed` for compacted topics
+  *     (NULL-key rows pass through, none collapse), every surviving
+  *     version otherwise → `splitTombstones`.
+  *
+  * Stages 2–4 of every batch (and, in [[stream]], the sink call) run
+  * inside one `graft-consumer` span (resource = topic). Every batch
+  * records the same counters in both modes: `ConsumeBatch` (1),
+  * `DeadLetters` (with a `deadLetterSink`), `ValidRecords` and
+  * `InvalidRecords`. All but `ConsumeBatch` cost a Spark action, so
+  * they are counted only when a real `metrics` provider is attached.
+  *
+  * Persist scope: one batch. In [[stream]] that is the micro-batch;
+  * [[consumeBatch]] releases the cache before it returns, so its lazy
+  * (upserts, deletes) frames re-read the input when evaluated.
   */
 class BatchConsumer(
     val cfg: TopicConfig,
@@ -92,86 +119,44 @@ class BatchConsumer(
     "quarantineKeys needs both a deadLetterSink (quarantine target) and " +
       "a keyBackend (a string-cast key cannot fail decode)")
 
-  /** Batch-mode consume of a Kafka-shaped frame; returns final
-    * (upserts, deletes) after hooks + compaction. Wrapped in a tracer
-    * span named like the reference's (`consumer.rb:28-31`: span
-    * 'deimos-consumer', resource = consumer class) with errors
-    * recorded on the span before the T6 policy sees them. */
+  /** Batch-mode consume of a Kafka-shaped frame: the per-batch stages
+    * (see [[BatchConsumer]]) once, returning the final (upserts,
+    * deletes). Compacted topics return `lastWinsKeyed` survivors,
+    * uncompacted ones every surviving version. The span is named like
+    * the reference's (`consumer.rb:28-31`: span 'deimos-consumer',
+    * resource = consumer class); errors are recorded on it before they
+    * propagate. */
   def consumeBatch(kafka: DataFrame): (DataFrame, DataFrame) =
-    tracer.withSpan("graft-consumer", cfg.fullTopic) {
-      consumeBatchInner(kafka)
+    inBatch(decodeFrame(kafka)) { shaped =>
+      Materialize.splitTombstones(
+        if (cfg.compacted) Compaction.lastWinsKeyed(shaped, keyCols, col(orderCol))
+        else shaped,
+        hooks.isTombstone)
     }
 
-  /** Decode with the configured error mode (see [[quarantineKeys]]). */
-  private def decodeFrame(kafka: DataFrame): DataFrame =
-    Streams.fromKafkaFrame(kafka, backend, keyBackend,
-      lenient = deadLetterSink.isDefined, lenientKeys = quarantineKeys)
-
-  /** A row is poison when its non-null value failed decode — and, in
-    * the key-quarantine mode, when its non-null key did. */
-  private def poisonPredicate: org.apache.spark.sql.Column = {
-    val v = graft.operators.Pipeline.undecodable(
-      col(MessageCols.Value), col("payload"))
-    if (quarantineKeys)
-      v || graft.operators.Pipeline.undecodable(
-        col(MessageCols.Key), col("decoded_key"))
-    else v
-  }
-
-  private def consumeBatchInner(kafka: DataFrame): (DataFrame, DataFrame) = {
-    metrics.count(graft.observe.Metrics.ConsumeBatch, 1L)
-    val decodedAll = decodeFrame(kafka)
-    val poison = poisonPredicate
-    val decoded = deadLetterSink match {
-      case Some(dlq) =>
-        // persist the (small) poison side so count + sink read it
-        // once; the surviving side decodes in the normal pipeline
-        val dead = decodedAll.filter(poison)
-          .drop("payload", "decoded_key").persist()
-        try {
-          val n = dead.count()
-          if (metrics ne graft.observe.Metrics.noop)
-            metrics.count(graft.observe.Metrics.DeadLetters, n)
-          if (n > 0) dlq(dead) // sink consumes eagerly (contract)
-        } finally dead.unpersist(false)
-        decodedAll.filter(!poison)
-      case None => decodedAll
-    }
-    hooks.preProcess(decoded)
-    val processed = decoded.filter(hooks.processMessage)
-    val (valid, invalid) =
-      graft.operators.Pipeline.partitionValid(processed, hooks.shouldConsume)
-    // counting forces extra pipeline evaluations — only pay for it
-    // when a real metrics provider is attached
-    if (metrics ne graft.observe.Metrics.noop) {
-      metrics.count(graft.observe.Metrics.ValidRecords, valid.count())
-      metrics.count(graft.observe.Metrics.InvalidRecords, invalid.count())
-    }
-    hooks.postProcessBatch(valid, invalid)
-    val shaped = hooks.recordAttributes(valid)
-    val compacted = if (cfg.compacted)
-      graft.operators.Compaction.lastWins(shaped, keyCols, col(orderCol))
-    else shaped
-    Materialize.splitTombstones(compacted, hooks.isTombstone)
-  }
-
-  /** Streaming-mode consume via foreachBatch, with the T6 error
-    * policy: non-fatal sink errors skip the batch (offsets advance,
-    * at-least-once preserved by the next batch's key-idempotent
-    * merge); fatal errors fail the query. An error is fatal when
-    * EITHER the hook (`fatalError`, code-level) or the topic's
-    * declarative `errorPolicy` (config-level) keeps it fatal — each
-    * layer starts maximally safe (both default fatal) and may only
-    * RELAX its own default, so a batch skips only when both layers
-    * opted in. (Deliberate divergence from the reference's
+  /** Streaming-mode consume via foreachBatch: per micro-batch the
+    * per-batch stages (see [[BatchConsumer]]), then
+    * `Streams.mergeBatch` hands compacted (upserts, deletes) — or, for
+    * uncompacted topics, one pair per key-disjoint wave — to `sink`.
+    * Same hooks, counters, span and rows as [[consumeBatch]] on the
+    * same frame.
+    *
+    * T6 error policy, on `sink` errors: non-fatal ones skip the batch
+    * (offsets advance, at-least-once preserved by the next batch's
+    * key-idempotent merge); fatal ones fail the query. An error is
+    * fatal when EITHER the hook (`fatalError`, code-level) or the
+    * topic's declarative `errorPolicy` (config-level) keeps it fatal —
+    * each layer starts maximally safe (both default fatal) and may
+    * only RELAX its own default, so a batch skips only when both
+    * layers opted in. (Deliberate divergence from the reference's
     * escalate-on-either: its default hook is all-SKIP, ours is
     * all-fatal, so escalate-on-either would make the config setting
     * dead code here.) JVM-fatal throwables (OutOfMemoryError,
     * interrupts — anything outside `NonFatal`) always propagate, no
-    * matter what either layer says. */
+    * matter what either layer says. Errors raised by the hooks or the
+    * `deadLetterSink` are not the sink's and fail the query. */
   def stream(kafka: DataFrame)(
-      sink: (DataFrame, DataFrame, Long) => Unit) = {
-    val decoded = decodeFrame(kafka)
+      sink: (DataFrame, DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val guarded: (DataFrame, DataFrame, Long) => Unit = (up, del, id) =>
       try sink(up, del, id)
       catch {
@@ -180,27 +165,78 @@ class BatchConsumer(
               (!hooks.fatalError(e) || !cfg.errorPolicy.isFatal(e)) =>
           hooks.onError(e, id)
       }
-    // the DLQ split runs per micro-batch INSIDE mergeSink, before the
-    // process-message filter and tombstone classification — a poison
-    // frame's null payload must neither read as a delete nor be
-    // silently dropped by a user predicate before quarantine
-    val dlqSplit = deadLetterSink.map { dlq =>
-      (poisonPredicate,
-        (dead: DataFrame, batchId: Long) => {
-          if (metrics ne graft.observe.Metrics.noop)
-            metrics.count(graft.observe.Metrics.DeadLetters, dead.count())
-          dlq(dead.drop("payload", "decoded_key"))
-        })
+    decodeFrame(kafka).writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      inBatch(batch) { shaped =>
+        Streams.mergeBatch(shaped, batchId, keyCols, col(orderCol),
+          hooks.isTombstone, cfg.compacted)(guarded)
+      }
     }
-    // recordAttributes shapes the MAIN side only, after the DLQ
-    // split (as a `shape` hook inside mergeSink): shaping the whole
-    // stream first let a column-narrowing hook break the poison
-    // predicate and strip raw bytes off quarantined rows — and
-    // diverged from consumeBatch, which shapes only valid rows
-    Streams.mergeSink(decoded, keyCols,
-      col(orderCol), hooks.isTombstone, cfg.compacted,
-      processMessage = hooks.processMessage && hooks.shouldConsume,
-      sideSplit = dlqSplit,
-      shape = hooks.recordAttributes)(guarded)
   }
+
+  /** Decode with the configured error mode (see [[quarantineKeys]]). */
+  private def decodeFrame(kafka: DataFrame): DataFrame =
+    Streams.fromKafkaFrame(kafka, backend, keyBackend,
+      lenient = deadLetterSink.isDefined, lenientKeys = quarantineKeys)
+
+  /** A row is poison when its non-null value failed decode — and, in
+    * the key-quarantine mode, when its non-null key did. */
+  private def poisonPredicate: Column = {
+    val v = Pipeline.undecodable(col(MessageCols.Value), col("payload"))
+    if (quarantineKeys)
+      v || Pipeline.undecodable(col(MessageCols.Key), col("decoded_key"))
+    else v
+  }
+
+  /** The per-batch stages both modes share, inside the
+    * `graft-consumer` span: dead-letter split, `preProcess`,
+    * `processMessage`, `shouldConsume` with its counters,
+    * `postProcessBatch`, then `body` over the `recordAttributes`-shaped
+    * valid rows. */
+  private def inBatch[T](decoded: DataFrame)(body: DataFrame => T): T =
+    tracer.withSpan("graft-consumer", cfg.fullTopic) {
+      metrics.count(Metrics.ConsumeBatch, 1L)
+      withoutPoison(decoded) { live =>
+        hooks.preProcess(live)
+        val (valid, invalid) = Pipeline.partitionValid(
+          live.filter(hooks.processMessage), hooks.shouldConsume)
+        // counting forces extra pipeline evaluations — only pay for it
+        // when a real metrics provider is attached
+        if (metrics ne Metrics.noop) {
+          metrics.count(Metrics.ValidRecords, valid.count())
+          metrics.count(Metrics.InvalidRecords, invalid.count())
+        }
+        hooks.postProcessBatch(valid, invalid)
+        body(hooks.recordAttributes(valid))
+      }
+    }
+
+  /** The dead-letter split. Without a `deadLetterSink`, `body` sees the
+    * decoded batch. With one, the decoded batch is persisted ONCE for
+    * the duration of `body`, so the lenient decode runs once per frame
+    * however many stages read it; its poison rows (raw bytes intact,
+    * decoded columns dropped) go to the sink when there are any, and
+    * `body` sees the rest. The split precedes every hook: a poison
+    * frame's null payload must neither read as a delete nor be dropped
+    * by a user predicate before quarantine. */
+  private def withoutPoison[T](decoded: DataFrame)(body: DataFrame => T): T =
+    deadLetterSink match {
+      case None => body(decoded)
+      case Some(dlq) =>
+        val cached = decoded.persist()
+        try {
+          val poison = poisonPredicate
+          val dead = cached.filter(poison).drop("payload", "decoded_key")
+          // isEmpty stops at the first poison row; an attached
+          // provider needs the count anyway
+          val any =
+            if (metrics eq Metrics.noop) !dead.isEmpty
+            else {
+              val n = dead.count()
+              metrics.count(Metrics.DeadLetters, n)
+              n > 0
+            }
+          if (any) dlq(dead) // the sink consumes eagerly (contract)
+          body(cached.filter(!coalesce(poison, lit(false))))
+        } finally cached.unpersist(false)
+    }
 }

@@ -74,18 +74,6 @@ object Compaction {
     df.withColumn(waveCol, row_number().over(w).cast("long"))
   }
 
-  /** Materialize the slices as an ordered sequence of DataFrames (used by
-    * the uncompacted merge path, which must apply waves sequentially —
-    * reference: `batch_consumption.rb:127-136`). The wave column is
-    * computed once; each slice is a cheap filter over the cached result.
-    */
-  def slices(df: DataFrame, keyCols: Seq[String], orderCol: Column): Seq[DataFrame] = {
-    val waved = withWave(df, keyCols, orderCol).cache()
-    val n = waved.agg(max(col("wave"))).collect()(0)
-    val nWaves = if (n.isNullAt(0)) 0L else n.getLong(0)
-    (1L to nWaves).map(i => waved.filter(col("wave") === i).drop("wave"))
-  }
-
   /** Per-key ordered layout for a SINGLE-job uncompacted apply: one
     * shuffle on the key, partition-local sort, after which every key's
     * rows are consecutive and in `orderCol` order within one task. A
@@ -98,9 +86,12 @@ object Compaction {
     df.repartition(keyCols.map(col): _*)
       .sortWithinPartitions((keyCols.map(col) :+ orderCol): _*)
 
-  /** Scoped variant: caches the waved frame for the duration of `body`
-    * and unpersists afterwards — use this inside foreachBatch so wave
-    * caches don't accumulate across micro-batches. */
+  /** The key-disjoint slices as an ordered sequence of frames, for
+    * `body` only (the uncompacted merge path applies the waves
+    * sequentially — reference: `batch_consumption.rb:127-136`). The
+    * wave column is computed once into a cache that `body`'s slices
+    * filter, and released when `body` returns, so no wave cache
+    * outlives a micro-batch. */
   def withSlices[T](df: DataFrame, keyCols: Seq[String], orderCol: Column)(
       body: Seq[DataFrame] => T): T = {
     val waved = withWave(df, keyCols, orderCol).cache()

@@ -145,23 +145,24 @@ object JdbcMerger {
 
   /** Bulk delete by (possibly compound) key — compound keys use a row
     * constructor IN list, as the reference builds `WHERE (k1,k2) IN …`
-    * (`batch_consumption.rb:241-247`); the Ansi dialect (Derby rejects
-    * row constructors in IN) uses the equivalent OR-of-ANDs with the
-    * same parameter order.
+    * (`batch_consumption.rb:241-247`).
     *
-    * Ansi keyed deletes are single-row on every merge path
-    * ([[mergeIntoJdbc]], [[applyOrderedRows]]): they prepare this
-    * statement once with `nRows = 1` and reuse it per tombstone, so
-    * Derby finds each row through the primary-key index. A multi-row
-    * OR-list makes Derby scan the whole table, and with `versionCol` it
-    * is rejected at prepare above ~440 keys ("statement too complex",
-    * 42ZA0). MySQL, Postgres and SQLite keep the multi-row statements.
+    * The Ansi dialect deletes ONE row per statement (`nRows` must be 1,
+    * as for its `MERGE` in [[upsertSql]]): a conjunction of key
+    * equalities, since Derby rejects row constructors in IN. Every
+    * merge path ([[mergeIntoJdbc]], [[applyOrderedRows]]) prepares it
+    * once and reuses it per tombstone, so Derby finds each row through
+    * the primary-key index. A multi-row OR-list makes Derby scan the
+    * whole table and, with `versionCol`, is rejected at prepare above
+    * ~440 keys ("statement too complex", 42ZA0). MySQL, Postgres and
+    * SQLite keep their multi-row statements.
     *
     * @param versionCol when set, each delete is version-guarded like
     *   the upserts: a row is removed only when its stored version is
     *   STRICTLY OLDER than the tombstone's (`stored < ?`) — without
     *   this, a replayed/stale tombstone would delete a newer live row
     *   while the same replay's stale upserts were correctly rejected.
+    *   The VALUES dialects then use an OR-of-ANDs, one term per row.
     *   Tie semantics are DELIBERATELY symmetric with the upsert guard
     *   (`? > stored` there, `stored < ?` here): a version EQUAL to the
     *   stored row's is a no-op on BOTH sides — that is the
@@ -177,28 +178,28 @@ object JdbcMerger {
     require(keyCols.nonEmpty,
       "deleteSql needs at least one key column: a keyless merge " +
         "cannot address rows to delete")
-    versionCol match {
-      case Some(v) =>
-        val one = (keyCols.map(k => s"${q(k, dialect)} = ?") :+
-          s"${q(v, dialect)} < ?").mkString("(", " AND ", ")")
-        val all = Seq.fill(nRows)(one).mkString(" OR ")
-        return s"DELETE FROM ${q(table, dialect)} WHERE $all"
-      case None => ()
+    val t = q(table, dialect)
+    val terms = keyCols.map(k => s"${q(k, dialect)} = ?") ++
+      versionCol.map(v => s"${q(v, dialect)} < ?")
+    (dialect, versionCol) match {
+      case (Ansi, _) =>
+        require(nRows == 1,
+          "Ansi dialect deletes row-at-a-time (a multi-row OR-list is a " +
+            "table scan, and Derby rejects a long one)")
+        s"DELETE FROM $t WHERE ${terms.mkString(" AND ")}"
+      case (_, Some(_)) =>
+        val one = terms.mkString("(", " AND ", ")")
+        s"DELETE FROM $t WHERE ${Seq.fill(nRows)(one).mkString(" OR ")}"
+      case _ =>
+        val keyTuple =
+          if (keyCols.size == 1) q(keyCols.head, dialect)
+          else keyCols.map(q(_, dialect)).mkString("(", ", ", ")")
+        val ph =
+          if (keyCols.size == 1) Seq.fill(nRows)("?").mkString(", ")
+          else Seq.fill(nRows)(keyCols.map(_ => "?").mkString("(", ", ", ")"))
+            .mkString(", ")
+        s"DELETE FROM $t WHERE $keyTuple IN ($ph)"
     }
-    if (keyCols.size > 1 && dialect == Ansi) {
-      val one = keyCols.map(k => s"${q(k, dialect)} = ?")
-        .mkString("(", " AND ", ")")
-      val all = Seq.fill(nRows)(one).mkString(" OR ")
-      return s"DELETE FROM ${q(table, dialect)} WHERE $all"
-    }
-    val keyTuple =
-      if (keyCols.size == 1) q(keyCols.head, dialect)
-      else keyCols.map(q(_, dialect)).mkString("(", ", ", ")")
-    val ph =
-      if (keyCols.size == 1) Seq.fill(nRows)("?").mkString(", ")
-      else Seq.fill(nRows)(keyCols.map(_ => "?").mkString("(", ", ", ")"))
-        .mkString(", ")
-    s"DELETE FROM ${q(table, dialect)} WHERE $keyTuple IN ($ph)"
   }
 
   /** Deadlock retry policy (reference: `lib/deimos/utils/
@@ -242,7 +243,9 @@ object JdbcMerger {
     * Dataset's rows do). Consecutive rows commit in transactions of [[OrderedGroupRows]]
     * (the [[mergeIntoJdbc]] discipline): a deadlock rolls the group
     * back and replays it whole, any other failure rolls it back and
-    * propagates, leaving earlier groups committed.
+    * propagates, leaving earlier groups committed. With `versionCol`, a
+    * row whose version is NULL fails its group before any of the
+    * group's statements runs (see [[mergeIntoJdbc]]).
     */
   def applyOrderedRows(rows: Iterator[Row], url: String, table: String,
       cols: Seq[String], keyCols: Seq[String], isTombstone: Row => Boolean,
@@ -257,15 +260,18 @@ object JdbcMerger {
     // version-guarded tombstone: same stale-replay protection as the
     // upsert guard
     val delIdx = (keyCols ++ versionCol).map(schema.fieldIndex)
+    val keyIdx = keyCols.map(schema.fieldIndex)
+    val verIdx = versionCol.map(schema.fieldIndex)
     val conn = java.sql.DriverManager.getConnection(url, props)
     try {
       val upSt = conn.prepareStatement(
         upsertSql(table, cols, keyCols, 1, dialect, versionCol))
       val delSt = conn.prepareStatement(
         deleteSql(table, keyCols, 1, dialect, versionCol))
-      try commitPerGroup(conn, buffered, OrderedGroupRows, retrySleeper)(
-        applyRowAtATime(_, isTombstone, upSt, upIdx, delSt, delIdx))
-      finally { upSt.close(); delSt.close() }
+      try commitPerGroup(conn, buffered, OrderedGroupRows, retrySleeper) { group =>
+        requireVersions(group, keyIdx, verIdx)
+        applyRowAtATime(group, isTombstone, upSt, upIdx, delSt, delIdx)
+      } finally { upSt.close(); delSt.close() }
     } finally conn.close()
   }
 
@@ -319,6 +325,23 @@ object JdbcMerger {
     rows.foreach(r => idx.foreach { c => st.setObject(i, r.get(c)); i += 1 })
   }
 
+  /** Fail on the first row of `group` whose version (at `verIdx`) is
+    * NULL, naming its key. Both version guards compare against the
+    * version (`? > stored`, `stored < ?`), which is unknown in SQL when
+    * it is NULL: such a row would change nothing and raise nothing,
+    * and an upsert of a new key would store a NULL version that no
+    * later version can overwrite. */
+  private def requireVersions(group: Seq[Row], keyIdx: Seq[Int],
+      verIdx: Option[Int]): Unit =
+    verIdx.foreach { v =>
+      group.find(_.isNullAt(v)).foreach { r =>
+        throw new IllegalArgumentException(
+          s"NULL version for key (${keyIdx.map(r.get).mkString(", ")}): a " +
+            "version-guarded merge needs a version on every row, tombstones " +
+            "included")
+      }
+    }
+
   /** Execute a keyed merge of `batch` into a JDBC table inside
     * `foreachBatch`: upserts and deletes (rows where `tombstone` holds)
     * applied in ONE Spark action, a `foreachPartition` over the batch
@@ -345,7 +368,7 @@ object JdbcMerger {
     * make re-applying an applied version a no-op.
     *
     * PRECONDITION — at most one action per key per batch: compact
-    * first ([[Compaction.lastWins]] — `Streams.mergeSink` does). With
+    * first ([[Compaction.lastWinsKeyed]] — `Streams.mergeBatch` does). With
     * duplicate keys in one statement the dialects diverge (Postgres
     * errors with "cannot affect row a second time", MySQL applies in
     * VALUES order), and because a group's upserts run before its
@@ -354,7 +377,15 @@ object JdbcMerger {
     * [[applyOrderedRows]], which applies per row in order.
     *
     * A keyless merge has no way to address rows to delete: a tombstone
-    * row fails its group loudly (groups before it stay committed). */
+    * row fails its group loudly (groups before it stay committed).
+    *
+    * With `versionCol`, every row of a keyed merge — upsert or
+    * tombstone — must carry a version: a NULL one fails its group with
+    * an `IllegalArgumentException` naming the key, before any of the
+    * group's statements runs (groups before it stay committed). A NULL
+    * version would otherwise make the guard unknown in SQL, so the row
+    * would be a silent no-op, or a new key would be stored with a
+    * version nothing can ever overwrite. */
   def mergeIntoJdbc(batch: DataFrame, url: String, table: String,
       keyCols: Seq[String], tombstone: Column,
       dialect: Dialect, props: java.util.Properties,
@@ -365,6 +396,9 @@ object JdbcMerger {
     val colIdx = cols.zipWithIndex.toMap
     val upIdx = upsertParamOrder(cols, keyCols, dialect, versionCol).map(colIdx)
     val delIdx = (keyCols ++ versionCol).map(colIdx)
+    val keyIdx = keyCols.map(colIdx)
+    // a keyless merge is a plain INSERT: no guard reads the version
+    val verIdx = if (keyCols.isEmpty) None else versionCol.map(colIdx)
     // appended after every batch column, so it is read by position and
     // cannot collide with a batch column's name
     val flag = cols.size
@@ -386,6 +420,7 @@ object JdbcMerger {
               require(!group.exists(_.getBoolean(flag)),
                 "keyless merge cannot delete: tombstone rows present but " +
                   "no key columns to address them")
+            requireVersions(group, keyIdx, verIdx)
             if (rowAtATime)
               applyRowAtATime(group, _.getBoolean(flag), upSt, upIdx, delSt, delIdx)
             else {
@@ -500,6 +535,14 @@ object JdbcMerger {
       case _ => cols
     }
 
+  /** A key/unique violation, portably: the dedicated subclass (Derby,
+    * MySQL Connector/J) OR SQLState class 23 (integrity constraint —
+    * what the PostgreSQL and SQLite drivers report without subclassing).
+    */
+  private[operators] def isIntegrityViolation(e: java.sql.SQLException): Boolean =
+    e.isInstanceOf[java.sql.SQLIntegrityConstraintViolationException] ||
+      Option(e.getSQLState).exists(_.startsWith("23"))
+
   /** Exactly-once accumulation of one micro-batch into a JDBC
     * accumulator table, for `foreachBatch((df, id) => ...)`: additive
     * merges are NOT replay-idempotent (a redelivered batch would
@@ -517,14 +560,6 @@ object JdbcMerger {
     * same batch id (a groupBy output is — same key lands in the same
     * partition).
     */
-  /** A key/unique violation, portably: the dedicated subclass (Derby,
-    * MySQL Connector/J) OR SQLState class 23 (integrity constraint —
-    * what the PostgreSQL and SQLite drivers report without subclassing).
-    */
-  private[operators] def isIntegrityViolation(e: java.sql.SQLException): Boolean =
-    e.isInstanceOf[java.sql.SQLIntegrityConstraintViolationException] ||
-      Option(e.getSQLState).exists(_.startsWith("23"))
-
   def accumulateBatchIntoJdbc(batch: DataFrame, batchId: Long,
       job: String, url: String, table: String, keyCols: Seq[String],
       ops: Map[String, MergeOp], dialect: Dialect,
@@ -569,20 +604,14 @@ object JdbcMerger {
               val st = conn.prepareStatement(
                 accumulateSql(table, cols, keyCols, ops, 1, dialect))
               try rows.foreach { r =>
-                var i = 1
-                paramIdx.foreach { c => st.setObject(i, r.get(c)); i += 1 }
+                bindRows(st, Seq(r), paramIdx)
                 st.executeUpdate()
               } finally st.close()
             } else rows.grouped(effBatch).foreach { group =>
               val st = conn.prepareStatement(accumulateSql(
                 table, cols, keyCols, ops, group.size, dialect))
-              try {
-                var i = 1
-                group.foreach(r => paramIdx.foreach { c =>
-                  st.setObject(i, r.get(c)); i += 1
-                })
-                st.executeUpdate()
-              } finally st.close()
+              try { bindRows(st, group, paramIdx); st.executeUpdate() }
+              finally st.close()
             }
             conn.commit()
           }

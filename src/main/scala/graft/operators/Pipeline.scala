@@ -108,11 +108,6 @@ object Pipeline {
       if (d.columns.contains(c)) d.withColumn(c, substring(col(c), 0, n)) else d
     }
 
-  /** P3 — per-row predicate filter (`process_message?` hook,
-    * reference: `active_record_consumer.rb:115-117`). */
-  def processMessageFilter(df: DataFrame, keep: Column): DataFrame =
-    df.filter(keep)
-
   /** P4 — validity partition: returns (valid, invalid) without scanning
     * twice more than needed; callers typically `observe` the invalid
     * count (reference: `batch_record_list.rb:23-33`). */
@@ -138,8 +133,8 @@ object Pipeline {
   /** The poison predicate every dead-letter split shares: a frame
     * that HAS bytes but decoded to nothing. Null bytes (tombstones)
     * are protocol, not corruption. One definition, used by
-    * [[partitionDecodable]], `BatchConsumer`, and the streaming
-    * side-split, so the classification cannot drift between paths. */
+    * [[partitionDecodable]] and `BatchConsumer` (both of its modes),
+    * so the classification cannot drift between paths. */
   def undecodable(bytes: Column, payload: Column): Column =
     bytes.isNotNull && payload.isNull
 

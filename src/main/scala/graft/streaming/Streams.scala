@@ -173,112 +173,81 @@ object Streams {
     else decoded.withColumn("decoded_headers", MessageCols.headersAsMap(kafka))
   }
 
-  /** §3.2 consume path suffix: per micro-batch, compact last-wins on
-    * the key and hand (upserts, deletes) to the sink — at-least-once +
-    * key-idempotent merge ≡ the reference's delivery contract (T1).
+  /** §3.2 consume path suffix as a streaming sink: per micro-batch,
+    * [[mergeBatch]] — compact last-wins on the key and hand (upserts,
+    * deletes) to the sink. At-least-once delivery + key-idempotent
+    * merge ≡ the reference's delivery contract (T1).
+    *
+    * The frame reaches the sink as decoded: no consumer hooks, no
+    * dead-letter split, no counters. A topic with a consumer behind it
+    * goes through `BatchConsumer.stream`, which runs the consumer's
+    * per-batch stages and then the same [[mergeBatch]].
     *
     * @param sink  (upserts, deletes, batchId) → Unit, e.g. a JdbcMerger
     *              call or a snapshot-table merge.
     */
-  /** @param sideSplit optional (predicate, handler): per micro-batch,
-    *   the DECODED batch is persisted ONCE and both sides derive from
-    *   it — the side rows go to the handler (skipped when empty) and
-    *   the rest proceed, so a lenient value decode runs one time per
-    *   frame, not once per side (round-10 ADVICE: the old
-    *   side-persist shape re-decoded the full batch for the main
-    *   path even when zero rows were poison). The split runs BEFORE
-    *   the `processMessage` filter and tombstone classification — the
-    *   dead-letter hook point (a poison frame's null payload must
-    *   never read as a delete). Memory note: the whole decoded
-    *   micro-batch is cached (MEMORY_AND_DISK) for the batch's
-    *   duration; micro-batches are bounded by the source's
-    *   per-trigger cap, so this is trigger-sized, not topic-sized. */
-  /** @param shape per-micro-batch frame shaping (the consumer's
-    *   `recordAttributes` hook), applied to the MAIN side only, AFTER
-    *   the sideSplit: shaping the whole stream before the split would
-    *   let a column-narrowing hook break the poison predicate and
-    *   strip the raw bytes off quarantined rows — the batch path
-    *   (`consumeBatch`) shapes only valid rows, and the two modes
-    *   must agree. */
   def mergeSink(decoded: DataFrame, keyCols: Seq[String], orderCol: Column,
-      tombstone: Column, compacted: Boolean = true,
-      processMessage: Column = lit(true),
-      maxWaves: Int = 1024,
-      sideSplit: Option[(Column, (DataFrame, Long) => Unit)] = None,
-      shape: DataFrame => DataFrame = identity)(
-      sink: (DataFrame, DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
-    decoded.writeStream.foreachBatch { (batch0: DataFrame, batchId: Long) =>
-      def process(batch: DataFrame): Unit = {
-        val filtered = shape(batch).filter(processMessage)
-        if (compacted) {
-          // blank-key guard (batch_consumption.rb:121-125): unkeyed rows
-          // bypass compaction instead of collapsing into one NULL group
-          val compact = Compaction.lastWinsKeyed(filtered, keyCols, orderCol)
-          val (up, del) = Materialize.splitTombstones(compact, tombstone)
-          sink(up, del, batchId)
-        } else {
-          // uncompacted: key-disjoint waves applied in order (reference
-          // BatchSlicer semantics, batch_consumption.rb:127-136); scoped
-          // cache so per-batch wave frames don't pile up. Wave count =
-          // max versions per key and each wave is a Spark job, so a
-          // skewed hot key could stall the driver for thousands of
-          // sequential jobs — the cap fails loudly instead of stalling;
-          // hot-key topics belong on [[mergeSinkOrdered]] (one job).
-          // blank-key guard, wave edition (the compacted branch's
-          // lastWinsKeyed sibling): NULL-key rows all share one window
-          // partition, so the wave numbering would hand each its OWN
-          // wave — tripping maxWaves on ~1k unkeyed rows and running
-          // one sequential Spark job per row below it. Unkeyed rows
-          // carry no per-key ordering constraint, so they apply as a
-          // single leading wave instead.
-          // The shaped+filtered batch feeds three consumers here (the
-          // unkeyed isEmpty probe, the unkeyed sink leg, the keyed wave
-          // machinery) — persist it for the branch's duration so the
-          // decode/shape pipeline runs once per micro-batch, mirroring
-          // the sideSplit path's batch cache (round-15 ADVICE). The
-          // isEmpty probe then costs a first-row scan of cached blocks,
-          // not a pipeline re-execution, even for topics that never
-          // produce NULL-key rows. Trigger-sized, like every cache in
-          // this sink.
-          val cachedF = filtered.persist()
-          try {
-            val keyNull = keyCols.map(col(_).isNull).reduce(_ || _)
-            val unkeyed = cachedF.filter(keyNull)
-            if (!unkeyed.isEmpty) {
-              val (up, del) = Materialize.splitTombstones(unkeyed, tombstone)
-              sink(up, del, batchId)
-            }
-            Compaction.withSlices(cachedF.filter(!keyNull), keyCols,
-              orderCol) { slices =>
-              if (slices.size > maxWaves)
-                throw new IllegalStateException(
-                  s"uncompacted batch $batchId needs ${slices.size} waves " +
-                    s"(> maxWaves=$maxWaves): a single key carries that many " +
-                    "versions. Use mergeSinkOrdered (one-job per-key ordered " +
-                    "apply) for this topic, or raise maxWaves deliberately.")
-              slices.foreach { slice =>
-                val (up, del) = Materialize.splitTombstones(slice, tombstone)
-                sink(up, del, batchId)
-              }
-            }
-          } finally cachedF.unpersist(false)
-        }
-      }
-      sideSplit match {
-        case Some((pred, handler)) =>
-          val cached = batch0.persist()
-          try {
-            val side = cached.filter(pred)
-            // isEmpty, not count() > 0: the empty case (the common
-            // one) stops at the first row instead of scanning the
-            // whole cached batch every micro-batch
-            if (!side.isEmpty) handler(side, batchId)
-            process(cached.filter(!coalesce(pred, lit(false))))
-          } finally cached.unpersist(false)
-        case None => process(batch0)
-      }
+      tombstone: Column, compacted: Boolean = true, maxWaves: Int = 1024)(
+      sink: (DataFrame, DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
+    decoded.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      mergeBatch(batch, batchId, keyCols, orderCol, tombstone, compacted,
+        maxWaves)(sink)
     }
-  }
+
+  /** One batch of the consume suffix, the body every streaming merge
+    * path runs per micro-batch ([[mergeSink]], `BatchConsumer.stream`).
+    *
+    * Compacted topics: `Compaction.lastWinsKeyed` (rows with a NULL key
+    * pass through uncompacted — the reference's blank-key guard,
+    * `batch_consumption.rb:121-125`) → `splitTombstones` → ONE `sink`
+    * call.
+    *
+    * Uncompacted topics: key-disjoint waves applied in order (reference
+    * BatchSlicer semantics, `batch_consumption.rb:127-136`), one `sink`
+    * call per wave, preceded by one call for the NULL-key rows when
+    * there are any. The batch is persisted for the duration of the
+    * call (it feeds the unkeyed probe, the unkeyed sink leg and the
+    * wave machinery), and the wave frame is released through
+    * `Compaction.withSlices`, so no cache outlives the batch.
+    *
+    * @param maxWaves each wave is a Spark job, so a key carrying this
+    *   many versions fails the batch loudly instead of stalling the
+    *   driver; hot-key topics belong on [[mergeSinkOrdered]].
+    */
+  def mergeBatch(batch: DataFrame, batchId: Long, keyCols: Seq[String],
+      orderCol: Column, tombstone: Column, compacted: Boolean,
+      maxWaves: Int = 1024)(sink: (DataFrame, DataFrame, Long) => Unit): Unit =
+    if (compacted) {
+      val (up, del) = Materialize.splitTombstones(
+        Compaction.lastWinsKeyed(batch, keyCols, orderCol), tombstone)
+      sink(up, del, batchId)
+    } else {
+      // NULL-key rows all share one window partition, so wave numbering
+      // would hand each its own wave (one sequential job per row, and
+      // maxWaves tripped by ~1k unkeyed rows). They carry no per-key
+      // ordering constraint, so they apply as one leading wave.
+      val cached = batch.persist()
+      try {
+        val keyNull = keyCols.map(col(_).isNull).reduce(_ || _)
+        val unkeyed = cached.filter(keyNull)
+        if (!unkeyed.isEmpty) {
+          val (up, del) = Materialize.splitTombstones(unkeyed, tombstone)
+          sink(up, del, batchId)
+        }
+        Compaction.withSlices(cached.filter(!keyNull), keyCols, orderCol) { slices =>
+          if (slices.size > maxWaves)
+            throw new IllegalStateException(
+              s"uncompacted batch $batchId needs ${slices.size} waves " +
+                s"(> maxWaves=$maxWaves): a single key carries that many " +
+                "versions. Use mergeSinkOrdered (one-job per-key ordered " +
+                "apply) for this topic, or raise maxWaves deliberately.")
+          slices.foreach { slice =>
+            val (up, del) = Materialize.splitTombstones(slice, tombstone)
+            sink(up, del, batchId)
+          }
+        }
+      } finally cached.unpersist(false)
+    }
 
   /** Uncompacted ordered apply in ONE job per micro-batch: rows are
     * shuffled to their key's partition and sorted (key, orderCol), so

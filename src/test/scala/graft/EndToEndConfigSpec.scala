@@ -71,9 +71,10 @@ class EndToEndConfigSpec extends SparkSpec {
         col("payload.amount").as("amount"),
         col("payload.version").as("version"))
         .withColumn("deleted", lit(false))
-        .unionByName(del.select(col("decoded_key"))
+        // a version-guarded merge needs a version on every row: the
+        // tombstone's is its offset, newer than every payload version
+        .unionByName(del.select(col("decoded_key"), col("offset").as("version"))
           .withColumn("amount", lit(null).cast("long"))
-          .withColumn("version", lit(null).cast("long"))
           .withColumn("deleted", lit(true)))
       JdbcMerger.mergeIntoJdbc(merged, url, "widgets",
         Seq("decoded_key"), col("deleted"), JdbcMerger.Ansi,

@@ -311,7 +311,7 @@ class ConsumerSpec extends SparkSpec {
   test("streaming DLQ crash-replay: quarantined rows survive a mid-batch " +
       "crash — at-least-once redelivery absorbed by a keyed store, " +
       "none lost, none double-kept") {
-    // The DLQ side of mergeSink's sideSplit runs BEFORE the main sink
+    // BatchConsumer's dead-letter split runs BEFORE the main sink
     // inside foreachBatch, so the worst-timed crash is: DLQ already
     // delivered the batch's poison, main sink dies, checkpoint never
     // commits. On restart the batch replays and the DLQ handler is

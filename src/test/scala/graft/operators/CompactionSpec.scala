@@ -114,10 +114,18 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("slices materializes ordered key-disjoint frames") {
-    val s = Compaction.slices(batch, Seq("key"), col("id"))
-    assert(s.size === 3)
-    assert(s.head.select("payload").as[String].collect().toSet ===
-      Set("a1", "b1", "c1"))
-    assert(s(2).select("payload").as[String].collect().toSet === Set("c3"))
+    // the waved frame withSlices caches (Dataset.storageLevel looks the
+    // plan up in the cache manager, so an equal plan finds the entry)
+    def waveCache = Compaction.withWave(batch, Seq("key"), col("id")).storageLevel
+    val sizes = Compaction.withSlices(batch, Seq("key"), col("id")) { s =>
+      assert(waveCache.useMemory, "the waves share one cached frame")
+      assert(s.head.select("payload").as[String].collect().toSet ===
+        Set("a1", "b1", "c1"))
+      assert(s(2).select("payload").as[String].collect().toSet === Set("c3"))
+      s.size
+    }
+    assert(sizes === 3)
+    assert(waveCache === org.apache.spark.storage.StorageLevel.NONE,
+      "the wave cache is released when the body returns")
   }
 }

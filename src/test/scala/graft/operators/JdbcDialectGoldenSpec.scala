@@ -103,14 +103,17 @@ class JdbcDialectGoldenSpec extends AnyFunSuite {
         "VALUES (?, ?, ?)")
   }
 
-  test("delete goldens: single key, compound row-constructor, Ansi OR-of-ANDs") {
+  test("delete goldens: single key, compound row-constructor, single-row Ansi conjunction") {
     assert(deleteSql("details", Seq("k1"), 3, MySql) ===
       "DELETE FROM `details` WHERE `k1` IN (?, ?, ?)")
     assert(deleteSql("details", Seq("k1", "k2"), 2, Postgres) ===
       """DELETE FROM "details" WHERE ("k1", "k2") IN ((?, ?), (?, ?))""")
-    assert(deleteSql("details", Seq("k1", "k2"), 2, Ansi) ===
-      """DELETE FROM "details" WHERE ("k1" = ? AND "k2" = ?)""" +
-        """ OR ("k1" = ? AND "k2" = ?)""")
+    assert(deleteSql("details", Seq("k1", "k2"), 1, Ansi) ===
+      """DELETE FROM "details" WHERE "k1" = ? AND "k2" = ?""")
+    assert(deleteSql("details", Seq("k1"), 1, Ansi, versionCol = Some("v")) ===
+      """DELETE FROM "details" WHERE "k1" = ? AND "v" < ?""")
+    // a multi-row Ansi delete is refused, like a multi-row Ansi MERGE
+    intercept[IllegalArgumentException](deleteSql("details", Seq("k1", "k2"), 2, Ansi))
   }
 
   test("param-order goldens: VALUES dialects bind cols; Ansi MERGE layout") {

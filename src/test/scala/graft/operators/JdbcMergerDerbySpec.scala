@@ -117,6 +117,43 @@ class JdbcMergerDerbySpec extends SparkSpec {
     assert(readAll(url, """SELECT "v" FROM "tgt"""").isEmpty)
   }
 
+  test("a NULL-versioned tombstone fails its group loudly and leaves the stored row") {
+    // `"version" < NULL` is unknown in SQL: without the check the
+    // tombstone deleted nothing and raised nothing
+    val url = freshDb("nullver")
+    withConn(url)(_.createStatement().execute(ddl))
+    def merge(rows: Seq[(Long, Int, String, Option[Long], Boolean)],
+        maxBatchSize: Int = 1000): Unit =
+      JdbcMerger.mergeIntoJdbc(
+        rows.toDF("k1", "k2", "v", "version", "deleted").coalesce(1),
+        url, "tgt", Seq("k1", "k2"), col("deleted"), JdbcMerger.Ansi,
+        new java.util.Properties, maxBatchSize = maxBatchSize,
+        versionCol = Some("version"), retrySleeper = _ => ())
+    merge(Seq((1L, 1, "v5", Some(5L), false)))
+    val e = intercept[Exception] {
+      // group 1 (key 2) commits; group 2 carries the NULL version
+      merge(Seq((2L, 1, "w", Some(3L), false), (1L, 1, null, None, true),
+        (3L, 1, "x", Some(4L), false)), maxBatchSize = 1)
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains("NULL version for key (1, 1)")), e)
+    assert(readAll(url, """SELECT "k1", "v" FROM "tgt" ORDER BY "k1"""") ===
+      Seq(Seq(1L, "v5"), Seq(2L, "w")))
+    // the ordered (M3) path checks the same way
+    val schema = Seq((1L, 1, "", Option(0L), true)).toDF("k1", "k2", "v", "version", "deleted").schema
+    val row = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      Array[Any](1L, 1, null, null, true), schema)
+    val e2 = intercept[IllegalArgumentException] {
+      JdbcMerger.applyOrderedRows(Iterator(row), url, "tgt",
+        Seq("k1", "k2", "v", "version", "deleted"), Seq("k1", "k2"),
+        _.getBoolean(4), JdbcMerger.Ansi, new java.util.Properties,
+        versionCol = Some("version"), retrySleeper = _ => ())
+    }
+    assert(e2.getMessage.contains("NULL version for key (1, 1)"))
+    assert(readAll(url, """SELECT count(*) FROM "tgt"""").head.head === 2)
+  }
+
   test("version-guarded delete of 1500 keys: row-at-a-time, stale tombstones spare newer rows") {
     // A multi-row guarded Ansi delete is one OR-list statement: Derby
     // rejects it at prepare above ~440 keys (42ZA0), so a batch this
@@ -216,7 +253,7 @@ class JdbcMergerDerbySpec extends SparkSpec {
     assert(got === Seq(Seq(1L, "a2"))) // key 1 converged to last version; key 2 deleted
   }
 
-  test("Ansi statement shapes: SYSDUMMY1 merge, guard, OR-of-ANDs delete, param order") {
+  test("Ansi statement shapes: SYSDUMMY1 merge, guard, single-row delete, param order") {
     val up = JdbcMerger.upsertSql("tgt", Seq("k1", "k2", "v", "version"),
       Seq("k1", "k2"), 1, JdbcMerger.Ansi, versionCol = Some("version"))
     assert(up.startsWith(
@@ -230,12 +267,15 @@ class JdbcMergerDerbySpec extends SparkSpec {
     // non-Ansi dialects bind plain cols order — unchanged
     assert(JdbcMerger.upsertParamOrder(Seq("k1", "v"), Seq("k1"),
       JdbcMerger.Postgres, Some("v")) === Seq("k1", "v"))
-    val del = JdbcMerger.deleteSql("tgt", Seq("k1", "k2"), 2, JdbcMerger.Ansi)
-    assert(del ===
-      """DELETE FROM "tgt" WHERE ("k1" = ? AND "k2" = ?) OR ("k1" = ? AND "k2" = ?)""")
-    // multi-row merge must fail loudly, not emit broken SQL
+    val del = JdbcMerger.deleteSql("tgt", Seq("k1", "k2"), 1, JdbcMerger.Ansi)
+    assert(del === """DELETE FROM "tgt" WHERE "k1" = ? AND "k2" = ?""")
+    // multi-row merge and delete must fail loudly, not emit SQL Derby
+    // scans the table for (or rejects, 42ZA0)
     intercept[IllegalArgumentException] {
       JdbcMerger.upsertSql("t", Seq("k", "v"), Seq("k"), 2, JdbcMerger.Ansi)
+    }
+    intercept[IllegalArgumentException] {
+      JdbcMerger.deleteSql("tgt", Seq("k1", "k2"), 2, JdbcMerger.Ansi)
     }
   }
 
