@@ -2933,10 +2933,7 @@ object ExtQueries {
   private def x138(s: SparkSession, dir: String): DataFrame = {
     val ids = t(s, dir, "documents").select(col("doc_id"))
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    // one decode wave: both screen sides are filters of this frame —
-    // cut it eagerly and vouch inputMaterialized, instead of the
-    // operator's two sequential per-side defensive checkpoints each
-    // re-running half the synth+decode (round-17, guide §1.2/§2.6)
+    // cut once here; the operator sees the cut
     val hashed = ids.select(col("doc_id"),
       PixelDecode.imageDHashAny(PixelDecode.synthPngTexture(lit(48),
         lit(32), mediaSeed(col("doc_id")).cast("int"))).as("ph"))
@@ -2944,7 +2941,7 @@ object ExtQueries {
     Multimodal.hashNearDupAgainst(
         hashed.filter(col("doc_id") % 2 === 0),
         hashed.filter(col("doc_id") % 2 === 1),
-        "doc_id", "ph", maxHamming = 0, inputMaterialized = true)
+        "doc_id", "ph", maxHamming = 0)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -2964,9 +2961,7 @@ object ExtQueries {
   private def x139(s: SparkSession, dir: String): DataFrame = {
     val ids = t(s, dir, "documents").select(col("doc_id"))
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    // one decode wave (x138's round-17 shape): the PNG and JPEG
-    // halves decode together in one eager cut instead of two
-    // sequential per-side checkpoint jobs inside the operator
+    // cut once here; the operator sees the cut
     val hashed = ids.select(col("doc_id"),
       PixelDecode.imageDHashAny(
         when(col("doc_id") % 2 === 0,
@@ -2977,7 +2972,7 @@ object ExtQueries {
     Multimodal.hashNearDupAgainst(
         hashed.filter(col("doc_id") % 2 === 0),
         hashed.filter(col("doc_id") % 2 === 1),
-        "doc_id", "ph", maxHamming = 3, inputMaterialized = true)
+        "doc_id", "ph", maxHamming = 3)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -3135,11 +3130,11 @@ object ExtQueries {
           PixelDecode.synthPngCells(mediaSeed(col("doc_id")).cast("int")))
         .otherwise(graft.ext.WebpDecode.synthWebpCells(
           mediaSeed(col("doc_id")).cast("int")))).as("ph"))
-      .localCheckpoint(true) // one decode wave — the x138 r17 shape
+      .localCheckpoint(true) // cut once here; the operator sees the cut
     Multimodal.hashNearDupAgainst(
         hashed.filter(col("doc_id") % 2 === 0),
         hashed.filter(col("doc_id") % 2 === 1),
-        "doc_id", "ph", maxHamming = 3, inputMaterialized = true)
+        "doc_id", "ph", maxHamming = 3)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -3248,11 +3243,11 @@ object ExtQueries {
         when(col("doc_id") % 2 === 0, original)
           .otherwise(PixelDecode.wavResample(original, 2)),
         canonicalRate = 22050).as("ph"))
-      .localCheckpoint(true) // one synth+fingerprint wave (x138 r17)
+      .localCheckpoint(true) // cut once here; the operator sees the cut
     Multimodal.hashNearDupAgainst(
         hashed.filter(col("doc_id") % 2 === 0),
         hashed.filter(col("doc_id") % 2 === 1),
-        "doc_id", "ph", maxHamming = 3, inputMaterialized = true)
+        "doc_id", "ph", maxHamming = 3)
       .orderBy(col("id_a"), col("id_b"))
   }
 

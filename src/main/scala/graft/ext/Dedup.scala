@@ -262,7 +262,7 @@ object Dedup {
       bucketCol: String, n: Int = 3, threshold: Double = 0.2,
       maxGramDf: Int = 1 << 14): DataFrame = {
     val (pairs, hot) = ngramJaccardCapped(docs, idCol, textCol, bucketCol,
-      n, threshold, maxGramDf, eagerHot = true)
+      n, threshold, maxGramDf)
     val examples = hot.limit(3).collect()
     if (examples.nonEmpty)
       throw new IllegalStateException(
@@ -277,14 +277,17 @@ object Dedup {
     * generation (doc gram-set sizes stay exact, so the reported
     * jaccard is a lower bound — pairs can be missed, never invented)
     * and every dropped gram is accounted for in the second frame.
+    * The hot-gram set is materialized once (an eager
+    * `localCheckpoint`): the anti-join and any reader of the overflow
+    * frame share it instead of each re-running the gram-frequency
+    * aggregate.
     *
     * @return (pairs, overflow) — overflow rows are
     *         (bkt, g, gram_df) per dropped gram, empty when no cap hit
     */
   def ngramJaccardCapped(docs: DataFrame, idCol: String, textCol: String,
       bucketCol: String, n: Int = 3, threshold: Double = 0.2,
-      maxGramDf: Int = 1 << 14,
-      eagerHot: Boolean = false): (DataFrame, DataFrame) = {
+      maxGramDf: Int = 1 << 14): (DataFrame, DataFrame) = {
     require(maxGramDf >= 1, s"maxGramDf must be positive, got $maxGramDf")
     // gram identity is its 64-bit hash: intersection/union counts match
     // string grams up to hash collisions (~2^-64 per pair)
@@ -293,14 +296,10 @@ object Dedup {
         explode(graft.functions.Expressions.ngramHashes(
           H.tokenHashes(T.tokens(col(textCol))), n)).as("g"))
     val sizes = grams.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
-    val hotLazy = grams.groupBy(col("bkt"), col("g"))
+    val hot = grams.groupBy(col("bkt"), col("g"))
       .agg(count(lit(1)).as("gram_df"))
       .filter(col("gram_df") > maxGramDf)
-    // eagerHot (the throwing wrapper's mode): materialize the tiny hot
-    // set ONCE — the wrapper's existence probe and the anti-join below
-    // then both read the checkpoint instead of each re-running the
-    // full gram-frequency aggregate (halves the cap discipline's cost)
-    val hot = if (eagerHot) hotLazy.localCheckpoint(true) else hotLazy
+      .localCheckpoint(true)
     // hot is small by assumption (it lists pathological grams only), so
     // the exclusion is a broadcast anti-join on the gram scan — the df²
     // blowup never reaches the shuffle
@@ -745,13 +744,14 @@ object Dedup {
         // upstream is typically an expensive decode pipeline (or a
         // survivor snapshot plus a fingerprinted batch) — cut it ONCE
         // (distinct-hash cardinality, ~40 B/row), then every consumer
-        // reads the checkpoint
+        // reads the checkpoint; the screens below see the cut in their
+        // input plans and add none
         val classesM = classes.localCheckpoint(true)
         val reps = classesM.filter(col("__ph").isNotNull)
           .select(col("__rep").as("__rid"), col("__ph"), col("__hasBat"))
         val batReps = reps.filter(col("__hasBat"))
         val (selfPairs, hotSelf) = Multimodal.hashNearDupCapped(batReps,
-          "__rid", "__ph", maxHamming, maxBucket, inputMaterialized = true)
+          "__rid", "__ph", maxHamming, maxBucket)
         val selfOvf = hotSelf.select(lit("self").as("side"), col("chunk"),
           col("cval"), col("n_ids"))
         // no survivors (the one-shot): no bipartite screen, so the plan
@@ -759,7 +759,7 @@ object Dedup {
         val (pairs, ovf) = survivors.fold((selfPairs, selfOvf)) { _ =>
           val (crossPairs, hotCross) = Multimodal.hashNearDupAgainstCapped(
             batReps, reps.filter(!col("__hasBat")), "__rid", "__ph",
-            maxHamming, maxBucket, inputMaterialized = true)
+            maxHamming, maxBucket)
           (selfPairs.select(col("id_a"), col("id_b"))
               .unionByName(crossPairs.select(col("id_a"), col("id_b"))),
             selfOvf.unionByName(hotCross.select(lit("cross").as("side"),
@@ -959,7 +959,7 @@ object Dedup {
       bucketCol: String, threshold: Double = 0.95,
       maxBucket: Int = 1 << 12): DataFrame = {
     val (pairs, hot) = embeddingCosineCapped(embeddings, idCol, vecCol,
-      bucketCol, threshold, maxBucket, eagerHot = true)
+      bucketCol, threshold, maxBucket)
     val examples = hot.limit(3).collect()
     if (examples.nonEmpty)
       throw new IllegalStateException(
@@ -973,21 +973,22 @@ object Dedup {
   /** [[embeddingCosine]] with oversized buckets SKIPPED instead of
     * fatal: no pair from a bucket larger than `maxBucket` is verified
     * (pairs can be missed, never invented) and each skipped bucket is
-    * accounted for in the second frame.
+    * accounted for in the second frame. The oversized-bucket set is
+    * materialized once (an eager `localCheckpoint`), shared by the
+    * anti-join and any reader of the overflow frame.
     *
     * @return (pairs, overflow) — overflow rows are (bkt, n_rows) per
     *         skipped bucket, empty when no cap hit
     */
   def embeddingCosineCapped(embeddings: DataFrame, idCol: String,
       vecCol: String, bucketCol: String, threshold: Double = 0.95,
-      maxBucket: Int = 1 << 12,
-      eagerHot: Boolean = false): (DataFrame, DataFrame) = {
+      maxBucket: Int = 1 << 12): (DataFrame, DataFrame) = {
     require(maxBucket >= 1, s"maxBucket must be positive, got $maxBucket")
     val v = embeddings.select(col(idCol).as("vid"), col(bucketCol).as("bkt"),
       col(vecCol).as("vec"))
-    val hotLazy = v.groupBy(col("bkt")).agg(count(lit(1)).as("n_rows"))
+    val hot = v.groupBy(col("bkt")).agg(count(lit(1)).as("n_rows"))
       .filter(col("n_rows") > maxBucket)
-    val hot = if (eagerHot) hotLazy.localCheckpoint(true) else hotLazy
+      .localCheckpoint(true)
     val kept = v.join(broadcast(hot.select(col("bkt"))), Seq("bkt"), "left_anti")
     val a = kept.select(col("bkt"), col("vid").as("id_a"), col("vec").as("vec_a"))
     val b = kept.select(col("bkt"), col("vid").as("id_b"), col("vec").as("vec_b"))

@@ -1,6 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
+  LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -104,28 +108,32 @@ object Multimodal {
     * normalized, so one cold endpoint bucket rescues the pair), and
     * pairs are never invented.
     *
+    * Input cut: the projected (id, hash) input is read several times
+    * (bucket histogram, both join sides), so it is materialized once
+    * with an eager `localCheckpoint` — unless its analyzed plan is
+    * already cheap to re-read: only projections whose every output is
+    * an attribute or an alias of one, and filters with a deterministic
+    * condition, over a leaf that is an eagerly checkpointed
+    * `LogicalRDD` or a `LocalRelation`. A caller that feeds several
+    * screens from one expensive pipeline (a media decode, a class
+    * aggregate) cuts it once itself; the operator sees that cut in
+    * the plan and adds none. With `maxBucket` set, the hot-bucket
+    * set is always cut once.
+    *
     * @return (pairs (id_a, id_b, hamming), overflow (chunk, cval,
     *         n_ids) per skipped bucket)
     */
   def hashNearDupCapped(df: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int = 3,
       maxBucket: Option[Int] = Some(1 << 12),
-      maxProjectedCandidates: Long = DefaultMaxProjectedCandidates,
-      inputMaterialized: Boolean = false)
+      maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
       : (DataFrame, DataFrame) = {
     import graft.functions.{HashFunctions => H}
     require(maxHamming >= 0 && maxHamming <= 7,
       s"pigeonhole + 1-bit multi-probe covers hamming <= 7, got $maxHamming")
     require(maxBucket.forall(_ >= 1), s"maxBucket must be positive: $maxBucket")
-    // inputMaterialized=true (round-17): the caller vouches `df` is
-    // already materialized/cheap (a checkpoint slice, a parquet scan) —
-    // skip the defensive eager checkpoint, whose job-per-call constant
-    // is pure overhead then (curateIncrementCapped re-checkpoints its
-    // inputs right before calling here)
-    val projected = df.select(col(idCol).as("id"), col(hashCol).as("ph"))
-      .filter(col("ph").isNotNull)
-    val hashed = if (inputMaterialized) projected
-      else projected.localCheckpoint(true) // (id, int64): one scan, not two
+    val hashed = cutOnce(df.select(col(idCol).as("id"), col(hashCol).as("ph"))
+      .filter(col("ph").isNotNull))
     val allChunked = hashed.select(col("id"), col("ph"),
       posexplode(H.simhashChunks(col("ph"))).as(Seq("chunk", "cval")))
     val (dropHot, overflow) = maxBucket match {
@@ -234,7 +242,8 @@ object Multimodal {
     * bound, at the cost of skipping some buckets whose product is
     * small (e.g. 1×maxBucket). Same drop-and-report contract.
     * Ids are NOT compared across sides (the two corpora own separate
-    * id spaces; an equal id is two different documents).
+    * id spaces; an equal id is two different documents). Each side
+    * gets [[hashNearDupCapped]]'s input cut rule on its own.
     *
     * @return (pairs (id_a ∈ left, id_b ∈ right, hamming),
     *         overflow (chunk, cval, n_ids) per skipped bucket)
@@ -242,21 +251,17 @@ object Multimodal {
   def hashNearDupAgainstCapped(left: DataFrame, right: DataFrame,
       idCol: String, hashCol: String, maxHamming: Int = 3,
       maxBucket: Option[Int] = Some(1 << 12),
-      maxProjectedCandidates: Long = DefaultMaxProjectedCandidates,
-      inputMaterialized: Boolean = false)
+      maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
       : (DataFrame, DataFrame) = {
     import graft.functions.{HashFunctions => H}
     require(maxHamming >= 0 && maxHamming <= 7,
       s"pigeonhole + 1-bit multi-probe covers hamming <= 7, got $maxHamming")
     require(maxBucket.forall(_ >= 1), s"maxBucket must be positive: $maxBucket")
-    // same inputMaterialized contract as [[hashNearDupCapped]]
-    def chunked(df: DataFrame, ic: String, hc: String): DataFrame = {
-      val projected = df.select(col(idCol).as(ic), col(hashCol).as(hc))
-        .filter(col(hc).isNotNull)
-      (if (inputMaterialized) projected else projected.localCheckpoint(true))
+    def chunked(df: DataFrame, ic: String, hc: String): DataFrame =
+      cutOnce(df.select(col(idCol).as(ic), col(hashCol).as(hc))
+        .filter(col(hc).isNotNull))
         .select(col(ic), col(hc),
           posexplode(H.simhashChunks(col(hc))).as(Seq("chunk", "cval")))
-    }
     val la = chunked(left, "id_a", "ph_a")
     val rbExact = chunked(right, "id_b", "ph_b")
     // radius 4–7: the RIGHT side probes the 1-bit ball per chunk; a
@@ -312,22 +317,36 @@ object Multimodal {
     (pairs, overflow)
   }
 
-  /** [[hashNearDupAgainstCapped]] without the cap.
-    * `inputMaterialized` — same contract as the capped form: the
-    * caller vouches both sides are materialized/cheap (e.g. filters
-    * of one eagerly-checkpointed hashed frame), so the per-side
-    * defensive checkpoints are skipped; a caller whose two sides
-    * share one expensive scan-side pipeline (media decode) should
-    * checkpoint THAT once and pass true — one decode wave instead of
-    * two sequential per-side jobs. */
+  /** [[hashNearDupAgainstCapped]] without the cap. A caller whose two
+    * sides share one expensive scan-side pipeline (media decode)
+    * checkpoints THAT once and passes filters of it: by
+    * [[hashNearDupCapped]]'s input cut rule neither side is cut
+    * again — one decode wave instead of two sequential per-side
+    * jobs. */
   def hashNearDupAgainst(left: DataFrame, right: DataFrame, idCol: String,
       hashCol: String, maxHamming: Int = 3,
-      maxProjectedCandidates: Long = DefaultMaxProjectedCandidates,
-      inputMaterialized: Boolean = false)
+      maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
       : DataFrame =
     hashNearDupAgainstCapped(left, right, idCol, hashCol, maxHamming,
-      maxBucket = None, maxProjectedCandidates,
-      inputMaterialized = inputMaterialized)._1
+      maxBucket = None, maxProjectedCandidates)._1
+
+  /** [[hashNearDupCapped]]'s input cut rule. */
+  private def cutOnce(df: DataFrame): DataFrame = {
+    def materialized(plan: LogicalPlan): Boolean = plan match {
+      case Project(outputs, child) =>
+        outputs.forall {
+          case _: Attribute | Alias(_: Attribute, _) => true
+          case _ => false
+        } && materialized(child)
+      case Filter(condition, child) =>
+        condition.deterministic && materialized(child)
+      case leaf: LogicalRDD => leaf.rdd.isCheckpointed
+      case _: LocalRelation => true
+      case _ => false
+    }
+    if (materialized(df.queryExecution.analyzed)) df
+    else df.localCheckpoint(true)
+  }
 
   /** Image near-duplicate detection: perceptual dHash over the REAL
     * decoded pixel plane ([[PixelDecode.imageDHashAny]] — magic-sniff

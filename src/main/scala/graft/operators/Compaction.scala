@@ -47,22 +47,6 @@ object Compaction {
       .unionByName(df.filter(hasNullKey))
   }
 
-  /** Aggregation-based last-wins: `max_by(struct(*), orderCol)` per
-    * key. Same result as [[lastWins]], different physical strategy:
-    * partial aggregation combines map-side, so the shuffle carries one
-    * row per key per input partition — preferable when keys are few
-    * and hot; the window form (with WindowGroupLimit) wins when the
-    * surviving row set is large. Both are one shuffle; pick by shape.
-    */
-  def lastWinsAgg(df: DataFrame, keyCols: Seq[String], orderCol: Column): DataFrame = {
-    val payload = df.columns.filterNot(keyCols.contains).toIndexedSeq
-    df.groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(payload.map(col): _*), orderCol).as("__last"))
-      .select((keyCols.map(col) ++
-        payload.map(c => col("__last").getField(c).as(c))): _*)
-      .select(df.columns.toIndexedSeq.map(col): _*)
-  }
-
   /** Key-disjoint wave number: rank of each row within its key, in
     * `orderCol` order. All rows with wave=1 form the first key-disjoint
     * slice, wave=2 the second, etc. Same-key rows stay ordered across

@@ -152,6 +152,13 @@ object StreamNearDup {
       }
   }
 
+  /** Above this many hot keys the literal-array regime gives way to a
+    * broadcast lookup set: array_contains over typedLit arrays costs
+    * O(|hot|) per candidate row and embeds every key in the plan —
+    * fine for a handful of hot buckets, a plan-size and per-row-cost
+    * blowup on a reference with many. */
+  private[streaming] val HotKeyLiteralMax = 1024
+
   /** STREAMING bipartite screen against a FROZEN reference corpus —
     * online decontamination: every arrival is checked against a fixed
     * training/eval set and emits one row per reference near-duplicate
@@ -189,19 +196,12 @@ object StreamNearDup {
     * @param reference frozen corpus: `idCol`, `hashCol` (batch frame)
     * @param arrivals  streaming (or batch) frame with `idCol`,
     *                  `hashCol`
+    * @param hotKeyLiteralMax regime switch (tests inject 0 to force
+    *        the broadcast-set path on small fixtures; production
+    *        callers keep the default)
     * @return (pairs (id_a, id_b, hamming) — streaming when `arrivals`
     *         is, append-safe; overflow (chunk, cval, n_ids) — batch)
     */
-  /** Above this many hot keys the literal-array regime gives way to a
-    * broadcast lookup set: array_contains over typedLit arrays costs
-    * O(|hot|) per candidate row and embeds every key in the plan —
-    * fine for a handful of hot buckets, a plan-size and per-row-cost
-    * blowup on a reference with many. */
-  private[streaming] val HotKeyLiteralMax = 1024
-
-  /** @param hotKeyLiteralMax regime switch (tests inject 0 to force
-    *        the broadcast-set path on small fixtures; production
-    *        callers keep the default) */
   def screenAgainst(reference: DataFrame, arrivals: DataFrame,
       idCol: String, hashCol: String, maxHamming: Int = 3,
       maxBucket: Option[Int] = None,

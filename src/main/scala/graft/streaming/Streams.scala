@@ -136,8 +136,9 @@ object Streams {
 
   /** §3.2 consume path prefix: Kafka-shaped frame → decoded payload +
     * key + stream metadata. Tombstones (null value) decode to null
-    * payload (reference transcoder: `transcoder.rb:89-97`). */
-  /** @param lenient when true, the VALUE decode goes through
+    * payload (reference transcoder: `transcoder.rb:89-97`).
+    *
+    * @param lenient when true, the VALUE decode goes through
     *   [[SchemaBackend.decodeLenientExpr]]: a corrupt frame yields a
     *   null payload beside its non-null raw value — the caller's
     *   dead-letter signal (see `BatchConsumer`'s `deadLetterSink`) —
@@ -261,10 +262,10 @@ object Streams {
     *   upsert loop); opens its own connection per partition.
     */
   def mergeSinkOrdered(decoded: DataFrame, keyCols: Seq[String],
-      orderCol: Column, processMessage: Column = lit(true))(
+      orderCol: Column)(
       rowSink: (Iterator[org.apache.spark.sql.Row], Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
     decoded.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      Compaction.orderedByKey(batch.filter(processMessage), keyCols, orderCol)
+      Compaction.orderedByKey(batch, keyCols, orderCol)
         .foreachPartition((rows: Iterator[org.apache.spark.sql.Row]) =>
           rowSink(rows, batchId))
     }

@@ -33,12 +33,10 @@ class CurateKernelSpec extends SparkSpec {
     val bat = batch.select(col("doc_id"), col("ph"), col("quality"))
       .localCheckpoint(true)
     val (pairsSelf, _) = Multimodal.hashNearDupCapped(
-      bat.select(col("doc_id"), col("ph")), "doc_id", "ph", h, cap,
-      inputMaterialized = true)
+      bat.select(col("doc_id"), col("ph")), "doc_id", "ph", h, cap)
     val (pairsCross, _) = Multimodal.hashNearDupAgainstCapped(
       bat.select(col("doc_id"), col("ph")),
-      surv.select(col("doc_id"), col("ph")), "doc_id", "ph", h, cap,
-      inputMaterialized = true)
+      surv.select(col("doc_id"), col("ph")), "doc_id", "ph", h, cap)
     val edges = pairsSelf.select(col("id_a"), col("id_b"))
       .unionByName(pairsCross.select(col("id_a"), col("id_b")))
     val labels = Dedup.components(edges, aCol = "id_a", bCol = "id_b")

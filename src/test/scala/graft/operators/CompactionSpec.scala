@@ -38,16 +38,6 @@ class CompactionSpec extends SparkSpec {
       .count() === 2)
   }
 
-  test("lastWinsAgg (max_by strategy) equals the window strategy") {
-    val w = Compaction.lastWins(batch, Seq("key"), col("id"))
-      .collect().toSet
-    val a = Compaction.lastWinsAgg(batch, Seq("key"), col("id"))
-      .collect().toSet
-    assert(a === w)
-    assert(Compaction.lastWinsAgg(batch, Seq("key"), col("id"))
-      .columns.toSeq === batch.columns.toSeq)
-  }
-
   test("lastWins of a single-row key is identity") {
     val one = Seq((10L, "Z", "z")).toDF("id", "key", "payload")
     assert(Compaction.lastWins(one, Seq("key"), col("id")).count() === 1)
