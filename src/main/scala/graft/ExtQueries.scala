@@ -500,10 +500,12 @@ object ExtQueries {
   private def x13(s: SparkSession, dir: String): DataFrame = {
     val docs = spread(t(s, dir, "documents")).select(col("doc_id"), col("text"))
     // one eager cut: LSH runs once for components AND the closure
-    // check (pairs ≪ corpus — bounded by verified near-dups)
+    // check (pairs ≪ corpus — bounded by verified near-dups);
+    // components sees the cut and adds none, and its labels come back
+    // cut (distributed path) or driver-built
     val pairs = Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text")
       .localCheckpoint(true)
-    val labels = Dedup.components(pairs).localCheckpoint(true)
+    val labels = Dedup.components(pairs)
     componentsGate(docs, pairs, labels)
   }
 

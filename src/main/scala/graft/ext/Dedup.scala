@@ -106,16 +106,13 @@ object Dedup {
   /** [[minhashLsh]] with a candidate cap on LSH buckets: a (band,
     * bucket) holding more than `maxBucket` docs emits b² candidate
     * pairs — at corpus scale a bucket full of boilerplate-identical
-    * documents is a task-killer. With a cap set, oversized buckets are
-    * SKIPPED for candidate generation (their docs can still pair
-    * through their other bands — LSH's redundancy is exactly for this)
-    * and each one is accounted for in the overflow frame. Pairs can be
-    * missed, never invented: verification stays exact-Jaccard on full
-    * shingle sets either way, so this only moves recall — which is
-    * already the LSH contract — never precision. Unlike
-    * [[ngramJaccard]] (exact by contract → loud failure there), the
-    * cap here is drop-and-report and OPT-IN: `None` keeps the classic
-    * plan with zero extra jobs.
+    * documents is a task-killer. Hot buckets are dropped and reported
+    * by the family's governance rule ([[Buckets]]); their docs can
+    * still pair through their other bands — LSH's redundancy is
+    * exactly for this — so the cap only moves recall, which is already
+    * the LSH contract, never precision. Unlike [[ngramJaccard]] (exact
+    * by contract → loud failure there), the cap here is OPT-IN: `None`
+    * keeps the classic plan with zero extra jobs.
     *
     * @return (pairs, overflow) — overflow rows are (band, bucket,
     *         n_docs) per skipped bucket; empty frame when no cap set
@@ -125,7 +122,6 @@ object Dedup {
       shingleN: Int = 3, k: Int = 32, bands: Int = 8,
       threshold: Double = 0.2,
       maxBucket: Option[Int] = Some(1 << 12)): (DataFrame, DataFrame) = {
-    require(maxBucket.forall(_ >= 1), s"maxBucket must be positive: $maxBucket")
     // bands must tile the signature: bands > k makes every band key a
     // constant (r = k/bands = 0 rows hashed ⇒ one bucket per band —
     // either a full O(n²) cross join or, capped, silent zero recall),
@@ -147,22 +143,9 @@ object Dedup {
       posexplode(H.bandKeys(
         graft.functions.Expressions.minhashSignature(col("shingles"), k),
         k, bands)).as(Seq("band", "bucket")))
-    val (banded, overflow) = maxBucket match {
-      case Some(cap) =>
-        // hot set is pathological-buckets-only (tiny): checkpoint once,
-        // broadcast anti-join keeps the b² blowup off the shuffle
-        val hot = allBanded.groupBy(col("band"), col("bucket"))
-          .agg(count(lit(1)).as("n_docs"))
-          .filter(col("n_docs") > cap)
-          .localCheckpoint(true)
-        (allBanded.join(broadcast(hot.select(col("band"), col("bucket"))),
-          Seq("band", "bucket"), "left_anti"), hot)
-      case None =>
-        val spark = docs.sparkSession
-        import spark.implicits._
-        (allBanded,
-          Seq.empty[(Int, Long, Long)].toDF("band", "bucket", "n_docs"))
-    }
+    val (dropHot, overflow) = Buckets.govern(allBanded,
+      Seq("band", "bucket"), maxBucket, "n_docs")
+    val banded = dropHot(allBanded)
     val a = banded.select(col("band"), col("bucket"), col("doc").as("doc_a"))
     val b = banded.select(col("band"), col("bucket"), col("doc").as("doc_b"))
     // Eager local checkpoint: the candidate set is tiny (surviving
@@ -263,24 +246,17 @@ object Dedup {
       maxGramDf: Int = 1 << 14): DataFrame = {
     val (pairs, hot) = ngramJaccardCapped(docs, idCol, textCol, bucketCol,
       n, threshold, maxGramDf)
-    val examples = hot.limit(3).collect()
-    if (examples.nonEmpty)
-      throw new IllegalStateException(
-        s"ngramJaccard: gram frequency exceeds maxGramDf=$maxGramDf in " +
-          s"buckets ${examples.map(r => s"${r.get(0)} (df=${r.getLong(2)})")
-            .mkString(", ")}; raise maxGramDf or use ngramJaccardCapped")
+    Buckets.requireCold(hot, "df")(examples =>
+      s"ngramJaccard: gram frequency exceeds maxGramDf=$maxGramDf in " +
+        s"buckets $examples; raise maxGramDf or use ngramJaccardCapped")
     pairs
   }
 
   /** [[ngramJaccard]] with hot grams DROPPED instead of fatal: grams
-    * above `maxGramDf` in-bucket frequency are excluded from candidate
-    * generation (doc gram-set sizes stay exact, so the reported
-    * jaccard is a lower bound — pairs can be missed, never invented)
-    * and every dropped gram is accounted for in the second frame.
-    * The hot-gram set is materialized once (an eager
-    * `localCheckpoint`): the anti-join and any reader of the overflow
-    * frame share it instead of each re-running the gram-frequency
-    * aggregate.
+    * above `maxGramDf` in-bucket frequency are dropped from candidate
+    * generation and reported by the family's governance rule
+    * ([[Buckets]]). Doc gram-set sizes stay exact, so the reported
+    * jaccard is a lower bound.
     *
     * @return (pairs, overflow) — overflow rows are
     *         (bkt, g, gram_df) per dropped gram, empty when no cap hit
@@ -288,7 +264,6 @@ object Dedup {
   def ngramJaccardCapped(docs: DataFrame, idCol: String, textCol: String,
       bucketCol: String, n: Int = 3, threshold: Double = 0.2,
       maxGramDf: Int = 1 << 14): (DataFrame, DataFrame) = {
-    require(maxGramDf >= 1, s"maxGramDf must be positive, got $maxGramDf")
     // gram identity is its 64-bit hash: intersection/union counts match
     // string grams up to hash collisions (~2^-64 per pair)
     val grams = spread(docs, idCol)
@@ -296,15 +271,9 @@ object Dedup {
         explode(graft.functions.Expressions.ngramHashes(
           H.tokenHashes(T.tokens(col(textCol))), n)).as("g"))
     val sizes = grams.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
-    val hot = grams.groupBy(col("bkt"), col("g"))
-      .agg(count(lit(1)).as("gram_df"))
-      .filter(col("gram_df") > maxGramDf)
-      .localCheckpoint(true)
-    // hot is small by assumption (it lists pathological grams only), so
-    // the exclusion is a broadcast anti-join on the gram scan — the df²
-    // blowup never reaches the shuffle
-    val kept = grams.join(broadcast(hot.select(col("bkt"), col("g"))),
-      Seq("bkt", "g"), "left_anti")
+    val hot = Buckets.hot(grams, Seq("bkt", "g"), maxGramDf, "gram_df",
+      capName = "maxGramDf")
+    val kept = Buckets.drop(grams, hot, Seq("bkt", "g"))
     val inter = kept.alias("x")
       .join(kept.alias("y"),
         col("x.g") === col("y.g") && col("x.bkt") === col("y.bkt") &&
@@ -338,8 +307,9 @@ object Dedup {
   def components(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIters: Int = 25,
       driverThreshold: Long = 100000L): DataFrame = {
-    // Round-17: materialize the RAW pair projection once (eager
-    // localCheckpoint, no shuffle) and gate on the raw count. The old
+    // Round-17: materialize the RAW pair projection once (the family's
+    // cut rule, [[Buckets.cutOnce]]: a projection of a caller's eager
+    // cut is read as is) and gate on the raw count. The old
     // shape built the bidirectional DISTINCT edge set (a full shuffle
     // + a session-cache entry) before deciding the path — but the
     // driver union-find neither needs dedup (a repeated union() is a
@@ -349,8 +319,8 @@ object Dedup {
     // bidirectional distinct edge count, so the driver path triggers
     // on a subset of the graphs it used to — same labels either way
     // (both paths emit identical labelings; ComponentsSpec pins it).
-    val raw = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint(true)
+    val raw = Buckets.cutOnce(pairs.select(col(aCol).as("src"),
+      col(bCol).as("dst")))
     val nRaw = raw.count()
     if (2 * nRaw <= driverThreshold) {
       // id-type-generic union-find (ids are int/long/string across the
@@ -645,7 +615,7 @@ object Dedup {
     * cap's, output equals the uncapped output whenever overflow is
     * empty, and every reported n_copies is exact for the groups that
     * did form. At maxHamming = 0 there is no pair search: the cap is
-    * unused and overflow is empty.
+    * validated but unused, and overflow is empty.
     *
     * @return (new survivor set — [[curateIncrement]]'s contract;
     *         overflow (side ∈ self|cross, chunk, cval, n_ids) per
@@ -709,6 +679,7 @@ object Dedup {
   private def curateKernel(survivors: Option[DataFrame], batch: DataFrame,
       idCol: String, hashCol: String, qualityCol: String, maxHamming: Int,
       maxBucket: Option[Int]): (DataFrame, DataFrame) = {
+    Buckets.check(maxHamming, maxBucket)
     val bat = batch.select(col(idCol), col(hashCol), col(qualityCol),
       lit(1L).as("__wt"), lit(true).as("__bat"))
     val input = survivors.fold(bat)(
@@ -734,11 +705,11 @@ object Dedup {
       if (maxHamming == 0) {
         // hash equality is transitive: classes ARE the groups — one
         // lazy DAG, no pair generation, no components, no extra jobs
-        val spark = batch.sparkSession
-        import spark.implicits._
         (classes.select(col("__k").as("n_copies"), col("__w")),
-          Seq.empty[(String, Int, Long, Long)]
-            .toDF("side", "chunk", "cval", "n_ids"))
+          Buckets.none(classes.select(lit("self").as("side"),
+              posexplode(H.simhashChunks(col("__ph")))
+                .as(Seq("chunk", "cval"))),
+            Seq("side", "chunk", "cval"), "n_ids"))
       } else {
         // classes feeds the pair search and the merge join, and its
         // upstream is typically an expensive decode pipeline (or a
@@ -960,22 +931,16 @@ object Dedup {
       maxBucket: Int = 1 << 12): DataFrame = {
     val (pairs, hot) = embeddingCosineCapped(embeddings, idCol, vecCol,
       bucketCol, threshold, maxBucket)
-    val examples = hot.limit(3).collect()
-    if (examples.nonEmpty)
-      throw new IllegalStateException(
-        s"embeddingCosine: bucket size exceeds maxBucket=$maxBucket for " +
-          s"${examples.map(r => s"${r.get(0)} (n=${r.getLong(1)})")
-            .mkString(", ")}; raise maxBucket, refine the bucket key, " +
-          "or use embeddingCosineCapped")
+    Buckets.requireCold(hot, "n")(examples =>
+      s"embeddingCosine: bucket size exceeds maxBucket=$maxBucket for " +
+        s"$examples; raise maxBucket, refine the bucket key, " +
+        "or use embeddingCosineCapped")
     pairs
   }
 
   /** [[embeddingCosine]] with oversized buckets SKIPPED instead of
-    * fatal: no pair from a bucket larger than `maxBucket` is verified
-    * (pairs can be missed, never invented) and each skipped bucket is
-    * accounted for in the second frame. The oversized-bucket set is
-    * materialized once (an eager `localCheckpoint`), shared by the
-    * anti-join and any reader of the overflow frame.
+    * fatal: a bucket larger than `maxBucket` is dropped and reported by
+    * the family's governance rule ([[Buckets]]).
     *
     * @return (pairs, overflow) — overflow rows are (bkt, n_rows) per
     *         skipped bucket, empty when no cap hit
@@ -983,13 +948,10 @@ object Dedup {
   def embeddingCosineCapped(embeddings: DataFrame, idCol: String,
       vecCol: String, bucketCol: String, threshold: Double = 0.95,
       maxBucket: Int = 1 << 12): (DataFrame, DataFrame) = {
-    require(maxBucket >= 1, s"maxBucket must be positive, got $maxBucket")
     val v = embeddings.select(col(idCol).as("vid"), col(bucketCol).as("bkt"),
       col(vecCol).as("vec"))
-    val hot = v.groupBy(col("bkt")).agg(count(lit(1)).as("n_rows"))
-      .filter(col("n_rows") > maxBucket)
-      .localCheckpoint(true)
-    val kept = v.join(broadcast(hot.select(col("bkt"))), Seq("bkt"), "left_anti")
+    val hot = Buckets.hot(v, Seq("bkt"), maxBucket, "n_rows")
+    val kept = Buckets.drop(v, hot, Seq("bkt"))
     val a = kept.select(col("bkt"), col("vid").as("id_a"), col("vec").as("vec_a"))
     val b = kept.select(col("bkt"), col("vid").as("id_b"), col("vec").as("vec_b"))
     val pairs = a.join(b, Seq("bkt"))

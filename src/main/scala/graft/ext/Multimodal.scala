@@ -1,10 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
-  LogicalPlan, Project}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -101,24 +97,19 @@ object Multimodal {
     * a 256× bigger constant — measured 22× wall growth for 10× docs
     * before this design). Every candidate is verified by exact
     * hamming. With `maxBucket` set, hot (chunk, key) buckets are
-    * SKIPPED and reported; a pair is missed only if at EVERY
-    * qualifying chunk (equal at radius ≤ 3; within 1 bit at 4–7)
-    * BOTH endpoints' exact-value buckets are hot (both orientations
-    * of the exact×probe meeting are kept and least/greatest-
-    * normalized, so one cold endpoint bucket rescues the pair), and
-    * pairs are never invented.
+    * dropped and reported by the family's governance rule
+    * ([[Buckets]]); a pair is missed only if at EVERY qualifying chunk
+    * (equal at radius ≤ 3; within 1 bit at 4–7) BOTH endpoints'
+    * exact-value buckets are hot (both orientations of the exact×probe
+    * meeting are kept and least/greatest-normalized, so one cold
+    * endpoint bucket rescues the pair).
     *
     * Input cut: the projected (id, hash) input is read several times
-    * (bucket histogram, both join sides), so it is materialized once
-    * with an eager `localCheckpoint` — unless its analyzed plan is
-    * already cheap to re-read: only projections whose every output is
-    * an attribute or an alias of one, and filters with a deterministic
-    * condition, over a leaf that is an eagerly checkpointed
-    * `LogicalRDD` or a `LocalRelation`. A caller that feeds several
-    * screens from one expensive pipeline (a media decode, a class
-    * aggregate) cuts it once itself; the operator sees that cut in
-    * the plan and adds none. With `maxBucket` set, the hot-bucket
-    * set is always cut once.
+    * (bucket histogram, both join sides), so it goes through the
+    * family's cut rule ([[Buckets.cutOnce]]). A caller that feeds
+    * several screens from one expensive pipeline (a media decode, a
+    * class aggregate) cuts it once itself; the operator sees that cut
+    * in the plan and adds none.
     *
     * @return (pairs (id_a, id_b, hamming), overflow (chunk, cval,
     *         n_ids) per skipped bucket)
@@ -129,40 +120,27 @@ object Multimodal {
       maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
       : (DataFrame, DataFrame) = {
     import graft.functions.{HashFunctions => H}
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"pigeonhole + 1-bit multi-probe covers hamming <= 7, got $maxHamming")
-    require(maxBucket.forall(_ >= 1), s"maxBucket must be positive: $maxBucket")
-    val hashed = cutOnce(df.select(col(idCol).as("id"), col(hashCol).as("ph"))
-      .filter(col("ph").isNotNull))
+    Buckets.check(maxHamming, maxBucket)
+    val hashed = Buckets.cutOnce(df.select(col(idCol).as("id"),
+      col(hashCol).as("ph")).filter(col("ph").isNotNull))
     val allChunked = hashed.select(col("id"), col("ph"),
       posexplode(H.simhashChunks(col("ph"))).as(Seq("chunk", "cval")))
-    val (dropHot, overflow) = maxBucket match {
-      case Some(cap) =>
-        val hot = allChunked.groupBy(col("chunk"), col("cval"))
-          .agg(count(lit(1)).as("n_ids"))
-          .filter(col("n_ids") > cap)
-          .localCheckpoint(true)
-        val hotKeys = hot.select(col("chunk"), col("cval"))
-        ((df2: DataFrame) => df2.join(broadcast(hotKeys),
-          Seq("chunk", "cval"), "left_anti"), hot)
-      case None =>
-        // UNGOVERNED exact surface: pre-audit the projected candidate
-        // mass before committing to the quadratic join (round-17
-        // verdict item 2 — the x3 1000× lesson: the caller should not
-        // have to KNOW the corpus is hot-structured to avoid filling
-        // the disk; the engine measures and refuses with the recipe)
-        val probeFactor = if (maxHamming <= 3) 1L else 17L
-        auditUngoverned(
-          allChunked.groupBy(col("chunk"), col("cval"))
-            .agg(count(lit(1)).as("width"))
-            .select(col("chunk"), col("cval"), col("width"),
-              (col("width") * col("width") * lit(probeFactor)).as("mass")),
-          bound = maxProjectedCandidates,
-          surface = "hashNearDup (ungoverned)")
-        val spark = df.sparkSession
-        import spark.implicits._
-        (identity[DataFrame] _,
-          Seq.empty[(Int, Long, Long)].toDF("chunk", "cval", "n_ids"))
+    val (dropHot, overflow) = Buckets.govern(allChunked,
+      Seq("chunk", "cval"), maxBucket, "n_ids")
+    if (maxBucket.isEmpty) {
+      // UNGOVERNED exact surface: pre-audit the projected candidate
+      // mass before committing to the quadratic join (round-17
+      // verdict item 2 — the x3 1000× lesson: the caller should not
+      // have to KNOW the corpus is hot-structured to avoid filling
+      // the disk; the engine measures and refuses with the recipe)
+      val probeFactor = if (maxHamming <= 3) 1L else 17L
+      auditUngoverned(
+        allChunked.groupBy(col("chunk"), col("cval"))
+          .agg(count(lit(1)).as("width"))
+          .select(col("chunk"), col("cval"), col("width"),
+            (col("width") * col("width") * lit(probeFactor)).as("mass")),
+        bound = maxProjectedCandidates,
+        surface = "hashNearDup (ungoverned)")
     }
     val chunked = dropHot(allChunked)
     val a = chunked.select(col("chunk"), col("cval"), col("id").as("id_a"),
@@ -240,10 +218,10 @@ object Multimodal {
     * candidate mass of any surviving bucket is genuinely bounded by
     * bL·bR_ball ≤ (maxBucket/2)², tighter than the unipartite cap's
     * bound, at the cost of skipping some buckets whose product is
-    * small (e.g. 1×maxBucket). Same drop-and-report contract.
+    * small (e.g. 1×maxBucket). Same governance rule ([[Buckets]]).
     * Ids are NOT compared across sides (the two corpora own separate
     * id spaces; an equal id is two different documents). Each side
-    * gets [[hashNearDupCapped]]'s input cut rule on its own.
+    * gets the input cut rule ([[Buckets.cutOnce]]) on its own.
     *
     * @return (pairs (id_a ∈ left, id_b ∈ right, hamming),
     *         overflow (chunk, cval, n_ids) per skipped bucket)
@@ -254,11 +232,9 @@ object Multimodal {
       maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
       : (DataFrame, DataFrame) = {
     import graft.functions.{HashFunctions => H}
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"pigeonhole + 1-bit multi-probe covers hamming <= 7, got $maxHamming")
-    require(maxBucket.forall(_ >= 1), s"maxBucket must be positive: $maxBucket")
+    Buckets.check(maxHamming, maxBucket)
     def chunked(df: DataFrame, ic: String, hc: String): DataFrame =
-      cutOnce(df.select(col(idCol).as(ic), col(hashCol).as(hc))
+      Buckets.cutOnce(df.select(col(idCol).as(ic), col(hashCol).as(hc))
         .filter(col(hc).isNotNull))
         .select(col(ic), col(hc),
           posexplode(H.simhashChunks(col(hc))).as(Seq("chunk", "cval")))
@@ -270,45 +246,35 @@ object Multimodal {
     val rb = if (maxHamming <= 3) rbExact
       else rbExact.select(col("chunk"), col("id_b"), col("ph_b"),
         explode(H.oneBitBall(col("cval"))).as("cval"))
-    val (laK, rbK, overflow) = maxBucket match {
-      case Some(cap) =>
-        // hotness on the keys that actually MEET in the join: the
-        // left side's exact chunk keys + the right side's probe keys
-        // (ball-exploded 17× at radius 4–7, exact at ≤ 3) — so a
-        // bucket's reported n_ids IS its candidate mass (bL + bR_ball,
-        // bounding bL·bR_ball ≤ (cap/2)²), the same ball-counted
-        // accounting StreamNearDup.screenAgainst uses. Counting only
-        // exact keys would let a surviving bucket carry ~17× the
-        // documented mass at radius 4–7.
-        val hot = la.select(col("chunk"), col("cval"))
-          .unionByName(rb.select(col("chunk"), col("cval")))
-          .groupBy(col("chunk"), col("cval"))
-          .agg(count(lit(1)).as("n_ids"))
-          .filter(col("n_ids") > cap)
-          .localCheckpoint(true)
-        val hotKeys = broadcast(hot.select(col("chunk"), col("cval")))
-        (la.join(hotKeys, Seq("chunk", "cval"), "left_anti"),
-          rb.join(hotKeys, Seq("chunk", "cval"), "left_anti"), hot)
-      case None =>
-        // ungoverned bipartite: exact projected join mass — the two
-        // sides' histograms joined on the bucket key (rb is already
-        // ball-exploded at radius 4–7, so no probe factor)
-        val hL = la.groupBy(col("chunk"), col("cval"))
-          .agg(count(lit(1)).as("bl"))
-        val hR = rb.groupBy(col("chunk"), col("cval"))
-          .agg(count(lit(1)).as("br"))
-        auditUngoverned(
-          hL.join(hR, Seq("chunk", "cval"))
-            .select(col("chunk"), col("cval"),
-              (col("bl") + col("br")).as("width"),
-              (col("bl") * col("br")).as("mass")),
-          bound = maxProjectedCandidates,
-          surface = "hashNearDupAgainst (ungoverned)")
-        val spark = left.sparkSession
-        import spark.implicits._
-        (la, rb, Seq.empty[(Int, Long, Long)].toDF("chunk", "cval", "n_ids"))
+    // hotness on the keys that actually MEET in the join: the left
+    // side's exact chunk keys + the right side's probe keys
+    // (ball-exploded 17× at radius 4–7, exact at ≤ 3) — so a bucket's
+    // reported n_ids IS its candidate mass (bL + bR_ball, bounding
+    // bL·bR_ball ≤ (cap/2)²), the same ball-counted accounting
+    // StreamNearDup.screenAgainst uses. Counting only exact keys would
+    // let a surviving bucket carry ~17× the documented mass at radius
+    // 4–7.
+    val (dropHot, overflow) = Buckets.govern(
+      la.select(col("chunk"), col("cval"))
+        .unionByName(rb.select(col("chunk"), col("cval"))),
+      Seq("chunk", "cval"), maxBucket, "n_ids")
+    if (maxBucket.isEmpty) {
+      // ungoverned bipartite: exact projected join mass — the two
+      // sides' histograms joined on the bucket key (rb is already
+      // ball-exploded at radius 4–7, so no probe factor)
+      val hL = la.groupBy(col("chunk"), col("cval"))
+        .agg(count(lit(1)).as("bl"))
+      val hR = rb.groupBy(col("chunk"), col("cval"))
+        .agg(count(lit(1)).as("br"))
+      auditUngoverned(
+        hL.join(hR, Seq("chunk", "cval"))
+          .select(col("chunk"), col("cval"),
+            (col("bl") + col("br")).as("width"),
+            (col("bl") * col("br")).as("mass")),
+        bound = maxProjectedCandidates,
+        surface = "hashNearDupAgainst (ungoverned)")
     }
-    val pairs = laK.join(rbK, Seq("chunk", "cval"))
+    val pairs = dropHot(la).join(dropHot(rb), Seq("chunk", "cval"))
       .select(col("id_a"), col("id_b"), col("ph_a"), col("ph_b"))
       .dropDuplicates("id_a", "id_b")
       .select(col("id_a"), col("id_b"),
@@ -319,9 +285,8 @@ object Multimodal {
 
   /** [[hashNearDupAgainstCapped]] without the cap. A caller whose two
     * sides share one expensive scan-side pipeline (media decode)
-    * checkpoints THAT once and passes filters of it: by
-    * [[hashNearDupCapped]]'s input cut rule neither side is cut
-    * again — one decode wave instead of two sequential per-side
+    * checkpoints THAT once and passes filters of it: by the input cut
+    * rule ([[Buckets.cutOnce]]) neither side is cut again — one decode wave instead of two sequential per-side
     * jobs. */
   def hashNearDupAgainst(left: DataFrame, right: DataFrame, idCol: String,
       hashCol: String, maxHamming: Int = 3,
@@ -329,24 +294,6 @@ object Multimodal {
       : DataFrame =
     hashNearDupAgainstCapped(left, right, idCol, hashCol, maxHamming,
       maxBucket = None, maxProjectedCandidates)._1
-
-  /** [[hashNearDupCapped]]'s input cut rule. */
-  private def cutOnce(df: DataFrame): DataFrame = {
-    def materialized(plan: LogicalPlan): Boolean = plan match {
-      case Project(outputs, child) =>
-        outputs.forall {
-          case _: Attribute | Alias(_: Attribute, _) => true
-          case _ => false
-        } && materialized(child)
-      case Filter(condition, child) =>
-        condition.deterministic && materialized(child)
-      case leaf: LogicalRDD => leaf.rdd.isCheckpointed
-      case _: LocalRelation => true
-      case _ => false
-    }
-    if (materialized(df.queryExecution.analyzed)) df
-    else df.localCheckpoint(true)
-  }
 
   /** Image near-duplicate detection: perceptual dHash over the REAL
     * decoded pixel plane ([[PixelDecode.imageDHashAny]] — magic-sniff

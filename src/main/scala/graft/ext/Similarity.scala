@@ -103,76 +103,6 @@ object Similarity {
     centroids
   }
 
-  /** Distributed IVF centroid training: the same deterministic sample
-    * and Lloyd iterations as [[trainCentroids]], but the expensive
-    * assign-and-sum step runs as a `treeAggregate` over the cluster —
-    * NOTHING corpus-sized (or sample-sized) ever crosses the driver;
-    * each iteration moves exactly one k×dim sum matrix + k counts up
-    * the tree, and only the k seed rows are collected for init. Use
-    * this past the driver path's comfort zone (large k·dim, or a
-    * sample too big to hold driver-side); the driver path stays the
-    * default for small k. Results match [[trainCentroids]] on the same
-    * sample up to floating-point reduction order (the tree combines
-    * partials in a different order than the driver's sequential fold).
-    */
-  def trainCentroidsDistributed(corpus: DataFrame, vecCol: String, k: Int,
-      orderCol: String, iters: Int = 5,
-      sampleN: Int = 2048): Array[Array[Double]] = {
-    require(k >= 1, s"k must be positive: $k")
-    // materialize the ordered sample ONCE, before anything reads it:
-    // collecting seeds off the un-checkpointed frame would run the
-    // corpus-wide scan + TakeOrdered twice (once for the seeds, again
-    // for the checkpoint) — the most expensive step of the call
-    val sample = corpus.select(col(vecCol).as("v"), col(orderCol).as("o"))
-      .orderBy(col("o")).limit(sampleN)
-      .localCheckpoint(true)
-    // bounded collect: k seed rows only (the same first-k-in-order rule
-    // as the driver path, so both paths are deterministic and comparable)
-    val seeds = sample.orderBy(col("o")).limit(k).collect().map(rowVec)
-    require(seeds.length >= k, s"sample ${seeds.length} < k=$k")
-    val vecs = sample.select(col("v")).rdd.map(rowVec)
-    var centroids = seeds.map(_.clone())
-    val dim = centroids(0).length
-    val sc = corpus.sparkSession.sparkContext
-    for (_ <- 0 until iters) {
-      val bc = sc.broadcast(centroids)
-      val zero = (Array.fill(k)(new Array[Double](dim)), new Array[Long](k))
-      val (sums, counts) = vecs.treeAggregate(zero)(
-        seqOp = { case ((s, n), v) =>
-          val cs = bc.value
-          var best = 0
-          var bestD = Double.MaxValue
-          var c = 0
-          while (c < k) {
-            var d = 0.0
-            var i = 0
-            while (i < dim) { val t = v(i) - cs(c)(i); d += t * t; i += 1 }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          n(best) += 1
-          var i = 0
-          while (i < dim) { s(best)(i) += v(i); i += 1 }
-          (s, n)
-        },
-        combOp = { case ((s1, n1), (s2, n2)) =>
-          var c = 0
-          while (c < k) {
-            n1(c) += n2(c)
-            var i = 0
-            while (i < dim) { s1(c)(i) += s2(c)(i); i += 1 }
-            c += 1
-          }
-          (s1, n1)
-        })
-      bc.destroy()
-      centroids = Array.tabulate(k)(c =>
-        if (counts(c) == 0) centroids(c)
-        else sums(c).map(_ / counts(c)))
-    }
-    centroids
-  }
-
   /** IVF ANN: corpus assigned to its nearest centroid (one scan, no
     * shuffle); queries probe their nProbe nearest centroid lists. The
     * join key is the coarse bucket, so search cost is

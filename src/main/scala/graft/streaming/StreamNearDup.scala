@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+
+import graft.ext.Buckets
 
 /** [EXT]/T5 — STREAMING near-duplicate detection over a 64-bit
   * perceptual/sketch hash column: the incremental counterpart of
@@ -103,9 +105,7 @@ object StreamNearDup {
     * leans on the per-bucket cap.) */
   def pairs(ds: Dataset[HashedDoc], maxHamming: Int = 3,
       maxBucket: Int = 4096): Dataset[NearDupPair] = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"pigeonhole covers hamming <= 7 (8x8-bit chunks), got $maxHamming")
-    require(maxBucket >= 1, s"maxBucket must be positive: $maxBucket")
+    Buckets.check(maxHamming, Some(maxBucket))
     val nChunks = chunksFor(maxHamming)
     val spark = ds.sparkSession
     import spark.implicits._
@@ -157,7 +157,7 @@ object StreamNearDup {
     * O(|hot|) per candidate row and embeds every key in the plan —
     * fine for a handful of hot buckets, a plan-size and per-row-cost
     * blowup on a reference with many. */
-  private[streaming] val HotKeyLiteralMax = 1024
+  private val HotKeyLiteralMax = 1024
 
   /** STREAMING bipartite screen against a FROZEN reference corpus —
     * online decontamination: every arrival is checked against a fixed
@@ -181,11 +181,10 @@ object StreamNearDup {
     * side is fully known up front; arrival-side frequency is
     * unknowable without state, which this mode exists to avoid).
     * Buckets holding more than `maxBucket` reference members are
-    * dropped from the join and reported in the returned overflow
-    * frame — so one arrival costs at most 4 × maxBucket comparisons,
-    * and a pair is missed only if ALL its equal chunks are
-    * reference-hot (the [[graft.ext.Multimodal.hashNearDupAgainstCapped]]
-    * drop-and-report contract).
+    * dropped from the join and reported by the family's governance
+    * rule (`graft.ext.Buckets`) — so one arrival costs at most
+    * 4 × maxBucket comparisons, and a pair is missed only if ALL its
+    * equal chunks are reference-hot.
     *
     * Redelivery: stateless ⇒ a redelivered arrival re-emits its
     * pairs. Run effectively-once delivery into this operator or
@@ -196,20 +195,14 @@ object StreamNearDup {
     * @param reference frozen corpus: `idCol`, `hashCol` (batch frame)
     * @param arrivals  streaming (or batch) frame with `idCol`,
     *                  `hashCol`
-    * @param hotKeyLiteralMax regime switch (tests inject 0 to force
-    *        the broadcast-set path on small fixtures; production
-    *        callers keep the default)
     * @return (pairs (id_a, id_b, hamming) — streaming when `arrivals`
     *         is, append-safe; overflow (chunk, cval, n_ids) — batch)
     */
   def screenAgainst(reference: DataFrame, arrivals: DataFrame,
       idCol: String, hashCol: String, maxHamming: Int = 3,
-      maxBucket: Option[Int] = None,
-      hotKeyLiteralMax: Int = HotKeyLiteralMax): (DataFrame, DataFrame) = {
+      maxBucket: Option[Int] = None): (DataFrame, DataFrame) = {
     import graft.functions.{HashFunctions => H}
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"pigeonhole + 1-bit multi-probe covers hamming <= 7, got $maxHamming")
-    require(maxBucket.forall(_ >= 1), s"maxBucket must be positive: $maxBucket")
+    Buckets.check(maxHamming, maxBucket)
     // per-chunk tolerance: equal chunks at radius ≤ 3; at 4–7 the
     // STATIC reference explodes each chunk's 17-key 1-bit ball (paid
     // once — the stream side stays at 4 exact keys per arrival), and a
@@ -220,8 +213,6 @@ object StreamNearDup {
         .filter(col(hc).isNotNull)
         .select(col(ic), col(hc),
           posexplode(H.simhashChunks(col(hc))).as(Seq("chunk", "cval")))
-    val spark = reference.sparkSession
-    import spark.implicits._
     val refExact = chunked(reference, "id_b", "ph_b")
     val refAll = if (tol == 0) refExact
       else refExact.select(col("chunk"), col("id_b"), col("ph_b"),
@@ -237,31 +228,23 @@ object StreamNearDup {
     //  - above it: one broadcast hash set probed by a lightweight UDF
     //    — O(1) per lookup, constant plan size, the same broadcast the
     //    batch operator's left_anti join ships.
-    val (isHot, overflow) = maxBucket match {
-      case Some(cap) =>
-        val hot = refAll.groupBy(col("chunk"), col("cval"))
-          .agg(count(lit(1)).as("n_ids"))
-          .filter(col("n_ids") > cap)
-          .localCheckpoint(true)
-        val rows = hot.select(col("chunk"), col("cval")).collect()
-        val fn: (Int, Column) => Column =
-          if (rows.length <= hotKeyLiteralMax) {
-            val byChunk = (0 until 4).map(c =>
-              rows.filter(_.getInt(0) == c).map(_.getLong(1)).sorted.toSeq)
-            (c, cval) =>
-              if (byChunk(c).isEmpty) lit(false)
-              else array_contains(typedLit(byChunk(c)), cval)
-          } else {
-            val set = spark.sparkContext.broadcast(
-              rows.map(r => (r.getInt(0), r.getLong(1))).toSet)
-            val probe = udf((c: Int, v: Long) => set.value.contains((c, v)))
-            (c, cval) => probe(lit(c), cval)
-          }
-        (fn, hot)
-      case None =>
-        (((_: Int, _: Column) => lit(false)): (Int, Column) => Column,
-          Seq.empty[(Int, Long, Long)].toDF("chunk", "cval", "n_ids"))
-    }
+    val (_, overflow) = Buckets.govern(refAll, Seq("chunk", "cval"),
+      maxBucket, "n_ids")
+    val rows = if (maxBucket.isEmpty) Array.empty[Row]
+      else overflow.select(col("chunk"), col("cval")).collect()
+    val isHot: (Int, Column) => Column =
+      if (rows.length <= HotKeyLiteralMax) {
+        val byChunk = (0 until 4).map(c =>
+          rows.filter(_.getInt(0) == c).map(_.getLong(1)).sorted.toSeq)
+        (c, cval) =>
+          if (byChunk(c).isEmpty) lit(false)
+          else array_contains(typedLit(byChunk(c)), cval)
+      } else {
+        val set = reference.sparkSession.sparkContext.broadcast(
+          rows.map(r => (r.getInt(0), r.getLong(1))).toSet)
+        val probe = udf((c: Int, v: Long) => set.value.contains((c, v)))
+        (c, cval) => probe(lit(c), cval)
+      }
     def chunkOf(h: Column, c: Int): Column =
       shiftrightunsigned(h, 16 * c).bitwiseAND(lit(0xffffL))
     def hotHere(df: DataFrame): DataFrame = df.filter(!(0 until 4)

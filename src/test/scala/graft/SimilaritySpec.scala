@@ -47,35 +47,30 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("distributed Lloyd matches the driver path; only k×dim crosses the driver") {
+  test("driver Lloyd: k×dim centroids drive ivfTopK; never-assigned seeds stay put") {
     val k = 4
-    val driver = Similarity.trainCentroids(corpus, "embedding", k,
+    val cents = Similarity.trainCentroids(corpus, "embedding", k,
       "vec_id", iters = 5, sampleN = 128)
-    val dist = Similarity.trainCentroidsDistributed(corpus, "embedding", k,
+    assert(cents.length === k && cents.forall(_.length === dim))
+    // deterministic: the same sample and seeds give the same centroids
+    // and the same ivfTopK answer
+    val again = Similarity.trainCentroids(corpus, "embedding", k,
       "vec_id", iters = 5, sampleN = 128)
-    assert(dist.length === k && dist.forall(_.length === dim))
-    // same seeds, same sample, same iteration count: centroids agree to
-    // fp reduction-order noise (the tree combines partials in a
-    // different order than the driver's sequential fold)
-    for (c <- 0 until k; d <- 0 until dim)
-      assert(math.abs(dist(c)(d) - driver(c)(d)) < 1e-9,
-        s"centroid $c dim $d: ${dist(c)(d)} vs ${driver(c)(d)}")
-    // the distributed result must drive ivfTopK identically
+    assert(cents.map(_.toSeq).toSeq === again.map(_.toSeq).toSeq)
     val qs = corpus.filter(col("vec_id") < 5)
-    val a = Similarity.ivfTopK(corpus, qs, "vec_id", "embedding", driver,
-      nProbe = 2, k = 3).as[(Long, Long, Long, Double)].collect().toSet
-    val b = Similarity.ivfTopK(corpus, qs, "vec_id", "embedding", dist,
-      nProbe = 2, k = 3).as[(Long, Long, Long, Double)].collect().toSet
-    assert(a === b)
-    // empty-cluster rule matches the driver path: k > distinct points
-    // leaves the never-assigned seeds untouched on BOTH paths
-    val tiny = corpus.filter(col("vec_id") < 3)
-    val d2 = Similarity.trainCentroids(tiny, "embedding", 3, "vec_id",
+    val a = Similarity.ivfTopK(corpus, qs, "vec_id", "embedding", cents,
+      nProbe = 2, k = 3).as[(Long, Long, Long, Double)].collect()
+    assert(a.nonEmpty && a.forall(r => r._3 >= 1L && r._3 <= 3L))
+    // empty-cluster rule: seeds (v0, v0, v1) — both v0 points go to
+    // centroid 0 (lowest index wins the tie), so centroid 1 is never
+    // assigned and keeps its seed; no centroid moves
+    val v0 = Seq.fill(dim)(0.5f)
+    val v1 = Seq.fill(dim)(-0.5f)
+    val tiny = Seq((1L, v0), (2L, v0), (3L, v1)).toDF("vec_id", "embedding")
+    val t = Similarity.trainCentroids(tiny, "embedding", 3, "vec_id",
       iters = 3, sampleN = 3)
-    val t2 = Similarity.trainCentroidsDistributed(tiny, "embedding", 3,
-      "vec_id", iters = 3, sampleN = 3)
-    for (c <- 0 until 3; d <- 0 until dim)
-      assert(math.abs(d2(c)(d) - t2(c)(d)) < 1e-9)
+    for ((want, c) <- Seq(v0, v0, v1).zipWithIndex; d <- 0 until dim)
+      assert(math.abs(t(c)(d) - want(d)) < 1e-9, s"centroid $c dim $d")
   }
 
   test("nearestCentroids: ascending L2 order, lowest index wins ties, reference-object codegen") {
@@ -280,9 +275,6 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.trainCentroids(dCorpus, "embedding", 3, "vec_id",
       sampleN = 64)
     assert(cents.length === 3 && cents(0).length === dim)
-    val distCents = Similarity.trainCentroidsDistributed(dCorpus,
-      "embedding", 3, "vec_id", sampleN = 64)
-    assert(distCents.length === 3)
     val e = intercept[IllegalArgumentException](
       Similarity.trainCentroids(dCorpus, "embedding", 0, "vec_id"))
     assert(e.getMessage.contains("k"))

@@ -129,32 +129,51 @@ class StreamBipartiteScreenSpec extends SparkSpec {
   }
 
   test("broadcast-set regime (hot keys > literal max) emits the identical pairs and overflow") {
-    // the two hotness regimes — per-chunk literal arrays vs one
-    // broadcast hash set probed by a UDF — must be observationally
-    // identical; the spec forces the UDF regime onto the same small
-    // fixtures by injecting hotKeyLiteralMax = 0 and replays the two
-    // cap scenarios above
-    val refB = H0 ^ (1L << 17)
-    for ((ref, arrivals, cap) <- Seq(
-      (refDf((100L, H0), (101L, refB)), Seq((1L, H0)), 1),
-      (refDf((100L, H0), (101L, H0), (102L, H0)), Seq((1L, H0)), 2))) {
-      val (pLit, oLit) = StreamNearDup.screenAgainst(ref,
-        arrivals.toDF("id", "ph"), "id", "ph", maxBucket = Some(cap))
-      val (pSet, oSet) = StreamNearDup.screenAgainst(ref,
-        arrivals.toDF("id", "ph"), "id", "ph", maxBucket = Some(cap),
-        hotKeyLiteralMax = 0)
-      assert(pSet.as[(Long, Long, Long)].collect().toSet ===
-        pLit.as[(Long, Long, Long)].collect().toSet, s"pairs (cap=$cap)")
-      assert(oSet.as[(Int, Long, Long)].collect().toSet ===
-        oLit.as[(Int, Long, Long)].collect().toSet, s"overflow (cap=$cap)")
-      // plan pin: the literal regime embeds hot keys in the plan
-      // (array_contains over literals), the broadcast-set regime must
-      // NOT — its plan stays constant-size however many keys are hot
-      val litPlan = pLit.queryExecution.executedPlan.toString
-      val setPlan = pSet.queryExecution.executedPlan.toString
-      assert(litPlan.contains("array_contains"), "literal regime plan")
-      assert(!setPlan.contains("array_contains"), "broadcast-set regime plan")
-    }
+    // a reference with more than 1024 hot buckets drives the UDF
+    // regime: at cap 1, 300 pairs of identical hashes make 1200 hot
+    // (chunk, value) buckets. Near copies of 50 twins differ in chunk 1
+    // only (three hot buckets, one cold); the pairs and the overflow
+    // must equal a brute-force oracle of the drop-and-report contract
+    val rnd = new scala.util.Random(1207)
+    val twins = Seq.fill(300)(rnd.nextLong())
+    val nearTwins = twins.take(50).map(_ ^ (1L << (16 + rnd.nextInt(16))))
+    val singles = Seq.fill(200)(rnd.nextLong())
+    val ref = (twins.flatMap(h => Seq(h, h)) ++ nearTwins ++ singles)
+      .zipWithIndex.map { case (h, i) => (1000L + i, h) }
+    val arrivals = (twins.take(20) ++ nearTwins.map(_ ^ 1L) ++
+      singles.take(100).map(_ ^ (1L << 40)) ++ Seq.fill(30)(rnd.nextLong()))
+      .zipWithIndex.map { case (h, i) => (i.toLong, h) }
+    val cap = 1
+    val (pairsDf, overflow) = StreamNearDup.screenAgainst(refDf(ref: _*),
+      arrivals.toDF("id", "ph"), "id", "ph", maxBucket = Some(cap))
+
+    def chunk(h: Long, c: Int): Long = (h >>> (16 * c)) & 0xffffL
+    val width = ref
+      .flatMap { case (_, h) => (0 until 4).map(c => (c, chunk(h, c))) }
+      .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    val hot = width.filter(_._2 > cap)
+    assert(hot.size > 1024, "the fixture must exceed the literal regime")
+    val near = for ((a, ha) <- arrivals; (b, hb) <- ref;
+        ham = java.lang.Long.bitCount(ha ^ hb) if ham <= 3)
+      yield (a, b, ham.toLong, (0 until 4).exists(c =>
+        chunk(ha, c) == chunk(hb, c) && !hot.contains((c, chunk(ha, c)))))
+    val want = near.filter(_._4).map(p => (p._1, p._2, p._3)).sorted
+    assert(want.nonEmpty && near.exists(!_._4),
+      "the fixture must yield both kept and dropped pairs")
+    // sorted sequences, not sets: each pair is emitted exactly once
+    assert(pairsDf.as[(Long, Long, Long)].collect().toSeq.sorted === want)
+    assert(overflow.as[(Int, Long, Long)].collect().toSet ===
+      hot.map { case ((c, v), n) => (c, v, n) }.toSet)
+    // plan pin: the literal regime embeds hot keys in the plan
+    // (array_contains over literals), the broadcast-set regime must
+    // NOT — its plan stays constant-size however many keys are hot
+    val (pLit, _) = StreamNearDup.screenAgainst(
+      refDf((100L, H0), (101L, H0)), Seq((1L, H0)).toDF("id", "ph"),
+      "id", "ph", maxBucket = Some(1))
+    assert(pLit.queryExecution.executedPlan.toString.contains("array_contains"),
+      "literal regime plan")
+    assert(!pairsDf.queryExecution.executedPlan.toString.contains("array_contains"),
+      "broadcast-set regime plan")
   }
 
   test("radius-7 screen streams with ZERO state; pairs at hamming 4-7 arrive once") {
