@@ -44,42 +44,63 @@ object Retrieval {
     */
   def bm25(df: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val q = termBag(terms)
+    require(k1 >= 0 && b >= 0 && b <= 1, s"invalid BM25 params k1=$k1 b=$b")
+    val perDoc = termFreqs(df, idCol, textCol, q)
+    okapi(perDoc, corpusStats(perDoc, q.size), idCol, q.indices, k1, b)
+  }
+
+  /** The query bag a scorer matches: lowercased; empty bags, empty
+    * terms and duplicates rejected. */
+  private def termBag(terms: Seq[String]): Seq[String] = {
     val q = terms.map(_.toLowerCase)
     require(q.nonEmpty, "at least one query term required")
     require(q.forall(_.nonEmpty), "empty query term")
     require(q.distinct == q, s"duplicate query terms in $terms")
-    require(k1 >= 0 && b >= 0 && b <= 1, s"invalid BM25 params k1=$k1 b=$b")
+    q
+  }
 
+  /** One scan over the corpus: (id, `__dl` doc length, `__tf_i` per
+    * term), all array expressions over the same whitespace token list
+    * (single codegen stage, token list evaluated once per row).
+    * spreadScan: per-term tf arithmetic is the dominant scan-side
+    * cost; identity on a many-split corpus (guide §2.5). */
+  private def termFreqs(df: DataFrame, idCol: String, textCol: String,
+      terms: Seq[String]): DataFrame = {
     val toks = array_remove(split(lower(col(textCol)), "\\s+"), "")
-    def tfCol(i: Int) = col(s"__tf_$i")
-    // pass shape shared by both scans: doc length + one tf per term,
-    // all array expressions over the same token list (single codegen
-    // stage, token list evaluated once per row)
-    // spreadScan: per-term tf arithmetic is the dominant scan-side
-    // cost; identity on a many-split corpus (guide §2.5)
-    val perDoc = graft.operators.Scale.spreadScan(df, col(idCol)).select(
+    graft.operators.Scale.spreadScan(df, col(idCol)).select(
       col(idCol) +: size(toks).cast("long").as("__dl") +:
-        q.zipWithIndex.map { case (t, i) =>
+        terms.zipWithIndex.map { case (t, i) =>
           // tf(t) = |toks| - |toks without t|: two ordinary array
           // expressions instead of a per-element interpreted lambda
           (size(toks) - size(array_remove(toks, t))).cast("long")
             .as(s"__tf_$i")
         }: _*)
+  }
 
-    // corpus statistics: one partial-aggregated job, one output row
+  private def tfCol(i: Int): Column = col(s"__tf_$i")
+
+  /** Corpus statistics over a [[termFreqs]] frame: one partial-
+    * aggregated job, one output row (N, avgdl, df per term). */
+  private def corpusStats(perDoc: DataFrame, nTerms: Int): DataFrame = {
     val statCols = count(lit(1)).as("__n") +: avg(col("__dl")).as("__avgdl") +:
-      q.indices.map(i => sum((tfCol(i) > 0).cast("long")).as(s"__df_$i"))
-    val stats = perDoc.agg(statCols.head, statCols.tail: _*)
+      (0 until nTerms).map(i => sum((tfCol(i) > 0).cast("long")).as(s"__df_$i"))
+    perDoc.agg(statCols.head, statCols.tail: _*)
+  }
 
-    val scored = perDoc.crossJoin(broadcast(stats))
-    val contributions = q.indices.map { i =>
+  /** (id, n_matched, score) of every document matching one query, whose
+    * terms are the `__tf_i` columns `idxs`, summed in that order (the
+    * IEEE addition order); the stats row joins by broadcast. */
+  private def okapi(perDoc: DataFrame, stats: DataFrame, idCol: String,
+      idxs: Seq[Int], k1: Double, b: Double): DataFrame = {
+    val contributions = idxs.map { i =>
       val idf = log(lit(1.0) +
         (col("__n") - col(s"__df_$i") + 0.5) / (col(s"__df_$i") + 0.5))
       idf * (tfCol(i) * (k1 + 1)) /
         (tfCol(i) + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / col("__avgdl")))
     }
-    val matched = q.indices.map(i => (tfCol(i) > 0).cast("int"))
-    scored
+    val matched = idxs.map(i => (tfCol(i) > 0).cast("int"))
+    perDoc.crossJoin(broadcast(stats))
       .select(col(idCol),
         matched.reduce(_ + _).cast("long").as("n_matched"),
         contributions.reduce(_ + _).as("score"))
@@ -125,46 +146,17 @@ object Retrieval {
     require(querySets.nonEmpty, "at least one query set required")
     require(querySets.map(_._1).distinct.size == querySets.size,
       s"duplicate query ids in ${querySets.map(_._1)}")
-    val qs = querySets.map { case (qid, terms) =>
-      val q = terms.map(_.toLowerCase)
-      require(q.nonEmpty, "at least one query term required")
-      require(q.forall(_.nonEmpty), "empty query term")
-      require(q.distinct == q, s"duplicate query terms in $terms")
-      qid -> q
-    }
+    val qs = querySets.map { case (qid, terms) => qid -> termBag(terms) }
     val allTerms = qs.flatMap(_._2).distinct
     val termIdx = allTerms.zipWithIndex.toMap
-    val toks = array_remove(split(lower(col(textCol)), "\\s+"), "")
-    def tfCol(i: Int) = col(s"__tf_$i")
     // ONE tokenize wave over the corpus for the whole query batch,
     // cut eagerly so each query's heap reads cached narrow rows
     // instead of re-running the scan-side tf arithmetic
-    val perDoc = graft.operators.Scale.spreadScan(df, col(idCol)).select(
-      col(idCol) +: size(toks).cast("long").as("__dl") +:
-        allTerms.zipWithIndex.map { case (t, i) =>
-          (size(toks) - size(array_remove(toks, t))).cast("long")
-            .as(s"__tf_$i")
-        }: _*)
-      .localCheckpoint(true)
-    val statCols = count(lit(1)).as("__n") +: avg(col("__dl")).as("__avgdl") +:
-      allTerms.indices.map(i => sum((tfCol(i) > 0).cast("long")).as(s"__df_$i"))
+    val perDoc = termFreqs(df, idCol, textCol, allTerms).localCheckpoint(true)
     // one stats job over the cached frame, shared by every query
-    val stats = perDoc.agg(statCols.head, statCols.tail: _*)
-      .localCheckpoint(true)
+    val stats = corpusStats(perDoc, allTerms.size).localCheckpoint(true)
     qs.map { case (qid, q) =>
-      val idxs = q.map(termIdx)
-      val contributions = idxs.map { i =>
-        val idf = log(lit(1.0) +
-          (col("__n") - col(s"__df_$i") + 0.5) / (col(s"__df_$i") + 0.5))
-        idf * (tfCol(i) * (k1 + 1)) /
-          (tfCol(i) + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / col("__avgdl")))
-      }
-      val matched = idxs.map(i => (tfCol(i) > 0).cast("int"))
-      perDoc.crossJoin(broadcast(stats))
-        .select(col(idCol),
-          matched.reduce(_ + _).cast("long").as("n_matched"),
-          contributions.reduce(_ + _).as("score"))
-        .filter(col("n_matched") > 0)
+      okapi(perDoc, stats, idCol, q.map(termIdx), k1, b)
         .orderBy(col("score").desc, col(idCol)).limit(k)
         .select(lit(qid).as("query_id"), col(idCol), col("n_matched"),
           col("score"))

@@ -10,21 +10,40 @@ import org.apache.spark.sql.functions._
   * 100 TB shape: each iteration is exactly two key shuffles — ranks
   * join edges on `src` (both sides hash-partitioned on the node id, so
   * consecutive iterations reuse the exchange) and the contribution sum
-  * groups by `dst`. The dangling mass and node count cross the driver
-  * plan as ONE-ROW aggregate frames broadcast back (`crossJoin
-  * (broadcast(...))`, the same shape as [[Decay.recencyScore]] /
-  * [[Scale]]); no collect, no per-node driver state. Out-degrees are
-  * computed once and reused by every iteration. For deep runs
-  * (`iterations` ≫ 10) pass `materializeEvery` so the lineage is cut
-  * with `localCheckpoint` instead of growing a plan Catalyst has to
-  * re-optimize per iteration — the same converge-or-bound discipline
-  * as [[graft.ext.Dedup.components]].
+  * groups by `dst`. The dangling mass crosses the plan as a ONE-ROW
+  * aggregate frame broadcast back (`crossJoin(broadcast(...))`, the
+  * same shape as [[Decay.recencyScore]] / [[Scale]]); no collect, no
+  * per-node driver state. Out-degrees are computed once and reused by
+  * every iteration, and every superstep but the last is cut with
+  * `localCheckpoint` — the same converge-or-bound discipline as
+  * [[graft.ext.Dedup.components]].
+  *
+  * One kernel: [[pageRank]] and [[personalizedPageRank]] share the
+  * adjacency build, the superstep and the loop; they differ only in
+  * the teleport distribution a mass is spread over (uniform 1/N, or
+  * 1/|S| on the seed set — Haveliwala's topic-sensitive PageRank).
   *
   * Reference scope: deimos has no graph analytics; this extends the
   * engine for crawl-curation work (domain authority, link spam) —
   * SURVEY.md §2.9.
   */
 object Graph {
+
+  /** The rank operators' static frames: the deduplicated edges, the
+    * edges with their source's out-degree, and the node frame (one row
+    * per node with its flags and `__dang`). All three are persisted;
+    * [[unpersist]] releases them. */
+  private[graft] final case class Adjacency(e: DataFrame, eDeg: DataFrame,
+      nodes: DataFrame) {
+    def unpersist(): Unit = {
+      e.unpersist(false)
+      eDeg.unpersist(false)
+      nodes.unpersist(false)
+    }
+  }
+
+  /** Spreads a mass over the teleport distribution, per node. */
+  private[graft] type Share = Column => Column
 
   /** Node ids keep the caller's type, so src and dst must share it: a
     * string/bigint mix would otherwise meet through implicit
@@ -38,31 +57,15 @@ object Graph {
       "to one node id type")
   }
 
-  /** PageRank over `edges` (srcCol → dstCol, duplicates allowed — they
-    * are distinct'd). Nodes = src ∪ dst. Uniform initial rank 1/N;
-    * per iteration
-    *   r'(v) = (1-d)/N + d * (Σ_{u→v} r(u)/deg(u) + D/N)
-    * where D is the total rank mass parked on dangling nodes (no
-    * out-edges) — the standard formulation, so Σ r stays 1 every
-    * iteration.
+  /** Builds the static frames both rank operators iterate over.
     *
-    * @param materializeEvery cut lineage with localCheckpoint every k
-    *        iterations. Default 1 — every superstep materializes, the
-    *        way any graph engine runs: a fully lazy chain re-executes
-    *        iteration k-1 inside BOTH the contribution join and the
-    *        dangling aggregate of iteration k, doubling the rank
-    *        subtree per level (O(2^iters) plan growth — a structural
-    *        fact of the two consumers; at bench scale the measured
-    *        difference is noise because the per-iteration frames are
-    *        tiny, but at depth or data scale the lazy chain is
-    *        unrunnable). 0 = never (plan-purity / tiny-graph option).
-    * @return (node, rank) — one row per node
+    * @param flag the operator's own left join onto the distinct node
+    *        set (a `node` column in, `node` plus boolean flag columns
+    *        out); a flag left NULL by the join reads false. Identity
+    *        for [[pageRank]], the seed flag for [[personalizedPageRank]].
     */
-  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, damping: Double = 0.85,
-      materializeEvery: Int = 1): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
+  private[graft] def adjacency(edges: DataFrame, srcCol: String,
+      dstCol: String, flag: DataFrame => DataFrame): Adjacency = {
     requireUniformIds(edges, srcCol, dstCol)
     // NULL endpoints drop: an edge with a null src/dst can't join
     // anything, but the null NODE it would mint still entered N and
@@ -84,10 +87,9 @@ object Graph {
     // for the static loop inputs: under AQE a checkpoint's LogicalRDD
     // reports UnknownPartitioning(0), so every iteration RE-SHUFFLED
     // the full edge frame (plan-verified round 17); InMemoryRelation
-    // preserves the cached plan's partitioning AND ordering. All
-    // static frames are unpersisted before returning, after the
-    // result is materialized. The count is the session's shuffle
-    // parallelism, so it scales with the deployment.
+    // preserves the cached plan's partitioning AND ordering. The count
+    // is the session's shuffle parallelism, so it scales with the
+    // deployment.
     // Node ids keep the CALLER's type (round-18, guide §2.3 "narrower
     // types"): the old unconditional cast("string") made every
     // superstep shuffle and the persisted adjacency carry wide strings
@@ -109,66 +111,49 @@ object Graph {
       .join(deg, Seq("__src"))
       .persist()
     // Round-17 superstep restructure (opt guide §2.4 "remove shuffles
-    // outright"): the rank frame CARRIES its node's static dangling
-    // flag, so the per-iteration dangling mass is a one-row aggregate
-    // over ranks — the old formulation's rank⋈danglingNodes semi join
-    // was a SortMergeJoin with two Exchanges EVERY iteration (both
-    // sides are checkpoint scans with no stats, so it never
-    // broadcast). The node frame is hash-partitioned on `node` and
-    // sorted before its one persist (InMemoryRelation preserves
-    // partitioning+ordering), so the per-iteration nodes⋈contrib join
-    // needs no nodes-side Exchange or Sort, and the contrib side
-    // arrives hash-partitioned by __dst from its own groupBy. Each
-    // superstep now plans exactly TWO exchanges (ranks→__src for the
-    // contribution join, contribution groupBy __dst) — the
-    // fundamental pair — instead of five. Same arithmetic, same
-    // addend sets; only the plan shape changed.
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct()
+    // outright"): the node frame CARRIES its static dangling flag, so
+    // the per-iteration dangling mass is a one-row aggregate over
+    // ranks — the old formulation's rank⋈danglingNodes semi join was a
+    // SortMergeJoin with two Exchanges EVERY iteration. The node frame
+    // is hash-partitioned on `node` and sorted before its one persist
+    // (InMemoryRelation preserves partitioning+ordering), so the
+    // per-iteration nodes⋈contrib join needs no nodes-side Exchange or
+    // Sort, and the contrib side arrives hash-partitioned by __dst
+    // from its own groupBy.
+    val flagged = flag(e.select(col("__src").as("node"))
+      .union(e.select(col("__dst").as("node"))).distinct())
+    val nodes = flagged
       .join(deg.select(col("__src").as("node"), lit(true).as("__out")),
         Seq("node"), "left")
-      .select(col("node"), col("__out").isNull.as("__dang"))
+      .select(col("node") +: flagged.columns.toSeq.filter(_ != "node")
+          .map(c => coalesce(col(c), lit(false)).as(c)) :+
+        col("__out").isNull.as("__dang"): _*)
       .repartition(nParts, col("node"))
       .sortWithinPartitions(col("node"))
       .persist()
-    // N is ONE scalar — collect it once rather than re-broadcasting a
-    // one-row frame into every iteration's plan (this also
-    // materializes the nodes cache)
-    val n = nodes.count()
-    var ranks = nodes.select(col("node"), col("__dang"),
-      (lit(1.0) / n).as("rank"))
-    for (i <- 1 to iterations) {
-      ranks = pageRankSuperstep(nodes, eDeg, ranks, n, damping)
-      if (materializeEvery > 0 && i % materializeEvery == 0 && i < iterations)
-        ranks = ranks.localCheckpoint()
-    }
-    // materialize BEFORE unpersisting the static frames the lazy tail
-    // still references — the caller gets a self-contained frame and
-    // the session cache stays clean (no leaked entries across calls)
-    val out = ranks.select(col("node"), col("rank")).localCheckpoint(true)
-    e.unpersist(false)
-    eDeg.unpersist(false)
-    nodes.unpersist(false)
-    out
+    Adjacency(e, eDeg, nodes)
   }
 
-  /** One PageRank superstep — factored so `GraphSuperstepPlanSpec` can
-    * pin the plan shape the loop executes (the loop itself runs behind
-    * eager checkpoints, invisible to a caller's explain):
-    *  - dangling mass: ONE-ROW aggregate over the rank frame (the rank
-    *    frame carries the static `__dang` flag — no per-iteration semi
-    *    join; sum skips non-dangling nulls, addend set identical);
+  /** One rank superstep over the static frames, for either operator:
+    *
+    *   r'(v) = share(1-d) + d * (Σ_{u→v} r(u)/deg(u) + share(D))
+    *
+    *  - dangling mass D: ONE-ROW aggregate over the rank frame (the
+    *    rank frame carries the static `__dang` flag — no per-iteration
+    *    semi join);
     *  - contribution join keyed `__src` against the persisted,
     *    pre-partitioned adjacency; contribution groupBy `__dst`;
     *  - rank rebuild: persisted pre-partitioned+sorted node frame
     *    LEFT-joined to contributions (no nodes-side exchange or sort).
     * Exactly two ShuffleExchanges per superstep — the fundamental
-    * pair (ranks→`__src`, groupBy `__dst`). */
-  private[graft] def pageRankSuperstep(nodes: DataFrame, eDeg: DataFrame,
-      ranks: DataFrame, n: Long, damping: Double): DataFrame = {
-    // mass parked on dangling nodes this iteration: one-row agg over
-    // the rank frame (sum skips the nulls of non-dangling nodes;
-    // addend set identical to the old semi-join formulation)
+    * pair (ranks→`__src`, groupBy `__dst`); `GraphSuperstepPlanSpec`
+    * pins it (the loop runs behind eager checkpoints, invisible to a
+    * caller's explain). The output keeps `nodes`' columns plus `rank`.
+    */
+  private[graft] def superstep(nodes: DataFrame, eDeg: DataFrame,
+      ranks: DataFrame, damping: Double, share: Share): DataFrame = {
+    // mass parked on dangling nodes this iteration: sum skips the
+    // nulls of non-dangling nodes
     val dangling = ranks
       .agg(coalesce(sum(when(col("__dang"), col("rank"))), lit(0.0))
         .as("__dm"))
@@ -180,11 +165,84 @@ object Graph {
     nodes
       .join(contrib, nodes("node") === contrib("__dst"), "left")
       .crossJoin(broadcast(dangling))
-      .select(col("node"), col("__dang"),
-        (lit(1.0 - damping) / n +
+      .select(nodes.columns.toSeq.map(col) :+
+        (share(lit(1.0 - damping)) +
           lit(damping) * (coalesce(col("__c"), lit(0.0)) +
-            col("__dm") / n)).as("rank"))
+            share(col("__dm")))).as("rank"): _*)
   }
+
+  /** The one rank loop: builds the [[adjacency]], lets `teleport` turn
+    * its node frame into the iterated one plus its [[Share]], starts
+    * from `share(1)`, runs `iterations` supersteps cut after every one
+    * but the last (a fully lazy chain re-executes iteration k-1 inside
+    * BOTH the contribution join and the dangling aggregate of
+    * iteration k — O(2^iters) plan growth), and materializes the
+    * result BEFORE releasing the static frames its lazy tail still
+    * references. The release sits in a `finally`, so a failure
+    * anywhere after the build (a rejected seed set included) leaves
+    * the session cache clean too. */
+  private def rankLoop(edges: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int, damping: Double, flag: DataFrame => DataFrame)(
+      teleport: DataFrame => (DataFrame, Share)): DataFrame = {
+    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+    require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
+    val adj = adjacency(edges, srcCol, dstCol, flag)
+    try {
+      val (nodes, share) = teleport(adj.nodes)
+      var ranks = nodes.select(nodes.columns.toSeq.map(col) :+
+        share(lit(1.0)).as("rank"): _*)
+      for (i <- 1 to iterations) {
+        ranks = superstep(nodes, adj.eDeg, ranks, damping, share)
+        if (i < iterations) ranks = ranks.localCheckpoint()
+      }
+      ranks.select(col("node"), col("rank")).localCheckpoint(true)
+    } finally adj.unpersist()
+  }
+
+  /** [[pageRank]]'s teleport: uniform, `share(m) = m / N`. N is ONE
+    * scalar — collected once (which also materializes the node cache)
+    * rather than re-broadcast as a one-row frame into every superstep. */
+  private[graft] def uniformTeleport(nodes: DataFrame): (DataFrame, Share) = {
+    val n = nodes.count()
+    (nodes, _ / n)
+  }
+
+  /** [[personalizedPageRank]]'s node flag: `__isSeed`, from a left join
+    * of the distinct seeds cast to the node id type (for narrow-typed
+    * edges the join stays narrow instead of coercing the node side
+    * wide). */
+  private[graft] def seedFlag(seeds: DataFrame, seedCol: String)(
+      nodes: DataFrame): DataFrame =
+    nodes.join(seeds.select(col(seedCol).cast(nodes.schema("node").dataType)
+        .as("node")).distinct().withColumn("__isSeed", lit(true)),
+      Seq("node"), "left")
+
+  /** [[personalizedPageRank]]'s teleport: `share(m) = m * __tp` with
+    * `__tp = 1/|S|` on seeds, 0 elsewhere. |S| is one count over the
+    * persisted node frame (which also materializes its cache); `__tp`
+    * is a projection of it, so partitioning and ordering carry over. */
+  private[graft] def seedTeleport(nodes: DataFrame): (DataFrame, Share) = {
+    val nSeeds = nodes.filter(col("__isSeed")).count()
+    require(nSeeds > 0, "no seed intersects the graph's node set")
+    (nodes.select(col("node"),
+      when(col("__isSeed"), lit(1.0) / nSeeds).otherwise(lit(0.0)).as("__tp"),
+      col("__dang")), _ * col("__tp"))
+  }
+
+  /** PageRank over `edges` (srcCol → dstCol, duplicates allowed — they
+    * are distinct'd; NULL endpoints drop). Nodes = src ∪ dst. Uniform
+    * initial rank 1/N; per iteration
+    *   r'(v) = (1-d)/N + d * (Σ_{u→v} r(u)/deg(u) + D/N)
+    * where D is the total rank mass parked on dangling nodes (no
+    * out-edges) — the standard formulation, so Σ r stays 1 every
+    * iteration.
+    *
+    * @return (node, rank) — one row per node
+    */
+  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int, damping: Double = 0.85): DataFrame =
+    rankLoop(edges, srcCol, dstCol, iterations, damping, identity)(
+      uniformTeleport)
 
   /** Personalized PageRank: teleport goes to a SEED set instead of
     * uniformly — the graph-proximity score ("how close is v to these
@@ -196,100 +254,15 @@ object Graph {
     *
     * with `s_v = 1/|S|` on seeds, 0 elsewhere (D = dangling mass, so
     * total rank stays 1 and parks near the seeds). `r0 = s`. Same
-    * execution shape as [[pageRank]] — adjacency materialized once,
-    * two key shuffles per superstep; the seed set joins the node frame
-    * once up front. Seeds not present in the graph are ignored
-    * (|S| counts the intersection); empty intersections are rejected.
+    * kernel as [[pageRank]]; only the teleport share differs. Seeds
+    * not present in the graph are ignored (|S| counts the
+    * intersection); empty intersections are rejected.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, iterations: Int,
-      damping: Double = 0.85, materializeEvery: Int = 1): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    requireUniformIds(edges, srcCol, dstCol)
-    // one edge shuffle for dedup + degrees + eDeg — [[pageRank]]'s
-    // round-17 batch-6 shape (shared __src exchange)
-    // node ids keep the caller's type — see [[pageRank]] (round-18)
-    val nParts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e = edges.select(col(srcCol).as("__src"),
-      col(dstCol).as("__dst"))
-      .filter(col("__src").isNotNull && col("__dst").isNotNull)
-      .repartition(nParts, col("__src"))
-      .dropDuplicates("__src", "__dst")
-      .persist()
-    val deg = e.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
-    val eDeg = e
-      .join(deg, Seq("__src"))
-      .persist()
-    // teleport mass AND the static dangling flag ride the node frame
-    // (same round-17 superstep restructure as [[pageRank]]: dangling
-    // mass becomes a one-row agg over ranks instead of a per-iteration
-    // semi join, and the pre-partitioned node frame erases the
-    // per-iteration nodes-side Exchange+Sort — two exchanges per
-    // superstep, the fundamental pair).
-    //
-    // Round-17 batch 2 (opt guide §1.2 — don't compute things twice):
-    // the node set is built ONCE with a boolean __isSeed flag and
-    // persisted; nSeeds — the seed∩nodes count the old code derived
-    // from a SEPARATE seedSet.count() action that re-executed the
-    // whole union+distinct node build (and then re-executed it again
-    // for the node frame itself) — is now one count over the persisted
-    // frame, which also materializes the cache before the loop. The
-    // per-node teleport share 1/|S| is folded in with ONE cheap
-    // projection below instead of being baked into the persisted rows.
-    // Same seed-intersection semantics (left join + flag ⊇ left_semi).
-    // seeds are cast to the EDGE frame's id type (for string edges this
-    // is the old cast("string"); for narrow-typed edges the join stays
-    // narrow instead of coercing the node side wide)
-    val idType = e.schema("__src").dataType
-    val nodes0 = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct()
-      .join(seeds.select(col(seedCol).cast(idType).as("node"))
-          .distinct().withColumn("__isSeed", lit(true)),
-        Seq("node"), "left")
-      .join(deg.select(col("__src").as("node"), lit(true).as("__out")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("__isSeed"), lit(false)).as("__isSeed"),
-        col("__out").isNull.as("__dang"))
-      .repartition(nParts, col("node"))
-      .sortWithinPartitions(col("node"))
-      .persist()
-    val nSeeds = nodes0.filter(col("__isSeed")).count()
-    require(nSeeds > 0, "no seed intersects the graph's node set")
-    // __tp is derived IN the persisted frame's projection (no second
-    // node build, no re-partition: a projection preserves partitioning
-    // and ordering) — every downstream reference is unchanged
-    val nodes = nodes0.select(col("node"),
-      when(col("__isSeed"), lit(1.0) / nSeeds).otherwise(lit(0.0)).as("__tp"),
-      col("__dang"))
-    var ranks = nodes.select(col("node"), col("__tp"), col("__dang"),
-      col("__tp").as("rank"))
-    for (i <- 1 to iterations) {
-      val dangling = ranks
-        .agg(coalesce(sum(when(col("__dang"), col("rank"))), lit(0.0))
-          .as("__dm"))
-      val contrib = eDeg
-        .join(ranks.select(col("node").as("__src"), col("rank")),
-          Seq("__src"))
-        .groupBy(col("__dst"))
-        .agg(sum(col("rank") / col("__deg")).as("__c"))
-      ranks = nodes
-        .join(contrib, nodes("node") === contrib("__dst"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("__tp"), col("__dang"),
-          (lit(1.0 - damping) * col("__tp") +
-            lit(damping) * (coalesce(col("__c"), lit(0.0)) +
-              col("__dm") * col("__tp"))).as("rank"))
-      if (materializeEvery > 0 && i % materializeEvery == 0 && i < iterations)
-        ranks = ranks.localCheckpoint()
-    }
-    // materialize-then-unpersist, the [[pageRank]] cleanup contract
-    val out = ranks.select(col("node"), col("rank")).localCheckpoint(true)
-    e.unpersist(false)
-    eDeg.unpersist(false)
-    nodes0.unpersist(false)
-    out
-  }
+      damping: Double = 0.85): DataFrame =
+    rankLoop(edges, srcCol, dstCol, iterations, damping,
+      seedFlag(seeds, seedCol))(seedTeleport)
 
   /** Per-node triangle counts + local clustering coefficient — the
     * community-structure / link-spam signal next to [[pageRank]]'s

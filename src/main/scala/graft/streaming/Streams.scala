@@ -182,18 +182,22 @@ object Streams {
     * The frame reaches the sink as decoded: no consumer hooks, no
     * dead-letter split, no counters. A topic with a consumer behind it
     * goes through `BatchConsumer.stream`, which runs the consumer's
-    * per-batch stages and then the same [[mergeBatch]].
+    * per-batch stages and then the same [[mergeBatch]]. An uncompacted
+    * topic whose batch needs more than 1024 key-disjoint waves fails
+    * loudly there; hot-key topics belong on [[mergeSinkOrdered]].
     *
     * @param sink  (upserts, deletes, batchId) → Unit, e.g. a JdbcMerger
     *              call or a snapshot-table merge.
     */
   def mergeSink(decoded: DataFrame, keyCols: Seq[String], orderCol: Column,
-      tombstone: Column, compacted: Boolean = true, maxWaves: Int = 1024)(
+      tombstone: Column, compacted: Boolean = true)(
       sink: (DataFrame, DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     decoded.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      mergeBatch(batch, batchId, keyCols, orderCol, tombstone, compacted,
-        maxWaves)(sink)
+      mergeBatch(batch, batchId, keyCols, orderCol, tombstone, compacted)(sink)
     }
+
+  /** Most waves one uncompacted batch may apply (see [[mergeBatch]]). */
+  private val MaxWaves = 1024
 
   /** One batch of the consume suffix, the body every streaming merge
     * path runs per micro-batch ([[mergeSink]], `BatchConsumer.stream`).
@@ -209,15 +213,15 @@ object Streams {
     * there are any. The batch is persisted for the duration of the
     * call (it feeds the unkeyed probe, the unkeyed sink leg and the
     * wave machinery), and the wave frame is released through
-    * `Compaction.withSlices`, so no cache outlives the batch.
-    *
-    * @param maxWaves each wave is a Spark job, so a key carrying this
-    *   many versions fails the batch loudly instead of stalling the
-    *   driver; hot-key topics belong on [[mergeSinkOrdered]].
+    * `Compaction.withSlices`, so no cache outlives the batch. Each wave
+    * is a Spark job, so a batch needing more than `MaxWaves` (1024) waves
+    * (one key carrying that many versions) fails loudly after the
+    * wave count, before any wave runs, instead of stalling the driver;
+    * hot-key topics belong on [[mergeSinkOrdered]].
     */
   def mergeBatch(batch: DataFrame, batchId: Long, keyCols: Seq[String],
-      orderCol: Column, tombstone: Column, compacted: Boolean,
-      maxWaves: Int = 1024)(sink: (DataFrame, DataFrame, Long) => Unit): Unit =
+      orderCol: Column, tombstone: Column, compacted: Boolean)(
+      sink: (DataFrame, DataFrame, Long) => Unit): Unit =
     if (compacted) {
       val (up, del) = Materialize.splitTombstones(
         Compaction.lastWinsKeyed(batch, keyCols, orderCol), tombstone)
@@ -225,7 +229,7 @@ object Streams {
     } else {
       // NULL-key rows all share one window partition, so wave numbering
       // would hand each its own wave (one sequential job per row, and
-      // maxWaves tripped by ~1k unkeyed rows). They carry no per-key
+      // the wave cap tripped by ~1k unkeyed rows). They carry no per-key
       // ordering constraint, so they apply as one leading wave.
       val cached = batch.persist()
       try {
@@ -236,12 +240,12 @@ object Streams {
           sink(up, del, batchId)
         }
         Compaction.withSlices(cached.filter(!keyNull), keyCols, orderCol) { slices =>
-          if (slices.size > maxWaves)
+          if (slices.size > MaxWaves)
             throw new IllegalStateException(
               s"uncompacted batch $batchId needs ${slices.size} waves " +
-                s"(> maxWaves=$maxWaves): a single key carries that many " +
+                s"(> $MaxWaves): a single key carries that many " +
                 "versions. Use mergeSinkOrdered (one-job per-key ordered " +
-                "apply) for this topic, or raise maxWaves deliberately.")
+                "apply) for this topic.")
           slices.foreach { slice =>
             val (up, del) = Materialize.splitTombstones(slice, tombstone)
             sink(up, del, batchId)

@@ -1,128 +1,106 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-/** Round-17 plan pin: the PageRank loop runs behind eager checkpoints
+import graft.operators.Graph
+
+/** Round-17 plan pin: the rank loop runs behind eager checkpoints
   * (invisible to a caller's explain), so the per-superstep shape is
-  * pinned HERE, on the factored loop body, with the static frames
-  * prepared exactly as [[graft.operators.Graph.pageRank]] prepares
-  * them (explicit-count keyed repartition + persist — InMemoryRelation
-  * preserves partitioning/ordering where an AQE-era localCheckpoint
-  * reports UnknownPartitioning). The claim under pin: exactly TWO
-  * ShuffleExchanges per superstep — ranks→__src for the contribution
-  * join and the contribution groupBy __dst — and no per-iteration
-  * dangling-mass join (the one-row aggregate reads the rank frame's
-  * static flag instead). */
+  * pinned HERE, on the loop body [[Graph.superstep]], over the static
+  * frames production builds ([[Graph.adjacency]] and the operator's
+  * teleport — explicit-count keyed repartition + persist, since
+  * InMemoryRelation preserves partitioning/ordering where an AQE-era
+  * localCheckpoint reports UnknownPartitioning). The claim under pin:
+  * exactly TWO ShuffleExchanges per superstep — ranks→__src for the
+  * contribution join and the contribution groupBy __dst — and no
+  * per-iteration dangling-mass join (the one-row aggregate reads the
+  * rank frame's static flag instead). */
 class GraphSuperstepPlanSpec extends SparkSpec {
   import spark.implicits._
 
-  private def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
+  private def executed(df: DataFrame) = {
     df.write.mode("overwrite").format("noop").save()
-    val plan = df.queryExecution.executedPlan match {
+    df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    var n = 0
-    plan.foreach {
-      case _: ShuffleExchangeExec => n += 1
-      case _ => ()
-    }
-    n
   }
 
-  test("pageRank superstep plans exactly two shuffle exchanges") {
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"))
-      .toDF("__src", "__dst").distinct().localCheckpoint()
-    val deg = e.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
-    val eDeg = e.join(deg, Seq("__src"))
-      .repartition(nParts, col("__src")).persist()
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct()
-      .join(deg.select(col("__src").as("node"), lit(true).as("__out")),
-        Seq("node"), "left")
-      .select(col("node"), col("__out").isNull.as("__dang"))
-      .repartition(nParts, col("node"))
-      .sortWithinPartitions(col("node"))
-      .persist()
-    val n = nodes.count()
+  private def shuffles(df: DataFrame): Int =
+    executed(df).collect { case ex: ShuffleExchangeExec => ex }.size
+
+  /** Runs `body(step1, step2)` on the first two supersteps of the
+    * production setup: step 1 reads the loop's initial rank frame,
+    * step 2 a checkpointed rank frame (what iteration i>1 sees —
+    * UnknownPartitioning). The static frames are released after. */
+  private def supersteps(adj: Graph.Adjacency,
+      teleport: DataFrame => (DataFrame, Graph.Share))(
+      body: (DataFrame, DataFrame) => Unit): Unit =
     try {
-      val ranks = nodes.select(col("node"), col("__dang"),
-        (lit(1.0) / n).as("rank"))
+      val (nodes, share) = teleport(adj.nodes)
+      val ranks = nodes.select(nodes.columns.toSeq.map(col) :+
+        share(lit(1.0)).as("rank"): _*)
+      val step1 = Graph.superstep(nodes, adj.eDeg, ranks, 0.85, share)
+      val step2 = Graph.superstep(nodes, adj.eDeg,
+        step1.localCheckpoint(true), 0.85, share)
+      body(step1, step2)
+    } finally adj.unpersist()
+
+  test("pageRank superstep plans exactly two shuffle exchanges") {
+    val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"))
+      .toDF("s", "t")
+    supersteps(Graph.adjacency(e, "s", "t", identity),
+        Graph.uniformTeleport) { (step1, step2) =>
       // first superstep: ranks is a projection of the persisted node
       // frame — already partitioned by node, so even the ranks→__src
       // exchange is elided and only the groupBy exchange remains
-      val step1 = graft.operators.Graph.pageRankSuperstep(
-        nodes, eDeg, ranks, n, 0.85)
       assert(shuffles(step1) <= 2,
         s"superstep 1 plans ${shuffles(step1)} shuffles, expected <= 2")
-      // steady state: feed a checkpointed rank frame (what iteration
-      // i>1 sees — UnknownPartitioning), the documented two-exchange
-      // shape
-      val step2 = graft.operators.Graph.pageRankSuperstep(
-        nodes, eDeg, step1.localCheckpoint(true), n, 0.85)
       val got = shuffles(step2)
       assert(got == 2, s"steady-state superstep plans $got shuffles, " +
         "expected exactly 2 (ranks->__src + groupBy __dst)")
-    } finally {
-      eDeg.unpersist(false)
-      nodes.unpersist(false)
+    }
+  }
+
+  test("personalized pageRank superstep plans exactly two shuffle " +
+      "exchanges in the steady state") {
+    val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"))
+      .toDF("s", "t")
+    val seeds = Seq("a", "zzz").toDF("n")
+    supersteps(Graph.adjacency(e, "s", "t", Graph.seedFlag(seeds, "n")),
+        Graph.seedTeleport) { (_, step2) =>
+      val got = shuffles(step2)
+      assert(got == 2, s"steady-state superstep plans $got shuffles, " +
+        "expected exactly 2 (ranks->__src + groupBy __dst)")
     }
   }
 
   test("long-typed edges keep every superstep exchange long-typed " +
       "(round-18: no forced cast to string)") {
     import org.apache.spark.sql.types.LongType
-    val nParts = spark.sessionState.conf.numShufflePartitions
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L))
-      .toDF("__src", "__dst").distinct().localCheckpoint()
-    val deg = e.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
-    val eDeg = e.join(deg, Seq("__src"))
-      .repartition(nParts, col("__src")).persist()
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct()
-      .join(deg.select(col("__src").as("node"), lit(true).as("__out")),
-        Seq("node"), "left")
-      .select(col("node"), col("__out").isNull.as("__dang"))
-      .repartition(nParts, col("node"))
-      .sortWithinPartitions(col("node"))
-      .persist()
-    val n = nodes.count()
-    try {
-      val ranks = nodes.select(col("node"), col("__dang"),
-        (lit(1.0) / n).as("rank"))
-      val step1 = graft.operators.Graph.pageRankSuperstep(
-        nodes, eDeg, ranks, n, 0.85)
-      val step2 = graft.operators.Graph.pageRankSuperstep(
-        nodes, eDeg, step1.localCheckpoint(true), n, 0.85)
-      step2.write.mode("overwrite").format("noop").save()
-      val plan = step2.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
+      .toDF("s", "t")
+    supersteps(Graph.adjacency(e, "s", "t", identity),
+        Graph.uniformTeleport) { (_, step2) =>
+      val exchanges = executed(step2).collect {
+        case ex: ShuffleExchangeExec => ex }
+      exchanges.foreach { ex =>
+        ex.output.filter(a =>
+          Set("__src", "__dst", "node").contains(a.name)).foreach { a =>
+          assert(a.dataType == LongType,
+            s"exchange carries ${a.name}: ${a.dataType} — the node id " +
+              "widened on its way into a shuffle")
+        }
       }
-      var nShuffles = 0
-      plan.foreach {
-        case ex: ShuffleExchangeExec =>
-          nShuffles += 1
-          ex.output.filter(a =>
-            Set("__src", "__dst", "node").contains(a.name)).foreach { a =>
-            assert(a.dataType == LongType,
-              s"exchange carries ${a.name}: ${a.dataType} — the node id " +
-                "widened on its way into a shuffle")
-          }
-        case _ => ()
-      }
-      assert(nShuffles == 2, s"steady-state superstep plans $nShuffles " +
-        "shuffles, expected exactly 2")
-      // and the operator's public surface preserves the caller's type
-      val pr = graft.operators.Graph.pageRank(
-        Seq((1L, 2L), (2L, 1L)).toDF("s", "d"), "s", "d", iterations = 1)
-      assert(pr.schema("node").dataType == LongType)
-    } finally {
-      eDeg.unpersist(false)
-      nodes.unpersist(false)
+      assert(exchanges.size == 2, s"steady-state superstep plans " +
+        s"${exchanges.size} shuffles, expected exactly 2")
     }
+    // and the operator's public surface preserves the caller's type
+    val pr = Graph.pageRank(
+      Seq((1L, 2L), (2L, 1L)).toDF("s", "d"), "s", "d", iterations = 1)
+    assert(pr.schema("node").dataType == LongType)
   }
 }

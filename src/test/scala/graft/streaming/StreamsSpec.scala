@@ -330,23 +330,27 @@ class StreamsSpec extends SparkSpec {
   test("uncompacted mergeSink fails loudly when a hot key exceeds maxWaves") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Evt]
+    var sinkCalls = 0
     val writer = Streams.mergeSink(input.toDF(), Seq("key"), col("id"),
-      col("deleted") === true, compacted = false, maxWaves = 3) {
-      (up, del, _) => up.count(); del.count(); ()
+      col("deleted") === true, compacted = false) {
+      (up, del, _) => sinkCalls += 1; up.count(); del.count(); ()
     }
     val q = writer.option("checkpointLocation",
       java.nio.file.Files.createTempDirectory("graft-ck").toString).start()
     try {
-      // 5 versions of one key > maxWaves=3 → the micro-batch must fail
-      // with the stall guard, not grind through 5 sequential jobs
-      input.addData((1 to 5).map(i => Evt(i.toLong, "HOT", s"v$i", false)): _*)
+      // 1025 versions of one key > the 1024-wave cap → the micro-batch
+      // must fail with the stall guard after the one wave-count job,
+      // before any wave reaches the sink
+      input.addData((1 to 1025).map(i => Evt(i.toLong, "HOT", s"v$i", false)): _*)
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q.processAllAvailable()
       }
       def msgs(t: Throwable): Seq[String] =
         if (t == null) Seq.empty
         else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(_.contains("needs 1025 waves")))
       assert(msgs(e).exists(_.contains("mergeSinkOrdered")))
+      assert(sinkCalls === 0, "a wave ran before the guard fired")
     } finally q.stop()
   }
 
