@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
   LogicalPlan, Project}
@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 /** The bucket-governance rule of every capped candidate generator
   * (`Dedup.minhashLshCapped`, `ngramJaccardCapped`,
   * `embeddingCosineCapped`, `Multimodal.hashNearDupCapped`,
-  * `hashNearDupAgainstCapped`, `StreamNearDup.screenAgainst`), and the
-  * family's one cut policy.
+  * `hashNearDupAgainstCapped`, `Multimodal.curationScreen`,
+  * `StreamNearDup.screenAgainst`), and the family's one cut policy.
   *
   * Drop and report: a bucket whose key holds more than `cap` members
   * would emit a quadratic number of candidate pairs, so it is SKIPPED
@@ -55,6 +55,39 @@ private[graft] object Buckets {
     counts(keyed, keys, countCol).filter(col(countCol) > cap)
       .localCheckpoint(true)
   }
+
+  /** [[govern]] for buckets that several sides of one join read: one
+    * aggregate counts, per bucket, the rows each side's predicate holds
+    * for, and a bucket is hot for a side when that count exceeds the
+    * cap. The overflow is (side, keys…, countCol), one row per hot
+    * (side, bucket), exploded before the cut so that every side's
+    * [[drop]] and the overflow read one checkpoint; with no cap, no
+    * drop and the [[none]] frame of the same columns. */
+  def governBySide(keyed: DataFrame, keys: Seq[String],
+      maxBucket: Option[Int], countCol: String,
+      sides: Seq[(String, Column)]): (String => DataFrame => DataFrame,
+      DataFrame) =
+    maxBucket match {
+      case Some(cap) =>
+        checkCap(cap)
+        val counts = sides.map { case (side, p) =>
+          count(when(p, 1)).as(s"__n_$side") }
+        val n = sides.map { case (side, _) => col(s"__n_$side") }
+        val h = keyed.groupBy(keys.map(col): _*)
+          .agg(counts.head, counts.tail: _*)
+          .filter(n.map(_ > cap).reduce(_ || _))
+          .select(explode(array(sides.zip(n).map { case ((side, _), c) =>
+            struct(lit(side).as("side"), c.as(countCol)) }: _*))
+            .as("__s") +: keys.map(col): _*)
+          .select(col("__s.side").as("side") +: keys.map(col) :+
+            col(s"__s.$countCol").as(countCol): _*)
+          .filter(col(countCol) > cap)
+          .localCheckpoint(true)
+        (side => drop(_, h.filter(col("side") === side), keys), h)
+      case None => (_ => identity,
+        none(keyed.select(lit(sides.head._1).as("side") +: keys.map(col): _*),
+          "side" +: keys, countCol))
+    }
 
   /** `df` without the rows whose `keys` name a bucket of `hot`. */
   def drop(df: DataFrame, hot: DataFrame, keys: Seq[String]): DataFrame =

@@ -58,17 +58,27 @@ import org.apache.spark.sql.functions._
   * 100 TB shape: the store holds only (id, 64-bit hash, quality,
   * count) — ~32 B per surviving doc; each increment reads ONE
   * snapshot and the batch, collapses both into full-hash classes in
-  * one aggregate, runs the capped screens over one representative per
-  * class (never quadratic in a hot hash; none at maxHamming = 0), and
-  * writes one snapshot. The cap counts distinct hashes, not docs, so
-  * exact copies always merge; at maxHamming = 0 it is unused and the
-  * overflow snapshot is empty. [[prune]] bounds snapshot (and marker)
+  * one aggregate, runs one capped screen over one representative per
+  * class — one hot-set aggregate and one candidate join for the self
+  * and bipartite pairs together (never quadratic in a hot hash; none
+  * at maxHamming = 0) — and writes one snapshot. The cap counts
+  * distinct hashes, not docs, so exact copies always merge; at
+  * maxHamming = 0 it is unused and the overflow snapshot is empty. [[prune]] bounds snapshot (and marker)
   * count; old versions are what make time-travel reads and crash
   * recovery trivial.
   */
 object CurationRunner {
 
   final case class Pointer(version: Long, batchId: Long)
+
+  /** Threads for [[applyIncrement]]'s two concurrent snapshot writes:
+    * daemon, created on demand, idle ones retired after a minute. */
+  private lazy val snapshotWriters: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "graft-curation-snapshot-write")
+      t.setDaemon(true)
+      t
+    }
 
   /** The Spark Hadoop conf the pointer I/O must share with the
     * parquet writes. An in-hand session is preferred; the thread-local
@@ -173,23 +183,32 @@ object CurationRunner {
     // requirement between them (only the COMMIT MARKER below makes the
     // version visible) — overlap them so the tiny overflow write rides
     // the survivor write's tail instead of queueing behind it (opt
-    // guide §2.6). Either failure propagates before the marker rename,
-    // leaving the store on the previous committed version.
+    // guide §2.6). Each runs with the caller's active session and
+    // Spark local properties (job group and description, scheduler
+    // pool, tracing spans), captured per call: a pool thread keeps the
+    // properties of whoever created it, so a write on it would carry a
+    // stale job group that `cancelJobGroup` on the caller's misses.
+    // Either failure propagates before the marker rename, leaving the
+    // store on the previous committed version.
     locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.util.Try
-      val fOut = Future { out.write.mode("overwrite").parquet(s"$dir/v$next") }
-      val fOvf = Future {
-        overflow.write.mode("overwrite").parquet(s"$dir/overflow_v$next") }
+      import org.apache.spark.sql.execution.SQLExecution
+      def write(df: DataFrame, path: String) =
+        SQLExecution.withThreadLocalCaptured(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+          snapshotWriters) { df.write.mode("overwrite").parquet(path) }
+      def await(f: java.util.concurrent.Future[Unit]): scala.util.Try[Unit] =
+        scala.util.Try(try f.get() catch {
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+        })
+      val fOut = write(out, s"$dir/v$next")
+      val fOvf = write(overflow, s"$dir/overflow_v$next")
       // Await BOTH before propagating either failure: returning (or
       // throwing) with a write still in flight would let a retry's
       // fresh overwrite of the same directory race the orphaned job's
       // _temporary cleanup and corrupt the snapshot the marker then
       // publishes.
-      val rOut = Try(Await.result(fOut, Duration.Inf))
-      val rOvf = Try(Await.result(fOvf, Duration.Inf))
+      val rOut = await(fOut)
+      val rOvf = await(fOvf)
       rOut.get
       rOvf.get
     }

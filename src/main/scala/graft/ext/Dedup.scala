@@ -321,8 +321,14 @@ object Dedup {
     // (both paths emit identical labelings; ComponentsSpec pins it).
     val raw = Buckets.cutOnce(pairs.select(col(aCol).as("src"),
       col(bCol).as("dst")))
-    val nRaw = raw.count()
-    if (2 * nRaw <= driverThreshold) {
+    // The path decision reads the cut once, in one job that does not
+    // shuffle: one task takes at most driverThreshold/2 + 1 rows; fewer
+    // than that many are ALL the rows, and they are the driver path's
+    // input (no count aggregate, no second read).
+    val limit = (Math.floorDiv(driverThreshold, 2L) + 1L)
+      .max(0L).min(Int.MaxValue.toLong).toInt
+    val head = raw.coalesce(1).limit(limit).collect()
+    if (head.length < limit) {
       // id-type-generic union-find (ids are int/long/string across the
       // callers — content-addressed regimes use strings): compare in
       // the SAME order the distributed path's min()/least() use, and
@@ -335,7 +341,7 @@ object Dedup {
       // adaptive paths is silent corruption. Unsupported id types
       // (e.g. binary) fail loudly instead of ClassCastException-ing
       // only on the driver path.
-      val es = raw.collect().map(r => (r.get(0), r.get(1)))
+      val es = head.map(r => (r.get(0), r.get(1)))
       def lt(a: Any, b: Any): Boolean = (a, b) match {
         case (x: String, y: String) =>
           org.apache.spark.unsafe.types.UTF8String.fromString(x)
@@ -668,10 +674,12 @@ object Dedup {
     *     (the class min id) enters the chunk-pigeonhole search — the
     *     self screen over batch-holding classes, plus (when there are
     *     survivors) the bipartite screen from those to survivor-only
-    *     classes — then [[components]]. Hamming is a function of the
-    *     hash VALUES, so the doc-level partition equals (class cliques
-    *     ∪ representative pairs)'s; merged groups fold the per-class
-    *     partials (sum of weights, min of winner structs).
+    *     classes, run as one screen (`Multimodal.curationScreen`: one
+    *     hot-set aggregate, one candidate join) — then [[components]].
+    *     Hamming is a function of the hash VALUES, so the doc-level
+    *     partition equals (class cliques ∪ representative pairs)'s;
+    *     merged groups fold the per-class partials (sum of weights,
+    *     min of winner structs).
     *
     * Null-hash rows never pair: they are singleton classes keyed by
     * their own id and pass through with their own weight.
@@ -715,27 +723,11 @@ object Dedup {
         // upstream is typically an expensive decode pipeline (or a
         // survivor snapshot plus a fingerprinted batch) — cut it ONCE
         // (distinct-hash cardinality, ~40 B/row), then every consumer
-        // reads the checkpoint; the screens below see the cut in their
-        // input plans and add none
+        // reads the checkpoint; the screen below sees the cut in its
+        // input plan and adds none
         val classesM = classes.localCheckpoint(true)
-        val reps = classesM.filter(col("__ph").isNotNull)
-          .select(col("__rep").as("__rid"), col("__ph"), col("__hasBat"))
-        val batReps = reps.filter(col("__hasBat"))
-        val (selfPairs, hotSelf) = Multimodal.hashNearDupCapped(batReps,
-          "__rid", "__ph", maxHamming, maxBucket)
-        val selfOvf = hotSelf.select(lit("self").as("side"), col("chunk"),
-          col("cval"), col("n_ids"))
-        // no survivors (the one-shot): no bipartite screen, so the plan
-        // is the self screen's alone
-        val (pairs, ovf) = survivors.fold((selfPairs, selfOvf)) { _ =>
-          val (crossPairs, hotCross) = Multimodal.hashNearDupAgainstCapped(
-            batReps, reps.filter(!col("__hasBat")), "__rid", "__ph",
-            maxHamming, maxBucket)
-          (selfPairs.select(col("id_a"), col("id_b"))
-              .unionByName(crossPairs.select(col("id_a"), col("id_b"))),
-            selfOvf.unionByName(hotCross.select(lit("cross").as("side"),
-              col("chunk"), col("cval"), col("n_ids"))))
-        }
+        val (pairs, ovf) = Multimodal.curationScreen(classesM, "__rep",
+          "__ph", "__hasBat", survivors.isDefined, maxHamming, maxBucket)
         val repLabels = components(pairs, aCol = "id_a", bCol = "id_b")
           .withColumnRenamed("doc_id", "__rep")
         (classesM.join(repLabels, Seq("__rep"), "left")

@@ -50,9 +50,14 @@ object Multimodal {
     * exact surface fill the disk; on the healthy path it costs one
     * map-side-combining aggregate into ≤ 4·2¹⁶ keys. */
   private def auditUngoverned(buckets: DataFrame, bound: Long,
+      surface: String): Unit =
+    refuseHot(buckets.agg(coalesce(sum(col("mass")), lit(0L)))
+      .collect()(0).getLong(0), buckets, bound, surface)
+
+  /** [[auditUngoverned]]'s verdict on a measured `mass`: throws when it
+    * exceeds `bound`, naming the five heaviest of `buckets`. */
+  private def refuseHot(mass: Long, buckets: DataFrame, bound: Long,
       surface: String): Unit = {
-    val mass = buckets.agg(coalesce(sum(col("mass")), lit(0L)))
-      .collect()(0).getLong(0)
     if (mass > bound) {
       val top = buckets.orderBy(col("mass").desc).limit(5).collect()
         .map(r => s"chunk=${r.get(0)} val=${r.get(1)} width=${r.get(2)}")
@@ -294,6 +299,121 @@ object Multimodal {
       : DataFrame =
     hashNearDupAgainstCapped(left, right, idCol, hashCol, maxHamming,
       maxBucket = None, maxProjectedCandidates)._1
+
+  /** The curation kernel's pair search (`Dedup.curateKernel`): the self
+    * screen over the batch rows of `reps` ([[hashNearDupCapped]]) and,
+    * when `survivors`, the bipartite screen from them to its other rows
+    * ([[hashNearDupAgainstCapped]]), run as ONE screen — one bucket
+    * aggregate and one candidate join instead of two of each. Pairs and
+    * overflow equal the two public screens' union, at every radius, cap
+    * and null-hash mix:
+    *
+    *  - Buckets: one aggregate over the keys that meet in a join — the
+    *    batch rows' exact chunk keys and the survivor rows' probe keys
+    *    (exact at radius ≤ 3, the 1-bit ball at 4–7). Per bucket,
+    *    `self` counts the batch keys (the self screen's count) and
+    *    `cross` all of them (the bipartite count). Capped, both hot
+    *    sets are one cut ([[Buckets.governBySide]]); a self-hot bucket is
+    *    always cross-hot. Uncapped, both audits come from one action:
+    *    self width² × the probe factor, bipartite bl·br, with the
+    *    public screens' surface names.
+    *  - Candidates: batch exact rows less the self-hot keys join the
+    *    union of the batch probe rows less the self-hot keys and the
+    *    survivor probe rows less the cross-hot keys (a batch row in a
+    *    bucket that is only cross-hot meets no survivor row there).
+    *    Batch-batch rows keep the self screen's orientation, survivor
+    *    rows stay (batch, survivor); one `dropDuplicates`, keyed on the
+    *    side too, and one hamming check.
+    *
+    * Without `survivors` the survivor branch is absent from the plan.
+    *
+    * @return (pairs (id_a, id_b, hamming), overflow (side ∈ self|cross,
+    *         chunk, cval, n_ids) per skipped bucket)
+    */
+  private[graft] def curationScreen(reps: DataFrame, idCol: String,
+      hashCol: String, batchCol: String, survivors: Boolean,
+      maxHamming: Int, maxBucket: Option[Int],
+      maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
+      : (DataFrame, DataFrame) = {
+    import graft.functions.{HashFunctions => H}
+    Buckets.check(maxHamming, maxBucket)
+    val keys = Seq("chunk", "cval")
+    val hashed = Buckets.cutOnce(reps.select(col(idCol).as("id"),
+      col(hashCol).as("ph"), col(batchCol).as("bat"))
+      .filter(col("ph").isNotNull))
+    def exact(rows: DataFrame): DataFrame = rows.select(col("id"), col("ph"),
+      posexplode(H.simhashChunks(col("ph"))).as(Seq("chunk", "cval")))
+    def probe(rows: DataFrame): DataFrame =
+      if (maxHamming <= 3) rows
+      else rows.select(col("chunk"), col("id"), col("ph"),
+        explode(H.oneBitBall(col("cval"))).as("cval"))
+    val batExact = exact(hashed.filter(col("bat")))
+    val survProbe =
+      if (survivors) Some(probe(exact(hashed.filter(!col("bat"))))) else None
+    def sided(rows: DataFrame, self: Boolean): DataFrame =
+      rows.select(col("chunk"), col("cval"), lit(self).as("self"))
+    val keyed = survProbe.fold(sided(batExact, self = true))(sp =>
+      sided(batExact, self = true).unionByName(sided(sp, self = false)))
+    val sides = ("self" -> col("self")) +:
+      (if (survivors) Seq("cross" -> lit(true)) else Nil)
+    val (dropHot, overflow) =
+      Buckets.governBySide(keyed, keys, maxBucket, "n_ids", sides)
+    if (maxBucket.isEmpty) {
+      // the UNGOVERNED exact surfaces' pre-audits ([[auditUngoverned]]),
+      // both from one aggregate in one action
+      val probeFactor = if (maxHamming <= 3) 1L else 17L
+      val widths = keyed.groupBy(keys.map(col): _*)
+        .agg(count(when(col("self"), 1)).as("bl"), count(lit(1)).as("bw"))
+        .select(col("chunk"), col("cval"), col("bl"),
+          (col("bw") - col("bl")).as("br"))
+      val selfMass = col("bl") * col("bl") * lit(probeFactor)
+      val crossMass = col("bl") * col("br")
+      val masses = widths.agg(coalesce(sum(selfMass), lit(0L)),
+        coalesce(sum(crossMass), lit(0L))).collect()(0)
+      refuseHot(masses.getLong(0), widths.filter(col("bl") > 0)
+          .select(col("chunk"), col("cval"), col("bl").as("width"),
+            selfMass.as("mass")),
+        maxProjectedCandidates, "hashNearDup (ungoverned)")
+      if (survivors)
+        refuseHot(masses.getLong(1),
+          widths.filter(col("bl") > 0 && col("br") > 0)
+            .select(col("chunk"), col("cval"),
+              (col("bl") + col("br")).as("width"), crossMass.as("mass")),
+          maxProjectedCandidates, "hashNearDupAgainst (ungoverned)")
+    }
+    val a = dropHot("self")(batExact).select(col("chunk"), col("cval"),
+      col("id").as("id_a"), col("ph").as("ph_a"))
+    def bSide(rows: DataFrame, self: Boolean): DataFrame =
+      rows.select(col("chunk"), col("cval"), col("id").as("id_b"),
+        col("ph").as("ph_b"), lit(self).as("self"))
+    val bSelf = bSide(dropHot("self")(probe(batExact)), self = true)
+    val b = survProbe.fold(bSelf)(sp =>
+      bSelf.unionByName(bSide(dropHot("cross")(sp), self = false)))
+    val joined = a.join(b, keys)
+    // the self rows' orientation is [[hashNearDupCapped]]'s: one
+    // orientation (id_a < id_b) unless a capped radius-4–7 drop can
+    // kill one of the two exact×probe meetings
+    val isCross = !col("self")
+    val oriented =
+      if (maxHamming <= 3 || maxBucket.isEmpty)
+        joined.filter(isCross || col("id_a") < col("id_b"))
+          .select(col("id_a"), col("id_b"), col("ph_a"), col("ph_b"),
+            col("self"))
+      else
+        joined.filter(isCross || col("id_a") =!= col("id_b"))
+          .select(
+            when(isCross, col("id_a"))
+              .otherwise(least(col("id_a"), col("id_b"))).as("id_a"),
+            when(isCross, col("id_b"))
+              .otherwise(greatest(col("id_a"), col("id_b"))).as("id_b"),
+            col("ph_a"), col("ph_b"), col("self"))
+    val pairs = oriented
+      .dropDuplicates("id_a", "id_b", "self")
+      .select(col("id_a"), col("id_b"),
+        H.hamming64(col("ph_a"), col("ph_b")).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+    (pairs, overflow)
+  }
 
   /** Image near-duplicate detection: perceptual dHash over the REAL
     * decoded pixel plane ([[PixelDecode.imageDHashAny]] — magic-sniff
