@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
 
 /** The bucket-governance rule of every capped candidate generator
   * (`Dedup.minhashLshCapped`, `ngramJaccardCapped`,
-  * `embeddingCosineCapped`, `Multimodal.hashNearDupCapped`,
-  * `hashNearDupAgainstCapped`, `Multimodal.curationScreen`,
-  * `StreamNearDup.screenAgainst`), and the family's one cut policy.
+  * `embeddingCosineCapped`, `Multimodal.pigeonholeScreen` — behind
+  * `hashNearDupCapped`, `hashNearDupAgainstCapped` and the curation
+  * kernel — and `StreamNearDup.screenAgainst`), and the family's one cut
+  * policy.
   *
   * Drop and report: a bucket whose key holds more than `cap` members
   * would emit a quadratic number of candidate pairs, so it is SKIPPED
@@ -56,13 +57,14 @@ private[graft] object Buckets {
       .localCheckpoint(true)
   }
 
-  /** [[govern]] for buckets that several sides of one join read: one
-    * aggregate counts, per bucket, the rows each side's predicate holds
-    * for, and a bucket is hot for a side when that count exceeds the
-    * cap. The overflow is (side, keys…, countCol), one row per hot
-    * (side, bucket), exploded before the cut so that every side's
-    * [[drop]] and the overflow read one checkpoint; with no cap, no
-    * drop and the [[none]] frame of the same columns. */
+  /** (drop per side, overflow) under an optional cap, for buckets that
+    * one or more sides of a join read: one aggregate counts, per bucket,
+    * the rows each side's predicate holds for, and a bucket is hot for
+    * a side when that count exceeds the cap. The overflow is (side,
+    * keys…, countCol), one row per hot (side, bucket), exploded before
+    * the cut so that every side's [[drop]] and the overflow read one
+    * checkpoint; with no cap, no drop and the [[none]] frame of the same
+    * columns. */
   def governBySide(keyed: DataFrame, keys: Seq[String],
       maxBucket: Option[Int], countCol: String,
       sides: Seq[(String, Column)]): (String => DataFrame => DataFrame,
@@ -99,16 +101,14 @@ private[graft] object Buckets {
     keyed.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](),
       counts(keyed, keys, countCol).schema)
 
-  /** (drop, overflow) under an optional cap: [[drop]] of the [[hot]]
-    * set, or no drop and the [[none]] frame. */
+  /** (drop, overflow) under an optional cap: [[governBySide]] with one
+    * side that counts every row, its overflow without the side column. */
   def govern(keyed: DataFrame, keys: Seq[String], maxBucket: Option[Int],
-      countCol: String): (DataFrame => DataFrame, DataFrame) =
-    maxBucket match {
-      case Some(cap) =>
-        val h = hot(keyed, keys, cap, countCol)
-        (drop(_, h, keys), h)
-      case None => (identity, none(keyed, keys, countCol))
-    }
+      countCol: String): (DataFrame => DataFrame, DataFrame) = {
+    val (drop, overflow) =
+      governBySide(keyed, keys, maxBucket, countCol, Seq("all" -> lit(true)))
+    (drop("all"), overflow.drop("side"))
+  }
 
   /** The exact twins' rule: throw when `hot` holds a bucket, naming up
     * to three as "first key (label=count)". */

@@ -63,9 +63,9 @@ import org.apache.spark.sql.functions._
   * and bipartite pairs together (never quadratic in a hot hash; none
   * at maxHamming = 0) — and writes one snapshot. The cap counts
   * distinct hashes, not docs, so exact copies always merge; at
-  * maxHamming = 0 it is unused and the overflow snapshot is empty. [[prune]] bounds snapshot (and marker)
-  * count; old versions are what make time-travel reads and crash
-  * recovery trivial.
+  * maxHamming = 0 it is unused and the overflow snapshot is empty.
+  * [[prune]] bounds snapshot (and marker) count; old versions are what
+  * make time-travel reads and crash recovery trivial.
   */
 object CurationRunner {
 

@@ -674,7 +674,7 @@ object Dedup {
     *     (the class min id) enters the chunk-pigeonhole search — the
     *     self screen over batch-holding classes, plus (when there are
     *     survivors) the bipartite screen from those to survivor-only
-    *     classes, run as one screen (`Multimodal.curationScreen`: one
+    *     classes, run as one screen (`Multimodal.pigeonholeScreen`: one
     *     hot-set aggregate, one candidate join) — then [[components]].
     *     Hamming is a function of the hash VALUES, so the doc-level
     *     partition equals (class cliques ∪ representative pairs)'s;
@@ -726,8 +726,12 @@ object Dedup {
         // reads the checkpoint; the screen below sees the cut in its
         // input plan and adds none
         val classesM = classes.localCheckpoint(true)
-        val (pairs, ovf) = Multimodal.curationScreen(classesM, "__rep",
-          "__ph", "__hasBat", survivors.isDefined, maxHamming, maxBucket)
+        val reps = classesM.select(col("__rep").as("id"),
+          col("__ph").as("ph"), col("__hasBat"))
+        val (pairs, ovf) = Multimodal.pigeonholeScreen(
+          reps.filter(col("__hasBat")),
+          survivors.map(_ => reps.filter(!col("__hasBat"))),
+          self = true, maxHamming, maxBucket)
         val repLabels = components(pairs, aCol = "id_a", bCol = "id_b")
           .withColumnRenamed("doc_id", "__rep")
         (classesM.join(repLabels, Seq("__rep"), "left")

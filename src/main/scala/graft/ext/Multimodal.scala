@@ -39,23 +39,12 @@ object Multimodal {
     * the disk-filling regime (the x3 1000× corpus projects ~2e10). */
   val DefaultMaxProjectedCandidates: Long = 1L << 33
 
-  /** One cheap aggregate over a per-bucket frame (chunk, cval, width,
-    * mass): total projected candidate mass vs the bound. Unipartite
-    * callers pass mass = width² (× 17 when the 1-bit multi-probe ball
-    * is in play — ball keys of a dup cluster land in the cluster's
-    * own buckets, so the factor is the cluster-structure projection,
-    * exact for the regime the audit exists to refuse); the bipartite
-    * caller passes the exact join mass bl·br. Fails loudly with the
-    * measured widths and the governed recipe instead of letting the
-    * exact surface fill the disk; on the healthy path it costs one
-    * map-side-combining aggregate into ≤ 4·2¹⁶ keys. */
-  private def auditUngoverned(buckets: DataFrame, bound: Long,
-      surface: String): Unit =
-    refuseHot(buckets.agg(coalesce(sum(col("mass")), lit(0L)))
-      .collect()(0).getLong(0), buckets, bound, surface)
-
-  /** [[auditUngoverned]]'s verdict on a measured `mass`: throws when it
-    * exceeds `bound`, naming the five heaviest of `buckets`. */
+  /** The verdict of an UNGOVERNED (maxBucket=None) exact surface's
+    * pre-audit on its measured projected candidate `mass`: throws when
+    * it exceeds `bound`, naming the five heaviest of `buckets` (chunk,
+    * cval, width, mass), instead of letting the exact surface fill the
+    * disk. [[pigeonholeScreen]] measures the mass of every surface it
+    * runs in one aggregate. */
   private def refuseHot(mass: Long, buckets: DataFrame, bound: Long,
       surface: String): Unit = {
     if (mass > bound) {
@@ -124,75 +113,10 @@ object Multimodal {
       maxBucket: Option[Int] = Some(1 << 12),
       maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
       : (DataFrame, DataFrame) = {
-    import graft.functions.{HashFunctions => H}
-    Buckets.check(maxHamming, maxBucket)
-    val hashed = Buckets.cutOnce(df.select(col(idCol).as("id"),
-      col(hashCol).as("ph")).filter(col("ph").isNotNull))
-    val allChunked = hashed.select(col("id"), col("ph"),
-      posexplode(H.simhashChunks(col("ph"))).as(Seq("chunk", "cval")))
-    val (dropHot, overflow) = Buckets.govern(allChunked,
-      Seq("chunk", "cval"), maxBucket, "n_ids")
-    if (maxBucket.isEmpty) {
-      // UNGOVERNED exact surface: pre-audit the projected candidate
-      // mass before committing to the quadratic join (round-17
-      // verdict item 2 — the x3 1000× lesson: the caller should not
-      // have to KNOW the corpus is hot-structured to avoid filling
-      // the disk; the engine measures and refuses with the recipe)
-      val probeFactor = if (maxHamming <= 3) 1L else 17L
-      auditUngoverned(
-        allChunked.groupBy(col("chunk"), col("cval"))
-          .agg(count(lit(1)).as("width"))
-          .select(col("chunk"), col("cval"), col("width"),
-            (col("width") * col("width") * lit(probeFactor)).as("mass")),
-        bound = maxProjectedCandidates,
-        surface = "hashNearDup (ungoverned)")
-    }
-    val chunked = dropHot(allChunked)
-    val a = chunked.select(col("chunk"), col("cval"), col("id").as("id_a"),
-      col("ph").as("ph_a"))
-    // radius ≤ 3: equal-key join. 4–7: the b side probes the 1-bit
-    // ball of each chunk (17 rows per chunk); a pair with chunk error
-    // ≤ 1 meets in the bucket keyed by the EXACT side's value, in BOTH
-    // orientations (x exact × y probe at key(x), y exact × x probe at
-    // key(y)). Both orientations are kept and normalized with
-    // least/greatest — a pair survives if EITHER endpoint's bucket at
-    // a qualifying chunk is cold, so it's missed only when ALL its
-    // qualifying chunks have BOTH endpoints' buckets hot. (An
-    // id_a < id_b post-join filter would silently require the
-    // SMALLER id's bucket to be the cold one.) The ball is generated
-    // from the unfiltered rows; the anti-join on the probe KEY only
-    // skips shuffling rows into buckets the exact side already
-    // vacated. Hamming is symmetric, so the swap may label ph_a with
-    // id_b's hash — harmless.
-    val bBase = if (maxHamming <= 3) chunked
-      else dropHot(allChunked.select(col("chunk"), col("id"), col("ph"),
-        explode(H.oneBitBall(col("cval"))).as("cval")))
-    val b = bBase.select(col("chunk"), col("cval"), col("id").as("id_b"),
-      col("ph").as("ph_b"))
-    val joined = a.join(b, Seq("chunk", "cval"))
-    val oriented =
-      if (maxHamming <= 3 || maxBucket.isEmpty)
-        // radius ≤ 3: both endpoints sit in the SAME bucket at a
-        // qualifying (equal) chunk, so the two orientations live or
-        // die together — id_a < id_b keeps one without losing recall
-        // and halves the dedup shuffle. Uncapped radius 4–7: no bucket
-        // is ever dropped, so BOTH exact×probe meetings of a pair
-        // always survive — the same one-orientation filter is
-        // recall-free there too (the least/greatest tax is only owed
-        // when a hot-bucket drop can kill one orientation).
-        joined.filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), col("ph_a"), col("ph_b"))
-      else
-        joined.filter(col("id_a") =!= col("id_b"))
-          .select(least(col("id_a"), col("id_b")).as("id_a"),
-            greatest(col("id_a"), col("id_b")).as("id_b"),
-            col("ph_a"), col("ph_b"))
-    val pairs = oriented
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"),
-        H.hamming64(col("ph_a"), col("ph_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    (pairs, overflow)
+    val (pairs, overflow) = pigeonholeScreen(
+      df.select(col(idCol).as("id"), col(hashCol).as("ph")), None,
+      self = true, maxHamming, maxBucket, maxProjectedCandidates)
+    (pairs, overflow.drop("side"))
   }
 
   /** [[hashNearDupCapped]] without the cap (exact pigeonhole — every
@@ -236,56 +160,11 @@ object Multimodal {
       maxBucket: Option[Int] = Some(1 << 12),
       maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
       : (DataFrame, DataFrame) = {
-    import graft.functions.{HashFunctions => H}
-    Buckets.check(maxHamming, maxBucket)
-    def chunked(df: DataFrame, ic: String, hc: String): DataFrame =
-      Buckets.cutOnce(df.select(col(idCol).as(ic), col(hashCol).as(hc))
-        .filter(col(hc).isNotNull))
-        .select(col(ic), col(hc),
-          posexplode(H.simhashChunks(col(hc))).as(Seq("chunk", "cval")))
-    val la = chunked(left, "id_a", "ph_a")
-    val rbExact = chunked(right, "id_b", "ph_b")
-    // radius 4–7: the RIGHT side probes the 1-bit ball per chunk; a
-    // cross pair with chunk error ≤ 1 meets in the bucket keyed by the
-    // LEFT side's exact value (exactly one ball key matches)
-    val rb = if (maxHamming <= 3) rbExact
-      else rbExact.select(col("chunk"), col("id_b"), col("ph_b"),
-        explode(H.oneBitBall(col("cval"))).as("cval"))
-    // hotness on the keys that actually MEET in the join: the left
-    // side's exact chunk keys + the right side's probe keys
-    // (ball-exploded 17× at radius 4–7, exact at ≤ 3) — so a bucket's
-    // reported n_ids IS its candidate mass (bL + bR_ball, bounding
-    // bL·bR_ball ≤ (cap/2)²), the same ball-counted accounting
-    // StreamNearDup.screenAgainst uses. Counting only exact keys would
-    // let a surviving bucket carry ~17× the documented mass at radius
-    // 4–7.
-    val (dropHot, overflow) = Buckets.govern(
-      la.select(col("chunk"), col("cval"))
-        .unionByName(rb.select(col("chunk"), col("cval"))),
-      Seq("chunk", "cval"), maxBucket, "n_ids")
-    if (maxBucket.isEmpty) {
-      // ungoverned bipartite: exact projected join mass — the two
-      // sides' histograms joined on the bucket key (rb is already
-      // ball-exploded at radius 4–7, so no probe factor)
-      val hL = la.groupBy(col("chunk"), col("cval"))
-        .agg(count(lit(1)).as("bl"))
-      val hR = rb.groupBy(col("chunk"), col("cval"))
-        .agg(count(lit(1)).as("br"))
-      auditUngoverned(
-        hL.join(hR, Seq("chunk", "cval"))
-          .select(col("chunk"), col("cval"),
-            (col("bl") + col("br")).as("width"),
-            (col("bl") * col("br")).as("mass")),
-        bound = maxProjectedCandidates,
-        surface = "hashNearDupAgainst (ungoverned)")
-    }
-    val pairs = dropHot(la).join(dropHot(rb), Seq("chunk", "cval"))
-      .select(col("id_a"), col("id_b"), col("ph_a"), col("ph_b"))
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"),
-        H.hamming64(col("ph_a"), col("ph_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    (pairs, overflow)
+    def idPh(df: DataFrame): DataFrame =
+      df.select(col(idCol).as("id"), col(hashCol).as("ph"))
+    val (pairs, overflow) = pigeonholeScreen(idPh(left), Some(idPh(right)),
+      self = false, maxHamming, maxBucket, maxProjectedCandidates)
+    (pairs, overflow.drop("side"))
   }
 
   /** [[hashNearDupAgainstCapped]] without the cap. A caller whose two
@@ -300,99 +179,120 @@ object Multimodal {
     hashNearDupAgainstCapped(left, right, idCol, hashCol, maxHamming,
       maxBucket = None, maxProjectedCandidates)._1
 
-  /** The curation kernel's pair search (`Dedup.curateKernel`): the self
-    * screen over the batch rows of `reps` ([[hashNearDupCapped]]) and,
-    * when `survivors`, the bipartite screen from them to its other rows
-    * ([[hashNearDupAgainstCapped]]), run as ONE screen — one bucket
-    * aggregate and one candidate join instead of two of each. Pairs and
-    * overflow equal the two public screens' union, at every radius, cap
-    * and null-hash mix:
+  /** The chunk-pigeonhole screen behind [[hashNearDupCapped]] (`self`
+    * alone), [[hashNearDupAgainstCapped]] (`survivors` alone) and the
+    * curation kernel (`Dedup.curateKernel`, both): over frames holding
+    * `id` and `ph`, the pairs within `batch` when `self`, and those from
+    * `batch` to `survivors` when given — one bucket aggregate and one
+    * candidate join however many of the two searches run. Each frame
+    * gets the input cut rule ([[Buckets.cutOnce]]) on its own; null
+    * hashes never pair.
     *
-    *  - Buckets: one aggregate over the keys that meet in a join — the
-    *    batch rows' exact chunk keys and the survivor rows' probe keys
-    *    (exact at radius ≤ 3, the 1-bit ball at 4–7). Per bucket,
-    *    `self` counts the batch keys (the self screen's count) and
-    *    `cross` all of them (the bipartite count). Capped, both hot
-    *    sets are one cut ([[Buckets.governBySide]]); a self-hot bucket is
-    *    always cross-hot. Uncapped, both audits come from one action:
-    *    self width² × the probe factor, bipartite bl·br, with the
-    *    public screens' surface names.
-    *  - Candidates: batch exact rows less the self-hot keys join the
-    *    union of the batch probe rows less the self-hot keys and the
-    *    survivor probe rows less the cross-hot keys (a batch row in a
-    *    bucket that is only cross-hot meets no survivor row there).
-    *    Batch-batch rows keep the self screen's orientation, survivor
-    *    rows stay (batch, survivor); one `dropDuplicates`, keyed on the
-    *    side too, and one hamming check.
-    *
-    * Without `survivors` the survivor branch is absent from the plan.
+    *  - Buckets: one aggregate over the keys that meet in the join —
+    *    the batch rows' exact chunk keys and the survivor rows' probe
+    *    keys (exact at radius ≤ 3, the 1-bit ball at 4–7). A bucket's
+    *    `self` count is its batch keys, its `cross` count all of them,
+    *    so a cross bucket's n_ids IS its candidate mass bound
+    *    (bL + bR_ball, bounding bL·bR_ball ≤ (cap/2)²; counting only
+    *    exact keys would let a surviving bucket carry ~17× that at
+    *    radius 4–7) — the accounting `StreamNearDup.screenAgainst`
+    *    uses. Capped, the hot sets are one cut
+    *    ([[Buckets.governBySide]]); a self-hot bucket is always
+    *    cross-hot. Uncapped, every search's pre-audit ([[refuseHot]])
+    *    comes from one action: self width² × the probe factor (ball
+    *    keys of a dup cluster land in the cluster's own buckets, so 17
+    *    is the cluster-structure projection, exact for the regime the
+    *    audit exists to refuse), cross the exact join mass bL·bR.
+    *  - Candidates: the batch exact rows less the first search's hot
+    *    keys join the union of the batch probe rows less the self-hot
+    *    keys and the survivor probe rows less the cross-hot keys. Self
+    *    rows are oriented as below; cross rows stay (batch, survivor)
+    *    — ids are never compared across the two frames, which own
+    *    separate id spaces (an equal id is two different documents).
+    *    One `dropDuplicates`, keyed on the search too, and one exact
+    *    hamming check.
     *
     * @return (pairs (id_a, id_b, hamming), overflow (side ∈ self|cross,
     *         chunk, cval, n_ids) per skipped bucket)
     */
-  private[graft] def curationScreen(reps: DataFrame, idCol: String,
-      hashCol: String, batchCol: String, survivors: Boolean,
-      maxHamming: Int, maxBucket: Option[Int],
+  private[graft] def pigeonholeScreen(batch: DataFrame,
+      survivors: Option[DataFrame], self: Boolean, maxHamming: Int,
+      maxBucket: Option[Int],
       maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
       : (DataFrame, DataFrame) = {
     import graft.functions.{HashFunctions => H}
     Buckets.check(maxHamming, maxBucket)
     val keys = Seq("chunk", "cval")
-    val hashed = Buckets.cutOnce(reps.select(col(idCol).as("id"),
-      col(hashCol).as("ph"), col(batchCol).as("bat"))
-      .filter(col("ph").isNotNull))
-    def exact(rows: DataFrame): DataFrame = rows.select(col("id"), col("ph"),
-      posexplode(H.simhashChunks(col("ph"))).as(Seq("chunk", "cval")))
+    def exact(df: DataFrame): DataFrame =
+      Buckets.cutOnce(df.filter(col("ph").isNotNull)).select(col("id"),
+        col("ph"), posexplode(H.simhashChunks(col("ph")))
+          .as(Seq("chunk", "cval")))
+    // radius 4–7: the probe side explodes each chunk's 1-bit ball (17
+    // keys); a pair with chunk error ≤ 1 meets in the bucket keyed by
+    // the EXACT side's value (exactly one ball key matches)
     def probe(rows: DataFrame): DataFrame =
       if (maxHamming <= 3) rows
       else rows.select(col("chunk"), col("id"), col("ph"),
         explode(H.oneBitBall(col("cval"))).as("cval"))
-    val batExact = exact(hashed.filter(col("bat")))
-    val survProbe =
-      if (survivors) Some(probe(exact(hashed.filter(!col("bat"))))) else None
-    def sided(rows: DataFrame, self: Boolean): DataFrame =
-      rows.select(col("chunk"), col("cval"), lit(self).as("self"))
-    val keyed = survProbe.fold(sided(batExact, self = true))(sp =>
-      sided(batExact, self = true).unionByName(sided(sp, self = false)))
-    val sides = ("self" -> col("self")) +:
-      (if (survivors) Seq("cross" -> lit(true)) else Nil)
+    val batExact = exact(batch)
+    val survProbe = survivors.map(s => probe(exact(s)))
+    def keyed(rows: DataFrame, bat: Boolean): DataFrame =
+      rows.select(col("chunk"), col("cval"), lit(bat).as("bat"))
+    val met = survProbe.foldLeft(keyed(batExact, bat = true))(
+      (k, sp) => k.unionByName(keyed(sp, bat = false)))
+    val sides = (if (self) Seq("self" -> col("bat")) else Nil) ++
+      survivors.map(_ => "cross" -> lit(true))
     val (dropHot, overflow) =
-      Buckets.governBySide(keyed, keys, maxBucket, "n_ids", sides)
+      Buckets.governBySide(met, keys, maxBucket, "n_ids", sides)
     if (maxBucket.isEmpty) {
-      // the UNGOVERNED exact surfaces' pre-audits ([[auditUngoverned]]),
-      // both from one aggregate in one action
+      // UNGOVERNED exact surfaces: measure the projected candidate mass
+      // before committing to the quadratic join (the x3 1000× lesson —
+      // the caller should not have to KNOW the corpus is
+      // hot-structured to avoid filling the disk)
       val probeFactor = if (maxHamming <= 3) 1L else 17L
-      val widths = keyed.groupBy(keys.map(col): _*)
-        .agg(count(when(col("self"), 1)).as("bl"), count(lit(1)).as("bw"))
+      val widths = met.groupBy(keys.map(col): _*)
+        .agg(count(when(col("bat"), 1)).as("bl"), count(lit(1)).as("bw"))
         .select(col("chunk"), col("cval"), col("bl"),
           (col("bw") - col("bl")).as("br"))
-      val selfMass = col("bl") * col("bl") * lit(probeFactor)
-      val crossMass = col("bl") * col("br")
-      val masses = widths.agg(coalesce(sum(selfMass), lit(0L)),
-        coalesce(sum(crossMass), lit(0L))).collect()(0)
-      refuseHot(masses.getLong(0), widths.filter(col("bl") > 0)
-          .select(col("chunk"), col("cval"), col("bl").as("width"),
-            selfMass.as("mass")),
-        maxProjectedCandidates, "hashNearDup (ungoverned)")
-      if (survivors)
-        refuseHot(masses.getLong(1),
-          widths.filter(col("bl") > 0 && col("br") > 0)
-            .select(col("chunk"), col("cval"),
-              (col("bl") + col("br")).as("width"), crossMass.as("mass")),
-          maxProjectedCandidates, "hashNearDupAgainst (ungoverned)")
+      val audits = (if (self) Seq(("hashNearDup (ungoverned)",
+          col("bl") * col("bl") * lit(probeFactor), col("bl"))) else Nil) ++
+        survivors.map(_ => ("hashNearDupAgainst (ungoverned)",
+          col("bl") * col("br"), col("bl") + col("br")))
+      val sums = audits.map { case (_, mass, _) =>
+        coalesce(sum(mass), lit(0L)) }
+      val masses = widths.agg(sums.head, sums.tail: _*).collect()(0)
+      for (((surface, mass, width), i) <- audits.zipWithIndex)
+        refuseHot(masses.getLong(i), widths.filter(mass > 0)
+            .select(col("chunk"), col("cval"), width.as("width"),
+              mass.as("mass")),
+          maxProjectedCandidates, surface)
     }
-    val a = dropHot("self")(batExact).select(col("chunk"), col("cval"),
-      col("id").as("id_a"), col("ph").as("ph_a"))
-    def bSide(rows: DataFrame, self: Boolean): DataFrame =
-      rows.select(col("chunk"), col("cval"), col("id").as("id_b"),
-        col("ph").as("ph_b"), lit(self).as("self"))
-    val bSelf = bSide(dropHot("self")(probe(batExact)), self = true)
-    val b = survProbe.fold(bSelf)(sp =>
-      bSelf.unionByName(bSide(dropHot("cross")(sp), self = false)))
-    val joined = a.join(b, keys)
-    // the self rows' orientation is [[hashNearDupCapped]]'s: one
-    // orientation (id_a < id_b) unless a capped radius-4–7 drop can
-    // kill one of the two exact×probe meetings
+    // the exact side serves both searches, so it drops the first
+    // search's hot keys: a batch row left in a bucket that is only
+    // cross-hot meets no survivor row there
+    val a = dropHot(sides.head._1)(batExact).select(col("chunk"),
+      col("cval"), col("id").as("id_a"), col("ph").as("ph_a"))
+    def b(rows: DataFrame, side: String): DataFrame =
+      dropHot(side)(rows).select(col("chunk"), col("cval"),
+        col("id").as("id_b"), col("ph").as("ph_b"),
+        lit(side == "self").as("self"))
+    val bs = (if (self) Seq(b(probe(batExact), "self")) else Nil) ++
+      survProbe.map(b(_, "cross"))
+    val joined = a.join(bs.reduce(_ unionByName _), keys)
+    // Self rows at radius 4–7 meet in BOTH orientations (x exact × y
+    // probe at key(x), y exact × x probe at key(y)). Capped, both are
+    // kept and least/greatest-normalized: a pair survives if EITHER
+    // endpoint's bucket at a qualifying chunk is cold, so it is missed
+    // only when ALL its qualifying chunks have BOTH endpoints' buckets
+    // hot (an id_a < id_b filter would silently require the SMALLER
+    // id's bucket to be the cold one). At radius ≤ 3 both endpoints sit
+    // in the SAME bucket, and uncapped no bucket is dropped, so the two
+    // orientations live or die together — id_a < id_b keeps one
+    // without losing recall and halves the dedup shuffle. The ball is
+    // generated from the unfiltered rows; the drop on the probe KEY
+    // only skips shuffling rows into buckets the exact side vacated.
+    // Hamming is symmetric, so the swap may label ph_a with id_b's
+    // hash — harmless.
     val isCross = !col("self")
     val oriented =
       if (maxHamming <= 3 || maxBucket.isEmpty)
@@ -414,7 +314,6 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
     (pairs, overflow)
   }
-
   /** Image near-duplicate detection: perceptual dHash over the REAL
     * decoded pixel plane ([[PixelDecode.imageDHashAny]] — magic-sniff
     * PNG/GIF/JPEG/WebP dispatch into one integer 9×8 area-average core,
