@@ -3084,15 +3084,15 @@ object ExtQueries {
   }
 
   /** The streaming frozen-reference screen's EXACT plan, driver-gated
-    * in batch mode (`StreamNearDup.screenAgainst` runs the same
+    * in batch mode (`StreamNearDup.screenAgainst` is the one
+    * pigeonhole screen with the arrivals as its batch, the same
     * stream-static-join DAG over a batch frame): even docs play the
     * frozen PNG reference, odd docs the JPEG arrival stream — x139's
-    * pair set through the streaming operator's lowest-surviving-
-    * equal-chunk emission instead of the batch dedupe. FULL exact
-    * oracle (same as x139): the even×odd residue join at hamming 0,
-    * every row recomputed by DuckDB — which also proves the
-    * exactly-once rule emits each pair exactly ONCE (a duplicate row
-    * would hash-fail). */
+    * pair set through the screen's one exactly-once row filter (each
+    * pair kept at its least surviving meeting). FULL exact oracle (same
+    * as x139): the even×odd residue join at hamming 0, every row
+    * recomputed by DuckDB — which also proves the filter emits each
+    * pair exactly ONCE (a duplicate row would hash-fail). */
   private def x143(s: SparkSession, dir: String): DataFrame = {
     val ids = t(s, dir, "documents").select(col("doc_id"))
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
   LogicalPlan, Project}
@@ -9,24 +9,26 @@ import org.apache.spark.sql.functions._
 
 /** The bucket-governance rule of every capped candidate generator
   * (`Dedup.minhashLshCapped`, `ngramJaccardCapped`,
-  * `embeddingCosineCapped`, `Multimodal.pigeonholeScreen` — behind
-  * `hashNearDupCapped`, `hashNearDupAgainstCapped` and the curation
-  * kernel — and `StreamNearDup.screenAgainst`), and the family's one cut
+  * `embeddingCosineCapped` and `Multimodal.pigeonholeScreen` — behind
+  * `hashNearDupCapped`, `hashNearDupAgainstCapped`, the curation
+  * kernel and `StreamNearDup.screenAgainst`), and the family's one cut
   * policy.
   *
   * Drop and report: a bucket whose key holds more than `cap` members
   * would emit a quadratic number of candidate pairs, so it is SKIPPED
   * for candidate generation and accounted for in the overflow frame —
   * one row per hot bucket, its keys and its member count. The hot set
-  * is small by assumption (pathological buckets only): it is cut once
-  * with an eager `localCheckpoint`, and the drop is a broadcast
-  * `left_anti` join on the keys, so the blowup never reaches the
-  * shuffle and the drop and any reader of the overflow frame share one
-  * aggregate. Pairs can be missed, never invented: verification is
-  * exact either way. With no cap set the overflow frame is empty, has
-  * the capped frame's schema, and runs no Spark job. The exact twins
-  * (`ngramJaccard`, `embeddingCosine`) fail loudly instead, naming up
-  * to three hot buckets ([[requireCold]]).
+  * is small by assumption (pathological buckets only): one aggregate
+  * counts every bucket, and its hot rows come to the driver once,
+  * under a loud size bound ([[MaxHotBuckets]]), as a local relation
+  * that every reader shares without running a job. The drop is a
+  * broadcast `left_anti` join on the keys ([[drop]]); the pigeonhole
+  * screen looks its hot keys up row-side instead. Pairs can be
+  * missed, never invented: verification is exact either way. With no
+  * cap set the overflow frame is empty, has the capped frame's
+  * schema, and runs no Spark job. The exact twins (`ngramJaccard`,
+  * `embeddingCosine`) fail loudly instead, naming up to three hot
+  * buckets ([[requireCold]]).
   */
 private[graft] object Buckets {
 
@@ -48,34 +50,51 @@ private[graft] object Buckets {
       countCol: String): DataFrame =
     keyed.groupBy(keys.map(col): _*).agg(count(lit(1)).as(countCol))
 
+  /** At most this many hot buckets come to the driver: the hot set is
+    * a few pathological buckets, so a larger one means the cap is set
+    * far too low for the corpus. */
+  private val MaxHotBuckets = 1 << 20
+
+  /** `hot`'s rows, collected under [[MaxHotBuckets]] (each task sends
+    * at most one row past it), and the local relation of them: reading
+    * it runs no job. */
+  private def toDriver(hot: DataFrame,
+      capName: String): (Array[Row], DataFrame) = {
+    val rows = hot.mapPartitions(_.take(MaxHotBuckets + 1))(
+      Encoders.row(hot.schema)).collect()
+    if (rows.length > MaxHotBuckets)
+      throw new IllegalStateException(s"more than $MaxHotBuckets buckets " +
+        s"exceed the cap: the hot set must fit on the driver; raise $capName")
+    (rows, hot.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      hot.schema))
+  }
+
   /** The buckets of `keyed` holding more than `cap` rows, as (keys…,
-    * countCol), cut once. */
+    * countCol), on the driver. */
   def hot(keyed: DataFrame, keys: Seq[String], cap: Int, countCol: String,
       capName: String = "maxBucket"): DataFrame = {
     checkCap(cap, capName)
-    counts(keyed, keys, countCol).filter(col(countCol) > cap)
-      .localCheckpoint(true)
+    toDriver(counts(keyed, keys, countCol).filter(col(countCol) > cap),
+      capName)._2
   }
 
-  /** (drop per side, overflow) under an optional cap, for buckets that
-    * one or more sides of a join read: one aggregate counts, per bucket,
+  /** (hot rows, overflow) under an optional cap, for buckets that one
+    * or more sides of a join read: one aggregate counts, per bucket,
     * the rows each side's predicate holds for, and a bucket is hot for
     * a side when that count exceeds the cap. The overflow is (side,
-    * keys…, countCol), one row per hot (side, bucket), exploded before
-    * the cut so that every side's [[drop]] and the overflow read one
-    * checkpoint; with no cap, no drop and the [[none]] frame of the same
-    * columns. */
+    * keys…, countCol), one row per hot (side, bucket), on the driver
+    * with its rows; with no cap, no rows and the [[none]] frame of the
+    * same columns. */
   def governBySide(keyed: DataFrame, keys: Seq[String],
       maxBucket: Option[Int], countCol: String,
-      sides: Seq[(String, Column)]): (String => DataFrame => DataFrame,
-      DataFrame) =
+      sides: Seq[(String, Column)]): (Array[Row], DataFrame) =
     maxBucket match {
       case Some(cap) =>
         checkCap(cap)
         val counts = sides.map { case (side, p) =>
           count(when(p, 1)).as(s"__n_$side") }
         val n = sides.map { case (side, _) => col(s"__n_$side") }
-        val h = keyed.groupBy(keys.map(col): _*)
+        toDriver(keyed.groupBy(keys.map(col): _*)
           .agg(counts.head, counts.tail: _*)
           .filter(n.map(_ > cap).reduce(_ || _))
           .select(explode(array(sides.zip(n).map { case ((side, _), c) =>
@@ -83,12 +102,10 @@ private[graft] object Buckets {
             .as("__s") +: keys.map(col): _*)
           .select(col("__s.side").as("side") +: keys.map(col) :+
             col(s"__s.$countCol").as(countCol): _*)
-          .filter(col(countCol) > cap)
-          .localCheckpoint(true)
-        (side => drop(_, h.filter(col("side") === side), keys), h)
-      case None => (_ => identity,
-        none(keyed.select(lit(sides.head._1).as("side") +: keys.map(col): _*),
-          "side" +: keys, countCol))
+          .filter(col(countCol) > cap), "maxBucket")
+      case None => (Array.empty, none(keyed.select(
+        lit(sides.head._1).as("side") +: keys.map(col): _*),
+        "side" +: keys, countCol))
     }
 
   /** `df` without the rows whose `keys` name a bucket of `hot`. */
@@ -101,14 +118,17 @@ private[graft] object Buckets {
     keyed.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](),
       counts(keyed, keys, countCol).schema)
 
-  /** (drop, overflow) under an optional cap: [[governBySide]] with one
-    * side that counts every row, its overflow without the side column. */
+  /** (drop, overflow) under an optional cap: the [[hot]] buckets of
+    * `keyed` and the [[drop]] of them, or no drop and the [[none]]
+    * frame. */
   def govern(keyed: DataFrame, keys: Seq[String], maxBucket: Option[Int],
-      countCol: String): (DataFrame => DataFrame, DataFrame) = {
-    val (drop, overflow) =
-      governBySide(keyed, keys, maxBucket, countCol, Seq("all" -> lit(true)))
-    (drop("all"), overflow.drop("side"))
-  }
+      countCol: String): (DataFrame => DataFrame, DataFrame) =
+    maxBucket match {
+      case Some(cap) =>
+        val h = hot(keyed, keys, cap, countCol)
+        (drop(_, h, keys), h)
+      case None => (identity, none(keyed, keys, countCol))
+    }
 
   /** The exact twins' rule: throw when `hot` holds a bucket, naming up
     * to three as "first key (label=count)". */

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** [EXT] The DEPLOYMENT shape of incremental curation: a versioned
   * survivor store updated once per micro-batch through
@@ -23,8 +24,9 @@ import org.apache.spark.sql.functions._
   *  - `v<N>/` — one immutable parquet snapshot per applied increment
   *    (schema: idCol, hashCol, qualityCol, n_copies);
   *  - `overflow_v<N>/` — that increment's drop-and-report frame;
-  *  - `_COMMIT_<N>` — tiny marker `"<N> <batchId>"`, one per applied
-  *    version, written AFTER its snapshot completes. The CURRENT
+  *  - `_COMMIT_<N>` — tiny marker `"<N> <batchId>"`, then a newline
+  *    and the snapshot's schema as JSON, one per applied version,
+  *    written AFTER its snapshot completes. The CURRENT
   *    version is the maximum committed N; readers resolve it with one
   *    directory listing, then read an immutable snapshot — a
   *    concurrent reader never sees a half-written table, and the
@@ -110,7 +112,12 @@ object CurationRunner {
     * the maximum committed `_COMMIT_<N>`, whose content carries the
     * last applied batchId. */
   def current(dir: String,
-      spark: Option[SparkSession] = None): Option[Pointer] = {
+      spark: Option[SparkSession] = None): Option[Pointer] =
+    latest(dir, spark).map(_._1)
+
+  /** The current pointer and the snapshot schema its marker carries. */
+  private def latest(dir: String, spark: Option[SparkSession])
+      : Option[(Pointer, Option[StructType])] = {
     val (fs, root) = fsRoot(dir, spark)
     if (!fs.exists(root)) return None
     val latest = fs.listStatus(root).iterator.flatMap { st =>
@@ -132,12 +139,23 @@ object CurationRunner {
           while (r > 0) { buf.write(tmp, 0, r); r = in.read(tmp) }
           new String(buf.toByteArray, StandardCharsets.UTF_8)
         } finally in.close()
-      val parts = content.trim.split("\\s+")
+      val (head, schema) = content.span(_ != '\n')
+      val parts = head.trim.split("\\s+")
       require(parts.length == 2 && parts(0).toLong == n,
         s"corrupt commit marker $p: '$content'")
-      Pointer(n, parts(1).toLong)
+      (Pointer(n, parts(1).toLong), Option(schema.trim).filter(_.nonEmpty)
+        .map(DataType.fromJson(_).asInstanceOf[StructType]))
     }
   }
+
+  /** The snapshot `marker` names, read with the schema it carries: no
+    * footer-inference job. A marker in the older `"<N> <batchId>"`
+    * format carries none — stores already on disk were committed that
+    * way — and its snapshot is read with inference. */
+  private def snapshot(spark: SparkSession, dir: String,
+      marker: (Pointer, Option[StructType])): DataFrame =
+    marker._2.fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$dir/v${marker._1.version}")
 
   /** The current survivor table. On an EMPTY store this read helper
     * returns an all-LongType empty frame (it has no batch to borrow
@@ -146,14 +164,13 @@ object CurationRunner {
     * frame. */
   def survivors(spark: SparkSession, dir: String, idCol: String,
       hashCol: String, qualityCol: String): DataFrame =
-    current(dir, Some(spark)) match {
-      case Some(ptr) => spark.read.parquet(s"$dir/v${ptr.version}")
+    latest(dir, Some(spark)) match {
+      case Some(marker) => snapshot(spark, dir, marker)
       case None => emptySurvivors(spark, idCol, hashCol, qualityCol)
     }
 
   private def emptySurvivors(spark: SparkSession, idCol: String,
       hashCol: String, qualityCol: String): DataFrame = {
-    import org.apache.spark.sql.types._
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField(idCol, LongType), StructField(hashCol, LongType),
         StructField(qualityCol, LongType), StructField("n_copies", LongType))))
@@ -166,16 +183,16 @@ object CurationRunner {
       maxHamming: Int = 3,
       maxBucket: Option[Int] = Some(1 << 12)): Boolean = {
     val spark = batch.sparkSession
-    val cur = current(dir, Some(spark))
-    if (cur.exists(_.batchId >= batchId)) return false
+    val cur = latest(dir, Some(spark))
+    if (cur.exists(_._1.batchId >= batchId)) return false
     val surv = cur match {
-      case Some(ptr) => spark.read.parquet(s"$dir/v${ptr.version}")
+      case Some(marker) => snapshot(spark, dir, marker)
       // bootstrap: empty survivors with the BATCH's exact column types
       // (a LongType assumption would break an int quality column)
       case None => batch.select(col(idCol), col(hashCol), col(qualityCol))
         .limit(0).withColumn("n_copies", lit(0L))
     }
-    val next = cur.map(_.version + 1).getOrElse(0L)
+    val next = cur.map(_._1.version + 1).getOrElse(0L)
     val (out, overflow) = Dedup.curateIncrementCapped(surv, batch,
       idCol, hashCol, qualityCol, maxHamming = maxHamming,
       maxBucket = maxBucket)
@@ -220,7 +237,8 @@ object CurationRunner {
     val tmp = new Path(root, s"_COMMIT_$next.tmp")
     val dst = new Path(root, s"_COMMIT_$next")
     val os = fs.create(tmp, true)
-    try os.write(s"$next $batchId".getBytes(StandardCharsets.UTF_8))
+    try os.write(s"$next $batchId\n${out.schema.json}"
+      .getBytes(StandardCharsets.UTF_8))
     finally os.close()
     // the final name NEVER pre-exists under the single-writer
     // protocol: a crash before the rename leaves only the .tmp, and a

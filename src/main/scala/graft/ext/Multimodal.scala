@@ -94,9 +94,8 @@ object Multimodal {
     * dropped and reported by the family's governance rule
     * ([[Buckets]]); a pair is missed only if at EVERY qualifying chunk
     * (equal at radius ≤ 3; within 1 bit at 4–7) BOTH endpoints'
-    * exact-value buckets are hot (both orientations of the exact×probe
-    * meeting are kept and least/greatest-normalized, so one cold
-    * endpoint bucket rescues the pair).
+    * exact-value buckets are hot (the pair meets in either endpoint's
+    * bucket, so one cold endpoint bucket rescues it).
     *
     * Input cut: the projected (id, hash) input is read several times
     * (bucket histogram, both join sides), so it goes through the
@@ -179,38 +178,59 @@ object Multimodal {
     hashNearDupAgainstCapped(left, right, idCol, hashCol, maxHamming,
       maxBucket = None, maxProjectedCandidates)._1
 
-  /** The chunk-pigeonhole screen behind [[hashNearDupCapped]] (`self`
-    * alone), [[hashNearDupAgainstCapped]] (`survivors` alone) and the
-    * curation kernel (`Dedup.curateKernel`, both): over frames holding
-    * `id` and `ph`, the pairs within `batch` when `self`, and those from
-    * `batch` to `survivors` when given — one bucket aggregate and one
-    * candidate join however many of the two searches run. Each frame
-    * gets the input cut rule ([[Buckets.cutOnce]]) on its own; null
-    * hashes never pair.
+  /** The one chunk-pigeonhole screen, behind [[hashNearDupCapped]]
+    * (`self` alone), [[hashNearDupAgainstCapped]] (`survivors` alone),
+    * the curation kernel (`Dedup.curateKernel`, both) and the frozen
+    * streaming screen (`StreamNearDup.screenAgainst`: a streaming
+    * `batch` against static `survivors`): over frames holding `id` and
+    * `ph`, the pairs within `batch` when `self`, and those from `batch`
+    * to `survivors` when given — one bucket aggregate and one candidate
+    * join however many of the two searches run, and no shuffle after
+    * the join. A static frame gets the input cut rule
+    * ([[Buckets.cutOnce]]) on its own; a streaming `batch` is read once
+    * per micro-batch and is not cut. Null hashes never pair.
     *
     *  - Buckets: one aggregate over the keys that meet in the join —
     *    the batch rows' exact chunk keys and the survivor rows' probe
     *    keys (exact at radius ≤ 3, the 1-bit ball at 4–7). A bucket's
-    *    `self` count is its batch keys, its `cross` count all of them,
-    *    so a cross bucket's n_ids IS its candidate mass bound
+    *    `self` count is its batch keys. Its `cross` count is all of
+    *    them, so a cross bucket's n_ids IS its candidate mass bound
     *    (bL + bR_ball, bounding bL·bR_ball ≤ (cap/2)²; counting only
     *    exact keys would let a surviving bucket carry ~17× that at
-    *    radius 4–7) — the accounting `StreamNearDup.screenAgainst`
-    *    uses. Capped, the hot sets are one cut
+    *    radius 4–7) — unless `crossCountsBatch` is false: then it is
+    *    the survivors' probe keys alone and the batch stays out of the
+    *    aggregate (a stream's arrival counts cannot be known without
+    *    state). Capped, the hot sets come to the driver once
     *    ([[Buckets.governBySide]]); a self-hot bucket is always
     *    cross-hot. Uncapped, every search's pre-audit ([[refuseHot]])
-    *    comes from one action: self width² × the probe factor (ball
-    *    keys of a dup cluster land in the cluster's own buckets, so 17
-    *    is the cluster-structure projection, exact for the regime the
-    *    audit exists to refuse), cross the exact join mass bL·bR.
+    *    comes from one action over a static batch: self width² × the
+    *    probe factor (ball keys of a dup cluster land in the cluster's
+    *    own buckets, so 17 is the cluster-structure projection, exact
+    *    for the regime the audit exists to refuse), cross the exact
+    *    join mass bL·bR.
+    *  - One lookup: the hot buckets are one sorted array of packed
+    *    (search, chunk, value) longs in a broadcast, probed row-side
+    *    (no hot key is a plan literal; an empty hot set folds to
+    *    false). It drops the hot keys from the join sides and decides
+    *    the filter below.
     *  - Candidates: the batch exact rows less the first search's hot
     *    keys join the union of the batch probe rows less the self-hot
-    *    keys and the survivor probe rows less the cross-hot keys. Self
-    *    rows are oriented as below; cross rows stay (batch, survivor)
-    *    — ids are never compared across the two frames, which own
-    *    separate id spaces (an equal id is two different documents).
-    *    One `dropDuplicates`, keyed on the search too, and one exact
-    *    hamming check.
+    *    keys and the survivor probe rows less the cross-hot keys. Ids
+    *    are never compared across the two frames, which own separate
+    *    id spaces (an equal id is two different documents).
+    *  - Each pair once, by a row filter: a pair MEETS at chunk p when
+    *    its chunks there are within `tol` (0 at radius ≤ 3, 1 at 4–7),
+    *    in the bucket of the exact side's value — either endpoint of a
+    *    self pair, the batch endpoint of a cross pair — and the meeting
+    *    survives when that bucket is not hot for the pair's search. A
+    *    candidate row is one surviving meeting, and it is kept when its
+    *    (chunk, exact-side id) is the least of its pair's: both hashes
+    *    are on the row, so every meeting computes the same answer.
+    *    Uncapped or at radius ≤ 3 both endpoints of a self pair meet in
+    *    the same buckets, and this is id_a < id_b at the lowest meeting
+    *    chunk; capped at 4–7 either endpoint's cold bucket rescues the
+    *    pair. Self pairs come out as (least id, greatest id), cross
+    *    pairs as (batch, survivor); one exact hamming check.
     *
     * @return (pairs (id_a, id_b, hamming), overflow (side ∈ self|cross,
     *         chunk, cval, n_ids) per skipped bucket)
@@ -218,38 +238,45 @@ object Multimodal {
   private[graft] def pigeonholeScreen(batch: DataFrame,
       survivors: Option[DataFrame], self: Boolean, maxHamming: Int,
       maxBucket: Option[Int],
-      maxProjectedCandidates: Long = DefaultMaxProjectedCandidates)
-      : (DataFrame, DataFrame) = {
+      maxProjectedCandidates: Long = DefaultMaxProjectedCandidates,
+      crossCountsBatch: Boolean = true): (DataFrame, DataFrame) = {
     import graft.functions.{HashFunctions => H}
     Buckets.check(maxHamming, maxBucket)
+    require(!batch.isStreaming || !(self || crossCountsBatch),
+      "a streaming batch is screened only against static survivors, " +
+        "on their keys' counts (self = false)")
     val keys = Seq("chunk", "cval")
-    def exact(df: DataFrame): DataFrame =
-      Buckets.cutOnce(df.filter(col("ph").isNotNull)).select(col("id"),
-        col("ph"), posexplode(H.simhashChunks(col("ph")))
+    val tol = if (maxHamming <= 3) 0 else 1
+    def exact(df: DataFrame): DataFrame = {
+      val hashed = df.filter(col("ph").isNotNull)
+      (if (df.isStreaming) hashed else Buckets.cutOnce(hashed)).select(
+        col("id"), col("ph"), posexplode(H.simhashChunks(col("ph")))
           .as(Seq("chunk", "cval")))
+    }
     // radius 4–7: the probe side explodes each chunk's 1-bit ball (17
     // keys); a pair with chunk error ≤ 1 meets in the bucket keyed by
     // the EXACT side's value (exactly one ball key matches)
     def probe(rows: DataFrame): DataFrame =
-      if (maxHamming <= 3) rows
+      if (tol == 0) rows
       else rows.select(col("chunk"), col("id"), col("ph"),
         explode(H.oneBitBall(col("cval"))).as("cval"))
     val batExact = exact(batch)
     val survProbe = survivors.map(s => probe(exact(s)))
     def keyed(rows: DataFrame, bat: Boolean): DataFrame =
       rows.select(col("chunk"), col("cval"), lit(bat).as("bat"))
-    val met = survProbe.foldLeft(keyed(batExact, bat = true))(
-      (k, sp) => k.unionByName(keyed(sp, bat = false)))
+    val survKeys = survProbe.map(keyed(_, bat = false))
+    val met = survKeys.foldLeft(keyed(batExact, bat = true))(_ unionByName _)
     val sides = (if (self) Seq("self" -> col("bat")) else Nil) ++
       survivors.map(_ => "cross" -> lit(true))
-    val (dropHot, overflow) =
-      Buckets.governBySide(met, keys, maxBucket, "n_ids", sides)
-    if (maxBucket.isEmpty) {
+    val (hotRows, overflow) = Buckets.governBySide(
+      if (self || crossCountsBatch) met else survKeys.get, keys, maxBucket,
+      "n_ids", sides)
+    if (maxBucket.isEmpty && !batch.isStreaming) {
       // UNGOVERNED exact surfaces: measure the projected candidate mass
       // before committing to the quadratic join (the x3 1000× lesson —
       // the caller should not have to KNOW the corpus is
       // hot-structured to avoid filling the disk)
-      val probeFactor = if (maxHamming <= 3) 1L else 17L
+      val probeFactor = if (tol == 0) 1L else 17L
       val widths = met.groupBy(keys.map(col): _*)
         .agg(count(when(col("bat"), 1)).as("bl"), count(lit(1)).as("bw"))
         .select(col("chunk"), col("cval"), col("bl"),
@@ -267,51 +294,61 @@ object Multimodal {
               mass.as("mass")),
           maxProjectedCandidates, surface)
     }
+    // one packed key per hot (search, chunk, value), self on bit 18
+    val hotKeys = hotRows.map(r =>
+      (if (r.getString(0) == "self") 1L << 18 else 0L) |
+        (r.getInt(1).toLong << 16) | r.getLong(2)).sorted
+    val isHot: Column => Column =
+      if (hotKeys.isEmpty) _ => lit(false)
+      else {
+        val set = batch.sparkSession.sparkContext.broadcast(hotKeys)
+        val lookup = udf((k: Long) =>
+          java.util.Arrays.binarySearch(set.value, k) >= 0)
+        k => lookup(k)
+      }
+    def hot(self: Column, chunk: Column, cval: Column): Column =
+      isHot(shiftleft(self.cast("long"), 18)
+        .bitwiseOR(shiftleft(chunk.cast("long"), 16)).bitwiseOR(cval))
+    def cold(rows: DataFrame, self: Boolean): DataFrame =
+      rows.filter(!hot(lit(self), col("chunk"), col("cval")))
     // the exact side serves both searches, so it drops the first
     // search's hot keys: a batch row left in a bucket that is only
     // cross-hot meets no survivor row there
-    val a = dropHot(sides.head._1)(batExact).select(col("chunk"),
-      col("cval"), col("id").as("id_a"), col("ph").as("ph_a"))
-    def b(rows: DataFrame, side: String): DataFrame =
-      dropHot(side)(rows).select(col("chunk"), col("cval"),
-        col("id").as("id_b"), col("ph").as("ph_b"),
-        lit(side == "self").as("self"))
-    val bs = (if (self) Seq(b(probe(batExact), "self")) else Nil) ++
-      survProbe.map(b(_, "cross"))
-    val joined = a.join(bs.reduce(_ unionByName _), keys)
-    // Self rows at radius 4–7 meet in BOTH orientations (x exact × y
-    // probe at key(x), y exact × x probe at key(y)). Capped, both are
-    // kept and least/greatest-normalized: a pair survives if EITHER
-    // endpoint's bucket at a qualifying chunk is cold, so it is missed
-    // only when ALL its qualifying chunks have BOTH endpoints' buckets
-    // hot (an id_a < id_b filter would silently require the SMALLER
-    // id's bucket to be the cold one). At radius ≤ 3 both endpoints sit
-    // in the SAME bucket, and uncapped no bucket is dropped, so the two
-    // orientations live or die together — id_a < id_b keeps one
-    // without losing recall and halves the dedup shuffle. The ball is
-    // generated from the unfiltered rows; the drop on the probe KEY
-    // only skips shuffling rows into buckets the exact side vacated.
-    // Hamming is symmetric, so the swap may label ph_a with id_b's
-    // hash — harmless.
-    val isCross = !col("self")
-    val oriented =
-      if (maxHamming <= 3 || maxBucket.isEmpty)
-        joined.filter(isCross || col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), col("ph_a"), col("ph_b"),
-            col("self"))
-      else
-        joined.filter(isCross || col("id_a") =!= col("id_b"))
-          .select(
-            when(isCross, col("id_a"))
-              .otherwise(least(col("id_a"), col("id_b"))).as("id_a"),
-            when(isCross, col("id_b"))
-              .otherwise(greatest(col("id_a"), col("id_b"))).as("id_b"),
-            col("ph_a"), col("ph_b"), col("self"))
-    val pairs = oriented
-      .dropDuplicates("id_a", "id_b", "self")
-      .select(col("id_a"), col("id_b"),
-        H.hamming64(col("ph_a"), col("ph_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    val a = cold(batExact, self).select(col("chunk"), col("cval"),
+      col("id").as("id_a"), col("ph").as("ph_a"))
+    def b(rows: DataFrame, self: Boolean): DataFrame =
+      cold(rows, self).select(col("chunk"), col("cval"),
+        col("id").as("id_b"), col("ph").as("ph_b"), lit(self).as("self"))
+    val bs = (if (self) Seq(b(probe(batExact), self = true)) else Nil) ++
+      survProbe.map(b(_, self = false))
+    val isSelf = col("self")
+    def chunkOf(ph: String, p: Int): Column =
+      shiftrightunsigned(col(ph), 16 * p).bitwiseAND(lit(0xffffL))
+    // the meeting at chunk p in the bucket of `ph`'s value survives
+    def survives(p: Int, ph: String): Column =
+      !hot(isSelf, lit(p), chunkOf(ph, p))
+    def meets(p: Int): Column =
+      H.hamming64(chunkOf("ph_a", p), chunkOf("ph_b", p)) <= tol
+    // a row meets at (chunk c, exact side id_a); it is the pair's least
+    // surviving meeting when none survives at a lower chunk and, for a
+    // self pair, the other endpoint's meeting at c has no lower id
+    val leastMeeting = (0 until 4).map { c =>
+      (0 until c).foldLeft(col("chunk") === c &&
+          !(isSelf && col("id_b") < col("id_a") && survives(c, "ph_b"))) {
+        (ok, p) => ok &&
+          !(meets(p) && (survives(p, "ph_a") || isSelf && survives(p, "ph_b")))
+      }
+    }.reduce(_ || _)
+    val pairs = a.join(bs.reduce(_ unionByName _), keys)
+      .withColumn("hamming", H.hamming64(col("ph_a"), col("ph_b")))
+      .filter(col("hamming") <= maxHamming &&
+        (!isSelf || col("id_a") =!= col("id_b")) && leastMeeting)
+      .select(
+        when(isSelf, least(col("id_a"), col("id_b")))
+          .otherwise(col("id_a")).as("id_a"),
+        when(isSelf, greatest(col("id_a"), col("id_b")))
+          .otherwise(col("id_b")).as("id_b"),
+        col("hamming"))
     (pairs, overflow)
   }
   /** Image near-duplicate detection: perceptual dHash over the REAL

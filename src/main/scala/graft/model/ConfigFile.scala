@@ -96,7 +96,6 @@ final case class OutboxSettings(
 
   /** `Outbox.drainBatch`-shaped arguments: (compactAll, compactTopics). */
   def compactArgs: (Boolean, Set[String]) = args(compactTopics)
-  def logArgs: (Boolean, Set[String]) = args(logTopics)
   private def args(s: TopicSelector): (Boolean, Set[String]) = s match {
     case TopicSelector.All => (true, Set.empty)
     case TopicSelector.Names(n) => (false, n)

@@ -8,7 +8,7 @@ import graft.operators.Pipeline
 import graft.schema.SchemaBackend
 import graft.streaming.Streams
 
-/** Producer-side extension API (U1/U3 hook set — reference:
+/** Producer-side extension API (U1/P13 hook set — reference:
   * `active_record_producer.rb:75-130`, `producer.rb:73-75`). */
 trait ProducerHooks extends Serializable {
   /** U1: `generate_payload` — shape attrs into the payload frame
@@ -17,8 +17,6 @@ trait ProducerHooks extends Serializable {
   /** P13: `partition_key(payload)` — explicit partition key, used for
     * Kafka partitioning when it differs from the message key. */
   def partitionKey: Option[Column] = None
-  /** U3: `poll_query` — custom scan predicate for the poller source. */
-  def pollPredicate: Option[Column] = None
 }
 
 object Producer {

@@ -234,8 +234,6 @@ class RegistryFramedBackend(schemaJson: String, val schemaId: Int,
 
   /** Schema id carried by a framed message. */
   def schemaIdExpr(framed: Column): Column = AvroExpressions.schemaIdOf(framed)
-  def payloadExpr(framed: Column): Column =
-    substring(framed, 6, Int.MaxValue - 5)
 }
 
 /** JSON passthrough backend (reference `avro_validation.rb` /

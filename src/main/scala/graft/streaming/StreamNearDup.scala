@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-import graft.ext.Buckets
+import graft.ext.{Buckets, Multimodal}
 
 /** [EXT]/T5 — STREAMING near-duplicate detection over a 64-bit
   * perceptual/sketch hash column: the incremental counterpart of
@@ -54,7 +54,7 @@ import graft.ext.Buckets
   * post-eviction re-emit: remembering rejections would need exactly
   * the unbounded state the cap exists to avoid. Deployments pairing a
   * cap with an at-least-once source should dedupe pairs downstream
-  * (e.g. `dropDuplicatesWithinWatermark` on (idA, idB)) or run
+  * (e.g. Spark's within-watermark deduplication on (idA, idB)) or run
   * effectively-once delivery into this operator.
   */
 object StreamNearDup {
@@ -152,44 +152,38 @@ object StreamNearDup {
       }
   }
 
-  /** Above this many hot keys the literal-array regime gives way to a
-    * broadcast lookup set: array_contains over typedLit arrays costs
-    * O(|hot|) per candidate row and embeds every key in the plan —
-    * fine for a handful of hot buckets, a plan-size and per-row-cost
-    * blowup on a reference with many. */
-  private val HotKeyLiteralMax = 1024
-
   /** STREAMING bipartite screen against a FROZEN reference corpus —
     * online decontamination: every arrival is checked against a fixed
     * training/eval set and emits one row per reference near-duplicate
     * (id_a = arrival, id_b = reference member, exact hamming).
     *
-    * Because the reference never changes, the Spark-first shape is a
-    * STREAM-STATIC equi-join on the four (chunk, value) bucket keys —
-    * NO state store at all: the pigeonhole still guarantees recall
-    * (hamming ≤ 3 ⇒ some chunk equal ⇒ the pair meets in that
-    * bucket's join partition), exact hamming still verifies every
-    * candidate, and the LOWEST-EQUAL-CHUNK rule — a pure filter here,
-    * both hashes in hand on the joined row — keeps exactly one copy
-    * when a pair meets in several buckets. Zero state means nothing
-    * grows with stream length: at 100 TB-of-arrivals scale the only
-    * persistent cost is the chunked reference (4 rows × 24 bytes per
-    * reference doc), which the caller should `persist()` — a static
-    * side is otherwise re-scanned every micro-batch.
+    * It is the batch bipartite screen, `Multimodal.pigeonholeScreen`,
+    * with the arrivals as its batch: because the reference never
+    * changes, the Spark-first shape is a STREAM-STATIC equi-join on the
+    * (chunk, value) bucket keys — NO state store at all. The pigeonhole
+    * guarantees recall, exact hamming verifies every candidate, and the
+    * screen's exactly-once rule keeps the pair's least surviving
+    * meeting — a pure filter, both hashes in hand on the joined row —
+    * so a pair that meets in several buckets is emitted once. Zero
+    * state means nothing grows with stream length: the only persistent
+    * cost is the chunked reference, which the screen cuts once (4 rows
+    * per reference doc, the 1-bit ball ×17 at radius 4–7).
     *
-    * Hot-bucket cap: computed on the REFERENCE side only (the static
-    * side is fully known up front; arrival-side frequency is
+    * Hot-bucket cap: counted on the REFERENCE's probe keys only (the
+    * static side is fully known up front; arrival-side frequency is
     * unknowable without state, which this mode exists to avoid).
-    * Buckets holding more than `maxBucket` reference members are
-    * dropped from the join and reported by the family's governance
-    * rule (`graft.ext.Buckets`) — so one arrival costs at most
-    * 4 × maxBucket comparisons, and a pair is missed only if ALL its
-    * equal chunks are reference-hot.
+    * Buckets holding more than `maxBucket` reference keys are dropped
+    * from the join and reported by the family's governance rule
+    * (`graft.ext.Buckets`), looked up row-side from one broadcast — so
+    * one arrival costs at most 4 × maxBucket comparisons, and a pair is
+    * missed only if ALL its meeting buckets are reference-hot. A
+    * streaming `arrivals` runs no uncapped audit (its size is unknown);
+    * a static one is audited like the batch screen.
     *
     * Redelivery: stateless ⇒ a redelivered arrival re-emits its
     * pairs. Run effectively-once delivery into this operator or
-    * dedupe downstream (e.g. `dropDuplicatesWithinWatermark` on
-    * (id_a, id_b)) — the same trade the capped stateful path makes
+    * dedupe downstream (e.g. Spark's within-watermark deduplication
+    * on (id_a, id_b)) — the same trade the capped stateful path makes
     * for rejected members, here made uniformly.
     *
     * @param reference frozen corpus: `idCol`, `hashCol` (batch frame)
@@ -201,80 +195,11 @@ object StreamNearDup {
   def screenAgainst(reference: DataFrame, arrivals: DataFrame,
       idCol: String, hashCol: String, maxHamming: Int = 3,
       maxBucket: Option[Int] = None): (DataFrame, DataFrame) = {
-    import graft.functions.{HashFunctions => H}
-    Buckets.check(maxHamming, maxBucket)
-    // per-chunk tolerance: equal chunks at radius ≤ 3; at 4–7 the
-    // STATIC reference explodes each chunk's 17-key 1-bit ball (paid
-    // once — the stream side stays at 4 exact keys per arrival), and a
-    // pair qualifies at a chunk when the chunk distance is ≤ 1
-    val tol = if (maxHamming <= 3) 0 else 1
-    def chunked(df: DataFrame, ic: String, hc: String): DataFrame =
-      df.select(col(idCol).as(ic), col(hashCol).as(hc))
-        .filter(col(hc).isNotNull)
-        .select(col(ic), col(hc),
-          posexplode(H.simhashChunks(col(hc))).as(Seq("chunk", "cval")))
-    val refExact = chunked(reference, "id_b", "ph_b")
-    val refAll = if (tol == 0) refExact
-      else refExact.select(col("chunk"), col("id_b"), col("ph_b"),
-        explode(H.oneBitBall(col("cval"))).as("cval"))
-    // Hot keys come to the DRIVER: the batch op broadcasts the same
-    // frame, so the driver already pays this size (≤ nChunks·|ref|/cap
-    // buckets of 12 bytes). The exactly-once rule below needs a PURE
-    // per-row hotness lookup for every chunk position (not just the
-    // joined one), which a join alone cannot provide — so hotness is
-    // evaluated row-side in one of two regimes:
-    //  - ≤ HotKeyLiteralMax keys: per-chunk sorted literal arrays,
-    //    fully codegen'd, zero extra plan nodes;
-    //  - above it: one broadcast hash set probed by a lightweight UDF
-    //    — O(1) per lookup, constant plan size, the same broadcast the
-    //    batch operator's left_anti join ships.
-    val (_, overflow) = Buckets.govern(refAll, Seq("chunk", "cval"),
-      maxBucket, "n_ids")
-    val rows = if (maxBucket.isEmpty) Array.empty[Row]
-      else overflow.select(col("chunk"), col("cval")).collect()
-    val isHot: (Int, Column) => Column =
-      if (rows.length <= HotKeyLiteralMax) {
-        val byChunk = (0 until 4).map(c =>
-          rows.filter(_.getInt(0) == c).map(_.getLong(1)).sorted.toSeq)
-        (c, cval) =>
-          if (byChunk(c).isEmpty) lit(false)
-          else array_contains(typedLit(byChunk(c)), cval)
-      } else {
-        val set = reference.sparkSession.sparkContext.broadcast(
-          rows.map(r => (r.getInt(0), r.getLong(1))).toSet)
-        val probe = udf((c: Int, v: Long) => set.value.contains((c, v)))
-        (c, cval) => probe(lit(c), cval)
-      }
-    def chunkOf(h: Column, c: Int): Column =
-      shiftrightunsigned(h, 16 * c).bitwiseAND(lit(0xffffL))
-    def hotHere(df: DataFrame): DataFrame = df.filter(!(0 until 4)
-      .map(c => col("chunk") === c && isHot(c, col("cval")))
-      .reduce(_ || _))
-    // drop hot buckets from BOTH sides: the ref side defines the cap;
-    // the arrival side's hot rows could only ever join dropped ref
-    // rows, so filtering them too is a pure shuffle saving
-    val ref = hotHere(refAll)
-    // Exactly-once rule, cap-aware: a pair meets once per SURVIVING
-    // equal-chunk bucket, and only the LOWEST of those speaks. Both
-    // hashes are on the joined row and hotness is a pure row-side
-    // lookup, so every bucket computes the same answer — a pure
-    // filter, no state. survives(c) = chunk distance ≤ tol at c AND
-    // the bucket keyed by the ARRIVAL's chunk value not hot (that key
-    // is where the pair meets — exactly one reference ball row matches
-    // it per qualifying chunk).
-    def survives(c: Int): Column =
-      H.hamming64(chunkOf(col("ph_a"), c), chunkOf(col("ph_b"), c)) <= tol &&
-        !isHot(c, chunkOf(col("ph_a"), c))
-    val lowestSurviving = (0 until 4)
-      .map(c => col("chunk") === c &&
-        (0 until c).map(p => !survives(p)).foldLeft(lit(true))(_ && _))
-      .reduce(_ || _)
-    val pairs = hotHere(chunked(arrivals, "id_a", "ph_a"))
-      .join(ref, Seq("chunk", "cval"))
-      .filter(lowestSurviving)
-      .select(col("id_a"), col("id_b"),
-        H.hamming64(col("ph_a"), col("ph_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    (pairs, overflow)
+    def idPh(df: DataFrame): DataFrame =
+      df.select(col(idCol).as("id"), col(hashCol).as("ph"))
+    val (pairs, overflow) = Multimodal.pigeonholeScreen(idPh(arrivals),
+      Some(idPh(reference)), self = false, maxHamming, maxBucket,
+      crossCountsBatch = false)
+    (pairs, overflow.drop("side"))
   }
 }

@@ -3,17 +3,17 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project,
-  Union}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+  LogicalPlan, Project, Union}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Buckets, CurationRunner, Dedup, Multimodal}
 import graft.streaming.StreamNearDup
 
 /** One bucket-governance rule for every capped candidate generator
-  * (`Buckets`): the capped overflow is the hot set cut once (a
-  * checkpointed `LogicalRDD`), the uncapped overflow is an empty frame
+  * (`Buckets`): the capped overflow is the hot set cut once (a local
+  * relation on the driver, read with no job), the uncapped overflow is
+  * an empty frame
   * with the same column names and types that no Spark job builds or
   * reads, and the family's parameters are validated before any job.
   * Jobs are counted under a job group around each call, as in
@@ -34,16 +34,17 @@ class BucketGovernanceSpec extends SparkSpec {
   private def columns(df: DataFrame): Seq[(String, String)] =
     df.schema.fields.toSeq.map(f => (f.name, f.dataType.simpleString))
 
-  /** `df` reads eagerly checkpointed RDDs through projections and
-    * unions only: no aggregate is left to re-run. */
+  /** `df` reads the hot set cut once to the driver — local relations
+    * through projections and unions only — and reading it runs no job:
+    * no aggregate is left to re-run. */
   private def checkpointed(df: DataFrame): Boolean = {
     def cut(plan: LogicalPlan): Boolean = plan match {
-      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _: LocalRelation => true
       case Project(_, child) => cut(child)
       case u: Union => u.children.forall(cut)
       case _ => false
     }
-    cut(df.queryExecution.analyzed)
+    cut(df.queryExecution.analyzed) && jobs(df.collect())._1 == 0
   }
 
   /** The uncapped overflow: capped columns, no rows, no job to read. */

@@ -18,6 +18,27 @@ class CurationRunnerSpec extends SparkSpec {
   private def freshDir() =
     java.nio.file.Files.createTempDirectory("graft-curation").toString
 
+  private var groups = 0
+  /** Spark jobs `body` runs, and its value. */
+  private def jobs[T](body: => T): (Int, T) = {
+    groups += 1
+    val g = s"graft-curation-runner-$groups"
+    spark.sparkContext.setJobGroup(g, "curation runner job count")
+    val out = try body finally spark.sparkContext.clearJobGroup()
+    (spark.sparkContext.statusTracker.getJobIdsForGroup(g).length, out)
+  }
+
+  /** Near copies of two centres plus scattered singles, ids from
+    * `from`: the increment finds pairs within and across the sides. */
+  private def nearCopies(from: Long) = {
+    val rnd = new scala.util.Random(from)
+    val centres = Seq(0x0123_4567_89AB_CDEFL, 0x7654_3210_FEDC_BA98L)
+    ((0 until 12).map(i => (from + i,
+      centres(i % 2) ^ (1L << rnd.nextInt(64)), rnd.nextInt(100).toLong)) ++
+      (12 until 20).map(i => (from + i, rnd.nextLong(), rnd.nextInt(100).toLong)))
+      .toDF("doc_id", "ph", "quality")
+  }
+
   private def readSurv(dir: String): Map[Long, (Long, Long)] =
     CurationRunner.survivors(spark, dir, "doc_id", "ph", "quality")
       .select(col("doc_id"), col("quality"), col("n_copies"))
@@ -163,5 +184,36 @@ class CurationRunnerSpec extends SparkSpec {
     assert(readSurv(dir) === Map(3L -> (9L, 3L)))
     // overflow frame exists (empty here) per version
     assert(spark.read.parquet(s"$dir/overflow_v1").count() === 0L)
+  }
+
+  test("an increment reads its snapshot with the marker's schema, no footer inference") {
+    val dir = freshDir()
+    assert(CurationRunner.applyIncrement(dir, nearCopies(0L), 0L, "doc_id",
+      "ph", "quality"))
+    val (n, applied) = jobs(CurationRunner.applyIncrement(dir,
+      nearCopies(100L), 1L, "doc_id", "ph", "quality"))
+    assert(applied)
+    assert(n === 13, "Spark jobs of one increment on a store")
+    assert(CurationRunner.survivors(spark, dir, "doc_id", "ph", "quality")
+      .schema === spark.read.parquet(s"$dir/v1").schema,
+      "the marker carries the schema inference reads")
+  }
+
+  test("a marker in the older \"<N> <batchId>\" format still resolves, its snapshot read by inference") {
+    val dir = freshDir()
+    assert(CurationRunner.applyIncrement(dir, nearCopies(0L), 0L, "doc_id",
+      "ph", "quality"))
+    val before = readSurv(dir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_COMMIT_0"),
+      "0 0".getBytes("UTF-8"))
+    // the local file system checks a rewritten file against its crc
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "._COMMIT_0.crc"))
+    assert(CurationRunner.current(dir) === Some(CurationRunner.Pointer(0L, 0L)))
+    assert(readSurv(dir) === before)
+    assert(CurationRunner.applyIncrement(dir, nearCopies(100L), 1L, "doc_id",
+      "ph", "quality"))
+    assert(CurationRunner.current(dir) === Some(CurationRunner.Pointer(1L, 1L)))
+    assert(readSurv(dir).values.map(_._2).sum === 40L,
+      "every document is counted once")
   }
 }

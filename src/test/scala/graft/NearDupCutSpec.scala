@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Multimodal}
@@ -122,10 +122,10 @@ class NearDupCutSpec extends SparkSpec {
   }
 
   test("ngramJaccardCapped and embeddingCosineCapped return a materialized overflow") {
-    def materialized(df: DataFrame): Boolean = df.queryExecution.analyzed match {
-      case r: LogicalRDD => r.rdd.isCheckpointed
-      case _ => false
-    }
+    // the hot set on the driver: a local relation, read with no job
+    def materialized(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.isInstanceOf[LocalRelation] &&
+        jobs(df.collect())._1 == 0
     val docs = ((1L to 6L).map(i => (i, s"common filler gram here unique$i")) ++
       Seq((10L, "alpha beta gamma delta epsilon zeta"),
         (11L, "alpha beta gamma delta epsilon eta")))

@@ -129,11 +129,11 @@ class StreamBipartiteScreenSpec extends SparkSpec {
   }
 
   test("broadcast-set regime (hot keys > literal max) emits the identical pairs and overflow") {
-    // a reference with more than 1024 hot buckets drives the UDF
-    // regime: at cap 1, 300 pairs of identical hashes make 1200 hot
-    // (chunk, value) buckets. Near copies of 50 twins differ in chunk 1
-    // only (three hot buckets, one cold); the pairs and the overflow
-    // must equal a brute-force oracle of the drop-and-report contract
+    // a reference with more than 1024 hot buckets: at cap 1, 300 pairs
+    // of identical hashes make 1200 hot (chunk, value) buckets. Near
+    // copies of 50 twins differ in chunk 1 only (three hot buckets, one
+    // cold); the pairs and the overflow must equal a brute-force oracle
+    // of the drop-and-report contract
     val rnd = new scala.util.Random(1207)
     val twins = Seq.fill(300)(rnd.nextLong())
     val nearTwins = twins.take(50).map(_ ^ (1L << (16 + rnd.nextInt(16))))
@@ -152,7 +152,7 @@ class StreamBipartiteScreenSpec extends SparkSpec {
       .flatMap { case (_, h) => (0 until 4).map(c => (c, chunk(h, c))) }
       .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     val hot = width.filter(_._2 > cap)
-    assert(hot.size > 1024, "the fixture must exceed the literal regime")
+    assert(hot.size > 1024, "the fixture must hold more than 1024 hot keys")
     val near = for ((a, ha) <- arrivals; (b, hb) <- ref;
         ham = java.lang.Long.bitCount(ha ^ hb) if ham <= 3)
       yield (a, b, ham.toLong, (0 until 4).exists(c =>
@@ -164,16 +164,25 @@ class StreamBipartiteScreenSpec extends SparkSpec {
     assert(pairsDf.as[(Long, Long, Long)].collect().toSeq.sorted === want)
     assert(overflow.as[(Int, Long, Long)].collect().toSet ===
       hot.map { case ((c, v), n) => (c, v, n) }.toSet)
-    // plan pin: the literal regime embeds hot keys in the plan
-    // (array_contains over literals), the broadcast-set regime must
-    // NOT — its plan stays constant-size however many keys are hot
-    val (pLit, _) = StreamNearDup.screenAgainst(
+    // plan pin: no hot key is a literal in the plan, whether 1 key is
+    // hot per chunk or more than 1024 are — the plan holds the same
+    // literals either way, none an array, none a hot chunk value
+    val (pOne, oOne) = StreamNearDup.screenAgainst(
       refDf((100L, H0), (101L, H0)), Seq((1L, H0)).toDF("id", "ph"),
       "id", "ph", maxBucket = Some(1))
-    assert(pLit.queryExecution.executedPlan.toString.contains("array_contains"),
-      "literal regime plan")
-    assert(!pairsDf.queryExecution.executedPlan.toString.contains("array_contains"),
-      "broadcast-set regime plan")
+    assert(oOne.count() === 4L, "one hot key per chunk")
+    def literals(df: org.apache.spark.sql.DataFrame): Seq[Any] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+        _.collect { case l: org.apache.spark.sql.catalyst.expressions.Literal =>
+          l.value }))
+    assert(literals(pOne).sortBy(String.valueOf) ===
+      literals(pairsDf).sortBy(String.valueOf),
+      "the plan's literals do not depend on the hot set")
+    assert(!literals(pOne).exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]),
+      "no array literal")
+    assert(!literals(pOne).exists(v =>
+      (0 until 4).exists(c => v == chunk(H0, c))), "no hot chunk value")
   }
 
   test("radius-7 screen streams with ZERO state; pairs at hamming 4-7 arrive once") {
