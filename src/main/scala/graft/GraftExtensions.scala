@@ -1,14 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.ext.{GifDecode, ImageIoDecode, MediaProbe, Mp4Demux, PixelDecode}
 import graft.functions.Expressions._
+import graft.functions.TextFunctions
 import graft.schema.AvroExpressions._
 
 /** SQL surface for the engine's custom expressions.
+  *
+  * Most functions are a DataFrame-API function lifted by `colFn`, so
+  * SQL and the DataFrame API build the same node (for the sketch and
+  * media kernels, one `StaticInvoke`); constant arguments are checked
+  * to be literals first. The rest build their custom expression.
   *
   * Two registration paths:
   *  - `spark.sql.extensions=graft.GraftExtensions` at session build
@@ -22,7 +29,10 @@ import graft.schema.AvroExpressions._
   * graft_avro_decode(bin, 'schemaJson'), graft_schema_id(bin),
   * graft_winnow(bin, k, w), graft_nfc(str),
   * graft_probe_media(bin) → struct(width, height, media_type),
-  * graft_png_stats(bin) / graft_wav_stats(bin) / graft_gif_stats(bin),
+  * graft_probe_mp4(bin) → struct(width, height, duration_ms,
+  * media_type),
+  * graft_png_stats(bin) / graft_wav_stats(bin) / graft_gif_stats(bin) /
+  * graft_jpeg_stats(bin),
   * graft_png_resize_stats(bin, tw, th) — nearest-neighbor resample
   * stats, graft_wav_decimate_stats(bin, stride) — stride-decimated
   * PCM sample stats,
@@ -58,84 +68,59 @@ object GraftExtensions {
   private def info(name: String) =
     new ExpressionInfo("graft.functions.Expressions", name)
 
-  /** Lift a Column→Column combinator (the TextFunctions surface —
-    * compositions of codegen'd builtins, not custom expressions) into
-    * a SQL function builder: argument expression → classic Column →
-    * combinator → back to the catalyst expression the registry needs.
-    * The result is unresolved until the analyzer runs — exactly like
-    * any builtin's builder output. */
-  private def colFn1(f: org.apache.spark.sql.Column =>
-      org.apache.spark.sql.Column)(es: Seq[Expression]): Expression =
-    org.apache.spark.sql.GraftSqlBridge.catalystExpression(
-      f(org.apache.spark.sql.GraftSqlBridge.column(es.head)))
+  /** Lift a Column function into a SQL function builder: argument
+    * expressions → classic Columns → function → back to the catalyst
+    * expression the registry needs. SQL and the DataFrame API thus
+    * build one node per function; constant arguments pass through
+    * `litInt`/`litString` first. The result is unresolved until the
+    * analyzer runs — exactly like any builtin's builder output. */
+  private def colFn(f: Seq[Column] => Column)(es: Seq[Expression]): Expression =
+    GraftSqlBridge.catalystExpression(f(es.map(GraftSqlBridge.column)))
+
+  private def colFn1(f: Column => Column): Seq[Expression] => Expression =
+    colFn(cs => f(cs.head))
+
+  private def fn(name: String, builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), info(name), builder)
 
   val descriptions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_simhash64"), info("graft_simhash64"),
-      (es: Seq[Expression]) => SimHash64Expr(es.head)),
-    (FunctionIdentifier("graft_minhash"), info("graft_minhash"),
-      (es: Seq[Expression]) =>
-        MinHashSigExpr(es.head, litInt(es(1), "k"))),
-    (FunctionIdentifier("graft_ngram_hashes"), info("graft_ngram_hashes"),
-      (es: Seq[Expression]) =>
-        NGramHashesExpr(es.head, litInt(es(1), "n"))),
-    (FunctionIdentifier("graft_cosine"), info("graft_cosine"),
-      (es: Seq[Expression]) => CosineSimExpr(es.head, es(1))),
-    (FunctionIdentifier("graft_avro_encode"), info("graft_avro_encode"),
-      (es: Seq[Expression]) =>
-        AvroEncodeExpr(es.head, litString(es(1), "schemaJson"))),
-    (FunctionIdentifier("graft_avro_decode"), info("graft_avro_decode"),
-      (es: Seq[Expression]) =>
-        AvroDecodeExpr(es.head, litString(es(1), "schemaJson"))),
-    (FunctionIdentifier("graft_schema_id"), info("graft_schema_id"),
-      (es: Seq[Expression]) => ReadInt32BE(es.head, offset = 1)),
-    (FunctionIdentifier("graft_winnow"), info("graft_winnow"),
-      (es: Seq[Expression]) => WinnowFingerprintExpr(es.head,
-        litInt(es(1), "k"), litInt(es(2), "w"))),
-    (FunctionIdentifier("graft_nfc"), info("graft_nfc"),
-      (es: Seq[Expression]) => NormalizeNfcExpr(es.head)),
-    (FunctionIdentifier("graft_probe_media"), info("graft_probe_media"),
-      (es: Seq[Expression]) => graft.ext.MediaProbe.ProbeMediaExpr(es.head)),
-    (FunctionIdentifier("graft_probe_wav"), info("graft_probe_wav"),
-      (es: Seq[Expression]) => graft.ext.MediaProbe.ProbeAudioExpr(es.head)),
-    (FunctionIdentifier("graft_probe_mp4"), info("graft_probe_mp4"),
-      (es: Seq[Expression]) => graft.ext.MediaProbe.ProbeVideoExpr(es.head)),
-    (FunctionIdentifier("graft_png_stats"), info("graft_png_stats"),
-      (es: Seq[Expression]) => graft.ext.PixelDecode.PngStatsExpr(es.head)),
-    (FunctionIdentifier("graft_png_resize_stats"),
-      info("graft_png_resize_stats"),
-      (es: Seq[Expression]) => graft.ext.PixelDecode.PngResizeStatsExpr(
-        es.head, litInt(es(1), "tw"), litInt(es(2), "th"))),
-    (FunctionIdentifier("graft_wav_stats"), info("graft_wav_stats"),
-      (es: Seq[Expression]) => graft.ext.PixelDecode.WavStatsExpr(es.head)),
-    (FunctionIdentifier("graft_wav_decimate_stats"),
-      info("graft_wav_decimate_stats"),
-      (es: Seq[Expression]) => graft.ext.PixelDecode.WavDecimateStatsExpr(
-        es.head, litInt(es(1), "stride"))),
-    (FunctionIdentifier("graft_gif_stats"), info("graft_gif_stats"),
-      (es: Seq[Expression]) => graft.ext.GifDecode.GifStatsExpr(es.head)),
-    (FunctionIdentifier("graft_jpeg_stats"), info("graft_jpeg_stats"),
-      (es: Seq[Expression]) => graft.ext.ImageIoDecode.JpegStatsExpr(es.head)),
-    (FunctionIdentifier("graft_mp4_frame_stats"), info("graft_mp4_frame_stats"),
-      (es: Seq[Expression]) => graft.ext.Mp4Demux.Mp4FrameStatsExpr(es.head, es(1))),
-    (FunctionIdentifier("graft_mp4_frames"), info("graft_mp4_frames"),
-      (es: Seq[Expression]) => graft.ext.Mp4Demux.Mp4SampleFramesExpr(es.head, es(1))),
+    fn("graft_simhash64", colFn1(simhash64)),
+    fn("graft_minhash", es => MinHashSigExpr(es.head, litInt(es(1), "k"))),
+    fn("graft_ngram_hashes",
+      es => colFn1(ngramHashes(_, litInt(es(1), "n")))(es)),
+    fn("graft_cosine", es => CosineSimExpr(es.head, es(1))),
+    fn("graft_avro_encode",
+      es => AvroEncodeExpr(es.head, litString(es(1), "schemaJson"))),
+    fn("graft_avro_decode",
+      es => AvroDecodeExpr(es.head, litString(es(1), "schemaJson"))),
+    fn("graft_schema_id", es => ReadInt32BE(es.head, offset = 1)),
+    fn("graft_winnow", es => colFn1(winnowFingerprint(_,
+      litInt(es(1), "k"), litInt(es(2), "w")))(es)),
+    fn("graft_nfc", colFn1(normalizeNfc)),
+    fn("graft_probe_media", colFn1(MediaProbe.probeMedia)),
+    fn("graft_probe_wav", colFn1(MediaProbe.probeAudio)),
+    fn("graft_probe_mp4", colFn1(MediaProbe.probeVideo)),
+    fn("graft_png_stats", colFn1(PixelDecode.pngStats)),
+    fn("graft_png_resize_stats", es => colFn1(PixelDecode.pngResizeStats(_,
+      litInt(es(1), "tw"), litInt(es(2), "th")))(es)),
+    fn("graft_wav_stats", colFn1(PixelDecode.wavStats)),
+    fn("graft_wav_decimate_stats",
+      es => colFn1(PixelDecode.wavDecimate(_, litInt(es(1), "stride")))(es)),
+    fn("graft_gif_stats", colFn1(GifDecode.gifStats)),
+    fn("graft_jpeg_stats", colFn1(ImageIoDecode.jpegStats)),
+    fn("graft_mp4_frame_stats", colFn(cs => Mp4Demux.frameStats(cs(0), cs(1)))),
+    fn("graft_mp4_frames", colFn(cs => Mp4Demux.sampleFrames(cs(0), cs(1)))),
     // text/quality stack (Column-combinator lifts — BI/SQL users get
     // the same curation primitives the DataFrame API exposes)
-    (FunctionIdentifier("graft_ws_tokens"), info("graft_ws_tokens"),
-      colFn1(graft.functions.TextFunctions.wsTokenCount) _),
-    (FunctionIdentifier("graft_bpeish_tokens"), info("graft_bpeish_tokens"),
-      colFn1(graft.functions.TextFunctions.bpeishTokenCount) _),
-    (FunctionIdentifier("graft_langid"), info("graft_langid"),
-      colFn1(graft.functions.TextFunctions.langId) _),
-    (FunctionIdentifier("graft_stop_hits"), info("graft_stop_hits"),
-      colFn1(c => graft.functions.TextFunctions.stopwordHits(c,
-        graft.functions.TextFunctions.StopwordLists.head._2)) _),
-    (FunctionIdentifier("graft_punct_count"), info("graft_punct_count"),
-      colFn1(graft.functions.TextFunctions.punctCount) _),
-    (FunctionIdentifier("graft_quality_gate"), info("graft_quality_gate"),
-      colFn1(c => graft.functions.TextFunctions.qualityGate(c,
-        graft.functions.TextFunctions.StopwordLists.head._2)) _),
+    fn("graft_ws_tokens", colFn1(TextFunctions.wsTokenCount)),
+    fn("graft_bpeish_tokens", colFn1(TextFunctions.bpeishTokenCount)),
+    fn("graft_langid", colFn1(TextFunctions.langId)),
+    fn("graft_stop_hits", colFn1(c =>
+      TextFunctions.stopwordHits(c, TextFunctions.StopwordLists.head._2))),
+    fn("graft_punct_count", colFn1(TextFunctions.punctCount)),
+    fn("graft_quality_gate", colFn1(c =>
+      TextFunctions.qualityGate(c, TextFunctions.StopwordLists.head._2))),
   )
 
   /** Register on a live session (temp functions). */

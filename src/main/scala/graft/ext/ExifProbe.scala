@@ -1,11 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.Expressions.staticCall
 
 /** EXIF (APP1/TIFF) metadata for JPEG blobs — the camera-orientation /
   * capture-time / device fields a multimodal curation pipeline reads
@@ -161,41 +161,17 @@ object ExifProbe {
       make, datetime))
   }
 
-  // ---- expressions -----------------------------------------------------
+  // ---- columns (StaticInvoke over the kernels above) --------------------
 
-  case class ExifSynthExpr(first: Expression, second: Expression,
-      third: Expression, fourth: Expression) extends QuaternaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-      exifJpegBytes(a.asInstanceOf[Int], b.asInstanceOf[Int],
-        c.asInstanceOf[Int], d.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-        s"${ev.value} = graft.ext.ExifProbe.exifJpegBytes($a, $b, $c, $d);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression, d: Expression): ExifSynthExpr = copy(a, b, c, d)
-  }
-
-  case class ExifParseExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ExifMetaType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      parseExif(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.ExifProbe.parseExif($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): ExifParseExpr =
-      copy(c)
-  }
-
+  /** (orientation, makeId, mm, ss) → JPEG bytes carrying an EXIF
+    * APP1 segment ([[exifJpegBytes]]). */
   def synthExifJpeg(orientation: Column, makeId: Column, mm: Column,
       ss: Column): Column =
-    GraftSqlBridge.column(ExifSynthExpr(
-      GraftSqlBridge.expression(orientation), GraftSqlBridge.expression(makeId),
-      GraftSqlBridge.expression(mm), GraftSqlBridge.expression(ss)))
+    staticCall(this, "exifJpegBytes", BinaryType, nullable = false,
+      orientation, makeId, mm, ss)
 
+  /** binary → EXIF meta struct, null when the bytes carry no EXIF
+    * orientation, make or datetime. */
   def exifMeta(bytes: Column): Column =
-    GraftSqlBridge.column(ExifParseExpr(GraftSqlBridge.expression(bytes)))
+    staticCall(this, "parseExif", ExifMetaType, nullable = true, bytes)
 }

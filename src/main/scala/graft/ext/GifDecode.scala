@@ -1,10 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+
+import graft.functions.Expressions.staticCall
 
 /** Pure-JVM GIF pixel decode — the third REAL decode modality after
   * PNG ([[PixelDecode.pngPixelStats]]) and WAV PCM: GIF's image data
@@ -391,54 +391,17 @@ object GifDecode {
     out.toByteArray
   }
 
-  // ---- expressions -----------------------------------------------------
-
-  case class GifStatsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = GifStatsType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      gifPixelStats(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.GifDecode.gifPixelStats($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): GifStatsExpr =
-      copy(c)
-  }
-
-  case class GifPixelSynthExpr(first: Expression, second: Expression,
-      third: Expression) extends TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(w: Any, h: Any, s: Any): Any =
-      gifPixelBytes(w.asInstanceOf[Int], h.asInstanceOf[Int],
-        s.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (w, h, s) =>
-        s"${ev.value} = graft.ext.GifDecode.gifPixelBytes($w, $h, $s);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression): GifPixelSynthExpr = copy(a, b, c)
-  }
+  // ---- columns (StaticInvoke over the kernels above) --------------------
 
   /** seed → 72×64 cell-grid GIF bytes ([[gifCellBytes]]). */
-  case class GifCellSynthExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def nullSafeEval(input: Any): Any =
-      gifCellBytes(input.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, s =>
-        s"${ev.value} = graft.ext.GifDecode.gifCellBytes($s);")
-    override protected def withNewChildInternal(c: Expression): GifCellSynthExpr =
-      copy(c)
-  }
-
   def synthGifCells(seed: Column): Column =
-    GraftSqlBridge.column(GifCellSynthExpr(GraftSqlBridge.expression(seed)))
+    staticCall(this, "gifCellBytes", BinaryType, nullable = false, seed)
 
+  /** binary → RGB sample stats struct, null when not a decodable GIF. */
   def gifStats(bytes: Column): Column =
-    GraftSqlBridge.column(GifStatsExpr(GraftSqlBridge.expression(bytes)))
+    staticCall(this, "gifPixelStats", GifStatsType, nullable = true, bytes)
 
+  /** (w, h, seed) → real-pixel GIF bytes ([[gifPixelBytes]]). */
   def synthGifPixels(w: Column, h: Column, seed: Column): Column =
-    GraftSqlBridge.column(GifPixelSynthExpr(GraftSqlBridge.expression(w),
-      GraftSqlBridge.expression(h), GraftSqlBridge.expression(seed)))
+    staticCall(this, "gifPixelBytes", BinaryType, nullable = false, w, h, seed)
 }

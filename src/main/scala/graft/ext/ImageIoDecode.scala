@@ -1,10 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+
+import graft.functions.Expressions.staticCall
 
 /** JPEG pixel decode via the JDK's bundled `javax.imageio` reader — a
   * JDK-standard API present in every JVM, so "no native codec libs in
@@ -21,10 +21,9 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: same as the other decoders — per-blob scan-side work,
   * zero shuffle. `ImageIO.read` costs an ImageReader allocation per
-  * call; for tight loops the mapPartitions form in
-  * [[Multimodal.decodeStatsPartitions]]-style reader reuse applies,
-  * but the expression keeps plan shape uniform and the allocation is
-  * dwarfed by entropy decode itself.
+  * call; a per-partition reader would save it, but the expression
+  * keeps plan shape uniform and the allocation is dwarfed by entropy
+  * decode itself.
   */
 object ImageIoDecode {
 
@@ -193,57 +192,21 @@ object ImageIoDecode {
     out.toByteArray
   }
 
-  // ---- expressions -----------------------------------------------------
+  // ---- columns (StaticInvoke over the kernels above) --------------------
 
-  case class JpegStatsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = JpegStatsType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      jpegPixelStats(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.ImageIoDecode.jpegPixelStats($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): JpegStatsExpr =
-      copy(c)
-  }
-
-  case class JpegSynthExpr(first: Expression, second: Expression,
-      third: Expression) extends TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(w: Any, h: Any, q: Any): Any =
-      jpegBytes(w.asInstanceOf[Int], h.asInstanceOf[Int], q.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (w, h, q) =>
-        s"${ev.value} = graft.ext.ImageIoDecode.jpegBytes($w, $h, $q);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression): JpegSynthExpr = copy(a, b, c)
-  }
+  /** binary → decoded luma stats struct, null when ImageIO cannot
+    * read the bytes as a JPEG. */
+  def jpegStats(bytes: Column): Column =
+    staticCall(this, "jpegPixelStats", JpegStatsType, nullable = true, bytes)
 
   /** (seed, quality) → cell-grid JPEG bytes ([[jpegCellBytes]]). */
-  case class JpegCellSynthExpr(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(s: Any, q: Any): Any =
-      jpegCellBytes(s.asInstanceOf[Int], q.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (s, q) =>
-        s"${ev.value} = graft.ext.ImageIoDecode.jpegCellBytes($s, $q);")
-    override protected def withNewChildrenInternal(a: Expression,
-        b: Expression): JpegCellSynthExpr = copy(a, b)
-  }
-
-  def jpegStats(bytes: Column): Column =
-    GraftSqlBridge.column(JpegStatsExpr(GraftSqlBridge.expression(bytes)))
-
   def synthJpegCells(seed: Column, quality: Column): Column =
-    GraftSqlBridge.column(JpegCellSynthExpr(GraftSqlBridge.expression(seed),
-      GraftSqlBridge.expression(quality)))
+    staticCall(this, "jpegCellBytes", BinaryType, nullable = false,
+      seed, quality)
 
+  /** (w, h, quality) → gradient JPEG bytes ([[jpegBytes]]). */
   def synthJpeg(w: Column, h: Column, quality: Column): Column =
-    GraftSqlBridge.column(JpegSynthExpr(GraftSqlBridge.expression(w),
-      GraftSqlBridge.expression(h), GraftSqlBridge.expression(quality)))
+    staticCall(this, "jpegBytes", BinaryType, nullable = false, w, h, quality)
 }
 
 /** ImageIO.read with the scanner disabled-dirs caches warm; kept in a

@@ -1,11 +1,12 @@
 package graft.ext
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.Expressions.staticCall
 
 /** Pure-JVM media header probe: real width/height from PNG (IHDR),
   * JPEG (SOFn) and GIF (logical screen descriptor) byte streams — all
@@ -242,44 +243,15 @@ object MediaProbe {
   }
 
   /** binary → audio meta struct, null when not a RIFF/WAVE stream. */
-  case class ProbeAudioExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = AudioMetaType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      probeWav(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.MediaProbe.probeWav($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): ProbeAudioExpr =
-      copy(c)
-  }
+  def probeAudio(bytes: Column): Column =
+    staticCall(this, "probeWav", AudioMetaType, nullable = true, bytes)
 
   /** (channels, sampleRate, bits, nSamples) → PCM WAV bytes — fixture
     * generator usable inside a plan. */
-  case class WavSynthExpr(first: Expression, second: Expression,
-      third: Expression, fourth: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-      wavBytes(a.asInstanceOf[Int], b.asInstanceOf[Int],
-        c.asInstanceOf[Int], d.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-        s"${ev.value} = graft.ext.MediaProbe.wavBytes($a, $b, $c, $d);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression, d: Expression): WavSynthExpr = copy(a, b, c, d)
-  }
-
-  def probeAudio(bytes: Column): Column =
-    GraftSqlBridge.column(ProbeAudioExpr(GraftSqlBridge.expression(bytes)))
-
   def synthWav(channels: Column, sampleRate: Column, bits: Column,
       nSamples: Column): Column =
-    GraftSqlBridge.column(WavSynthExpr(
-      GraftSqlBridge.expression(channels), GraftSqlBridge.expression(sampleRate),
-      GraftSqlBridge.expression(bits), GraftSqlBridge.expression(nSamples)))
+    staticCall(this, "wavBytes", BinaryType, nullable = false,
+      channels, sampleRate, bits, nSamples)
 
   // ---- video (MP4/ISO-BMFF) --------------------------------------------
 
@@ -407,80 +379,23 @@ object MediaProbe {
   }
 
   /** binary → video meta struct, null when not an ISO-BMFF stream. */
-  case class ProbeVideoExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = VideoMetaType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      probeMp4(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.MediaProbe.probeMp4($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): ProbeVideoExpr =
-      copy(c)
-  }
-
-  /** (width, height, durationMs) → minimal MP4 bytes. */
-  case class Mp4SynthExpr(wExpr: Expression, hExpr: Expression,
-      dExpr: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override def first: Expression = wExpr
-    override def second: Expression = hExpr
-    override def third: Expression = dExpr
-    override protected def nullSafeEval(w: Any, h: Any, d: Any): Any =
-      mp4Bytes(w.asInstanceOf[Int], h.asInstanceOf[Int], d.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (w, h, d) =>
-        s"${ev.value} = graft.ext.MediaProbe.mp4Bytes($w, $h, $d, 1000);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression): Mp4SynthExpr = copy(a, b, c)
-  }
-
   def probeVideo(bytes: Column): Column =
-    GraftSqlBridge.column(ProbeVideoExpr(GraftSqlBridge.expression(bytes)))
+    staticCall(this, "probeMp4", VideoMetaType, nullable = true, bytes)
 
+  /** (width, height, durationMs) → minimal MP4 bytes (timescale 1000). */
   def synthMp4(width: Column, height: Column, durationMs: Column): Column =
-    GraftSqlBridge.column(Mp4SynthExpr(GraftSqlBridge.expression(width),
-      GraftSqlBridge.expression(height), GraftSqlBridge.expression(durationMs)))
+    staticCall(this, "mp4Bytes", BinaryType, nullable = false,
+      width, height, durationMs, lit(1000))
 
-  // ---- expressions -----------------------------------------------------
+  // ---- image header probe ----------------------------------------------
 
   /** binary → struct(width, height, media_type), null when
-    * unrecognized. Codegen'd call into the static kernel. */
-  case class ProbeMediaExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = MetaType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      probe(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.MediaProbe.probe($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): ProbeMediaExpr =
-      copy(c)
-  }
+    * unrecognized. */
+  def probeMedia(bytes: Column): Column =
+    staticCall(this, "probe", MetaType, nullable = true, bytes)
 
   /** (width int, height int) → structurally-valid PNG bytes — fixture
     * generator usable inside a plan (x12 synthesizes per-row PNGs). */
-  case class PngSynthExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = BinaryType
-    override def nullSafeEval(w: Any, h: Any): Any =
-      pngBytes(w.asInstanceOf[Int], h.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev,
-        (w, h) => s"${ev.value} = graft.ext.MediaProbe.pngBytes($w, $h);")
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): PngSynthExpr = copy(l, r)
-  }
-
-  def probeMedia(bytes: Column): Column =
-    GraftSqlBridge.column(ProbeMediaExpr(GraftSqlBridge.expression(bytes)))
-
   def synthPng(width: Column, height: Column): Column =
-    GraftSqlBridge.column(PngSynthExpr(
-      GraftSqlBridge.expression(width), GraftSqlBridge.expression(height)))
+    staticCall(this, "pngBytes", BinaryType, nullable = false, width, height)
 }

@@ -1,11 +1,11 @@
 package graft.ext
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, QuaternaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+
+import graft.functions.Expressions.staticCall
 
 /** REAL MP4 frame extraction, pure JVM — the sample-table walk every
   * demuxer does, over the ISO base-media layout (public spec,
@@ -513,129 +513,39 @@ object Mp4Demux {
     out.toByteArray
   }
 
-  // ---- expressions -----------------------------------------------------
+  // ---- columns (StaticInvoke over the kernels above) --------------------
 
   /** (bytes, stride) → frame-sample stats struct, null when not a
     * demuxable raw-luma MP4. */
-  case class Mp4FrameStatsExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = FrameStatsType
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(b: Any, s: Any): Any =
-      mp4FrameStats(b.asInstanceOf[Array[Byte]], s.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (b, s) => s"""
-        ${ev.value} = graft.ext.Mp4Demux.mp4FrameStats($b, $s);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): Mp4FrameStatsExpr = copy(l, r)
-  }
+  def frameStats(bytes: Column, stride: Column): Column =
+    staticCall(this, "mp4FrameStats", FrameStatsType, nullable = true,
+      bytes, stride)
 
   /** (bytes, stride) → array of raw frame payloads. */
-  case class Mp4SampleFramesExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = ArrayType(BinaryType)
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(b: Any, s: Any): Any =
-      mp4SampleFrames(b.asInstanceOf[Array[Byte]], s.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (b, s) => s"""
-        ${ev.value} = graft.ext.Mp4Demux.mp4SampleFrames($b, $s);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): Mp4SampleFramesExpr = copy(l, r)
-  }
+  def sampleFrames(bytes: Column, stride: Column): Column =
+    staticCall(this, "mp4SampleFrames", ArrayType(BinaryType), nullable = true,
+      bytes, stride)
 
   /** bytes → array of per-frame pixel sums (exact longs). */
-  case class Mp4FrameSumsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType)
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(b: Any): Any =
-      mp4FrameSums(b.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, b => s"""
-        ${ev.value} = graft.ext.Mp4Demux.mp4FrameSums($b);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): Mp4FrameSumsExpr =
-      copy(c)
-  }
+  def frameSums(bytes: Column): Column =
+    staticCall(this, "mp4FrameSums", ArrayType(LongType), nullable = true,
+      bytes)
 
   /** (w, h, nFrames, seed) → full raw-luma MP4 bytes. */
-  case class Mp4FramesSynthExpr(first: Expression, second: Expression,
-      third: Expression, fourth: Expression) extends QuaternaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-      mp4FramesBytes(a.asInstanceOf[Int], b.asInstanceOf[Int],
-        c.asInstanceOf[Int], d.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-        s"${ev.value} = graft.ext.Mp4Demux.mp4FramesBytes($a, $b, $c, $d);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression, d: Expression): Mp4FramesSynthExpr = copy(a, b, c, d)
-  }
+  def synthMp4Frames(w: Column, h: Column, nFrames: Column,
+      seed: Column): Column =
+    staticCall(this, "mp4FramesBytes", BinaryType, nullable = false,
+      w, h, nFrames, seed)
 
   /** (w, h, nFrames, seed) → noise-frame MP4 bytes
     * ([[mp4NoiseFramesBytes]]). */
-  case class Mp4NoiseSynthExpr(first: Expression, second: Expression,
-      third: Expression, fourth: Expression) extends QuaternaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-      mp4NoiseFramesBytes(a.asInstanceOf[Int], b.asInstanceOf[Int],
-        c.asInstanceOf[Int], d.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-        s"${ev.value} = graft.ext.Mp4Demux.mp4NoiseFramesBytes($a, $b, $c, $d);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression, d: Expression): Mp4NoiseSynthExpr = copy(a, b, c, d)
-  }
+  def synthMp4Noise(w: Column, h: Column, nFrames: Column,
+      seed: Column): Column =
+    staticCall(this, "mp4NoiseFramesBytes", BinaryType, nullable = false,
+      w, h, nFrames, seed)
 
   /** binary → 64-bit video fingerprint, null when not a demuxable
     * raw-luma MP4 of at least 65 frames. */
-  case class Mp4FingerprintExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any = {
-      val v = mp4Fingerprint64(input.asInstanceOf[Array[Byte]])
-      if (v == null) null else v.longValue()
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tmp = ctx.freshName("vfp")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        java.lang.Long $tmp = graft.ext.Mp4Demux.mp4Fingerprint64($c);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp.longValue(); }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): Mp4FingerprintExpr =
-      copy(c)
-  }
-
-  def frameStats(bytes: Column, stride: Column): Column =
-    GraftSqlBridge.column(Mp4FrameStatsExpr(GraftSqlBridge.expression(bytes),
-      GraftSqlBridge.expression(stride)))
-
-  def sampleFrames(bytes: Column, stride: Column): Column =
-    GraftSqlBridge.column(Mp4SampleFramesExpr(GraftSqlBridge.expression(bytes),
-      GraftSqlBridge.expression(stride)))
-
-  def frameSums(bytes: Column): Column =
-    GraftSqlBridge.column(Mp4FrameSumsExpr(GraftSqlBridge.expression(bytes)))
-
-  def synthMp4Frames(w: Column, h: Column, nFrames: Column,
-      seed: Column): Column =
-    GraftSqlBridge.column(Mp4FramesSynthExpr(GraftSqlBridge.expression(w),
-      GraftSqlBridge.expression(h), GraftSqlBridge.expression(nFrames),
-      GraftSqlBridge.expression(seed)))
-
-  def synthMp4Noise(w: Column, h: Column, nFrames: Column,
-      seed: Column): Column =
-    GraftSqlBridge.column(Mp4NoiseSynthExpr(GraftSqlBridge.expression(w),
-      GraftSqlBridge.expression(h), GraftSqlBridge.expression(nFrames),
-      GraftSqlBridge.expression(seed)))
-
   def mp4Fingerprint(bytes: Column): Column =
-    GraftSqlBridge.column(Mp4FingerprintExpr(GraftSqlBridge.expression(bytes)))
+    staticCall(this, "mp4Fingerprint64", LongType, nullable = true, bytes)
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -63,19 +63,6 @@ object Multimodal {
           "(e.g. a deliberate decade probe).")
     }
   }
-
-  /** Unified stats row for the real dispatching decoder: image fields
-    * null for audio, `sum_sq` null for images, everything null (struct
-    * itself null) for undecodable bytes. */
-  val DecodedStatsType: StructType = StructType(Seq(
-    StructField("media_type", StringType),
-    StructField("width", LongType),
-    StructField("height", LongType),
-    StructField("n_samples", LongType),
-    StructField("sum_val", LongType),
-    StructField("sum_sq", LongType),
-    StructField("min_val", IntegerType),
-    StructField("max_val", IntegerType)))
 
   /** Near-duplicate pairs over ANY 64-bit perceptual/sketch hash
     * column (image dHash, audio fingerprint, text simhash — whatever
@@ -395,7 +382,10 @@ object Multimodal {
     * matching decoder (PNG / GIF / WAV / JPEG / raw-luma MP4); null
     * for corrupt payloads and compressed video codecs. The CaseWhen
     * evaluates branches lazily, and each decoder rejects foreign magic
-    * in O(1), so a blob pays only its own format's decode cost. */
+    * in O(1), so a blob pays only its own format's decode cost. One
+    * struct(media_type, width, height, n_samples, sum_val, sum_sq,
+    * min_val, max_val) per blob: image fields null for audio, `sum_sq`
+    * null for images. */
   def decodeStats(bytes: Column): Column = {
     val png = PixelDecode.pngStats(bytes)
     val gif = GifDecode.gifStats(bytes)
@@ -464,57 +454,6 @@ object Multimodal {
       .when(jpg.isNotNull, jpgRow)
       .when(mp4.isNotNull, mp4Row)
       .when(wbp.isNotNull, wbpRow)
-  }
-
-  /** The same real dispatch in mapPartitions form (per-partition codec
-    * context shape); appends column `st: DecodedStatsType`. */
-  def decodeStatsPartitions(df: DataFrame,
-      bytesCol: String = "media_bytes"): DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      StructField("st", DecodedStatsType))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val idx = df.schema.fieldIndex(bytesCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val b = r.getAs[Array[Byte]](idx)
-        val st: Row =
-          if (b == null || b.length < 4) null
-          else if (b(0) == 0x89.toByte && b(1) == 'P') {
-            val s = PixelDecode.pngPixelStats(b)
-            if (s == null) null
-            else Row("image/png", s.getLong(0), s.getLong(1), s.getLong(3),
-              s.getLong(4), null, s.getInt(5), s.getInt(6))
-          } else if (b(0) == 'G' && b(1) == 'I' && b(2) == 'F') {
-            val s = GifDecode.gifPixelStats(b)
-            if (s == null) null
-            else Row("image/gif", s.getLong(0), s.getLong(1), s.getLong(2),
-              s.getLong(3), null, s.getInt(4), s.getInt(5))
-          } else if (b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-              b.length >= 16 && b(8) == 'W' && b(9) == 'E' && b(10) == 'B') {
-            val s = WebpDecode.webpPixelStats(b)
-            if (s == null) null // lossy VP8: honest null
-            else Row("image/webp", s.getLong(0), s.getLong(1), s.getLong(2),
-              s.getLong(3), null, s.getInt(4), s.getInt(5))
-          } else if (b(0) == 'R' && b(1) == 'I' && b(2) == 'F') {
-            val s = PixelDecode.wavSampleStats(b)
-            if (s == null) null
-            else Row("audio/wav", null, null, s.getLong(2), s.getLong(3),
-              s.getLong(4), s.getInt(5), s.getInt(6))
-          } else if ((b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
-            val s = ImageIoDecode.jpegPixelStats(b)
-            if (s == null) null
-            else Row("image/jpeg", s.getLong(0), s.getLong(1), s.getLong(2),
-              s.getLong(3), null, s.getInt(4), s.getInt(5))
-          } else if (b.length >= 12 && b(4) == 'f' && b(5) == 't' &&
-              b(6) == 'y' && b(7) == 'p') {
-            val s = Mp4Demux.mp4FrameStats(b, 1)
-            if (s == null) null
-            else Row("video/mp4", s.getLong(0), s.getLong(1), s.getLong(4),
-              s.getLong(5), null, s.getInt(6), s.getInt(7))
-          } else null
-        Row.fromSeq(r.toSeq :+ st)
-      }
-    }(enc)
   }
 
   /** Frame extraction over a heterogeneous column: every `stride`-th

@@ -3,10 +3,11 @@ package graft.ext
 import java.util.zip.{CRC32, Deflater, Inflater}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
+
+import graft.functions.Expressions.staticCall
 
 /** Pure-JVM PIXEL/SAMPLE decode — the step beyond [[MediaProbe]]'s
   * header probes: PNG image data is actually decompressed (IDAT →
@@ -725,135 +726,6 @@ object PixelDecode {
     out.toByteArray
   }
 
-  // ---- expressions -----------------------------------------------------
-
-  /** binary → image stats struct (full PNG decode), null on anything
-    * not a supported PNG. */
-  case class PngStatsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ImageStatsType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      pngPixelStats(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.PixelDecode.pngPixelStats($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): PngStatsExpr =
-      copy(c)
-  }
-
-  /** binary → stats of the nearest-neighbor (tw × th) resample, null
-    * when not a decodable PNG. Target dims are plan-time constants —
-    * a resize spec is pipeline config, not data. */
-  case class PngResizeStatsExpr(child: Expression, tw: Int, th: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ImageStatsType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      pngResizeNearestStats(input.asInstanceOf[Array[Byte]], tw, th)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.PixelDecode.pngResizeNearestStats($c, $tw, $th);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): PngResizeStatsExpr =
-      copy(child = c)
-  }
-
-  /** binary → stats of every stride-th PCM sample, null when not
-    * PCM-16 WAV. Stride is a plan-time constant. */
-  case class WavDecimateStatsExpr(child: Expression, stride: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = AudioStatsType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      wavDecimateStats(input.asInstanceOf[Array[Byte]], stride)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.PixelDecode.wavDecimateStats($c, $stride);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): WavDecimateStatsExpr =
-      copy(child = c)
-  }
-
-  /** binary → PCM sample stats struct, null when not PCM-16 WAV. */
-  case class WavStatsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = AudioStatsType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      wavSampleStats(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.ext.PixelDecode.wavSampleStats($c);
-        if (${ev.value} == null) { ${ev.isNull} = true; }
-      """)
-    override protected def withNewChildInternal(c: Expression): WavStatsExpr =
-      copy(c)
-  }
-
-  /** (w, h, seed) → real-pixel PNG bytes. */
-  case class PngPixelSynthExpr(first: Expression, second: Expression,
-      third: Expression) extends TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(w: Any, h: Any, s: Any): Any =
-      pngPixelBytes(w.asInstanceOf[Int], h.asInstanceOf[Int],
-        s.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (w, h, s) =>
-        s"${ev.value} = graft.ext.PixelDecode.pngPixelBytes($w, $h, $s);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression): PngPixelSynthExpr = copy(a, b, c)
-  }
-
-  /** (w, h, seed) → seed-keyed texture PNG bytes ([[pngTextureBytes]]). */
-  case class PngTextureSynthExpr(first: Expression, second: Expression,
-      third: Expression) extends TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(w: Any, h: Any, s: Any): Any =
-      pngTextureBytes(w.asInstanceOf[Int], h.asInstanceOf[Int],
-        s.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (w, h, s) =>
-        s"${ev.value} = graft.ext.PixelDecode.pngTextureBytes($w, $h, $s);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression): PngTextureSynthExpr = copy(a, b, c)
-  }
-
-  /** seed → 72×64 cell-grid PNG bytes ([[pngCellBytes]]). */
-  case class PngCellSynthExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def nullSafeEval(input: Any): Any =
-      pngCellBytes(input.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, s =>
-        s"${ev.value} = graft.ext.PixelDecode.pngCellBytes($s);")
-    override protected def withNewChildInternal(c: Expression): PngCellSynthExpr =
-      copy(c)
-  }
-
-  /** binary → 64-bit perceptual dHash, null when not a decodable PNG
-    * of at least 9×8. */
-  case class PngDHashExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any = {
-      val v = pngDHash64(input.asInstanceOf[Array[Byte]])
-      if (v == null) null else v.longValue()
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tmp = ctx.freshName("dhash")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        java.lang.Long $tmp = graft.ext.PixelDecode.pngDHash64($c);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp.longValue(); }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): PngDHashExpr =
-      copy(c)
-  }
-
   /** Mono-interleaved PCM-16 WAV with seed-KEYED noise samples
     * (murmur-finalizer avalanche over (seed, i) — two different seeds
     * give ~independent streams). [[wavToneBytes]]'s quasi-linear ramp
@@ -892,171 +764,79 @@ object PixelDecode {
     out.toByteArray
   }
 
-  /** binary → 64-bit format-dispatched image dHash (PNG or GIF), null
-    * otherwise. */
-  case class ImageDHashExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any = {
-      val v = imageDHash64(input.asInstanceOf[Array[Byte]])
-      if (v == null) null else v.longValue()
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tmp = ctx.freshName("idhash")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        java.lang.Long $tmp = graft.ext.PixelDecode.imageDHash64($c);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp.longValue(); }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): ImageDHashExpr =
-      copy(c)
-  }
+  // ---- columns (StaticInvoke over the kernels above) --------------------
 
-  /** binary → resampled WAV bytes ([[wavResampleBytes]]), null when
-    * not PCM-16 or the stride doesn't divide the rate. */
-  case class WavResampleExpr(child: Expression, stride: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      wavResampleBytes(input.asInstanceOf[Array[Byte]], stride)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tmp = ctx.freshName("wrs")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        byte[] $tmp = graft.ext.PixelDecode.wavResampleBytes($c, $stride);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp; }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): WavResampleExpr =
-      copy(child = c)
-  }
+  /** binary → image stats struct (full PNG decode), null on anything
+    * not a supported PNG. */
+  def pngStats(bytes: Column): Column =
+    staticCall(this, "pngPixelStats", ImageStatsType, nullable = true, bytes)
 
-  /** binary → 64-bit canonical-rate audio fingerprint
-    * ([[wavFingerprintAt64]]). */
-  case class WavFingerprintAtExpr(child: Expression, canonicalRate: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any = {
-      val v = wavFingerprintAt64(input.asInstanceOf[Array[Byte]], canonicalRate)
-      if (v == null) null else v.longValue()
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tmp = ctx.freshName("afpc")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        java.lang.Long $tmp = graft.ext.PixelDecode.wavFingerprintAt64($c, $canonicalRate);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp.longValue(); }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): WavFingerprintAtExpr =
-      copy(child = c)
-  }
+  /** binary → stats of the nearest-neighbor (tw × th) resample, null
+    * when not a decodable PNG. Target dims are plan-time constants —
+    * a resize spec is pipeline config, not data. */
+  def pngResizeStats(bytes: Column, tw: Int, th: Int): Column =
+    staticCall(this, "pngResizeNearestStats", ImageStatsType, nullable = true,
+      bytes, lit(tw), lit(th))
+
+  /** binary → PCM sample stats struct, null when not PCM-16 WAV. */
+  def wavStats(bytes: Column): Column =
+    staticCall(this, "wavSampleStats", AudioStatsType, nullable = true, bytes)
+
+  /** binary → stats of every stride-th PCM sample, null when not
+    * PCM-16 WAV. Stride is a plan-time constant. */
+  def wavDecimate(bytes: Column, stride: Int): Column =
+    staticCall(this, "wavDecimateStats", AudioStatsType, nullable = true,
+      bytes, lit(stride))
+
+  /** (w, h, seed) → real-pixel PNG bytes. */
+  def synthPngPixels(w: Column, h: Column, seed: Column): Column =
+    staticCall(this, "pngPixelBytes", BinaryType, nullable = false, w, h, seed)
+
+  /** (w, h, seed) → seed-keyed texture PNG bytes ([[pngTextureBytes]]). */
+  def synthPngTexture(w: Column, h: Column, seed: Column): Column =
+    staticCall(this, "pngTextureBytes", BinaryType, nullable = false, w, h, seed)
+
+  /** seed → 72×64 cell-grid PNG bytes ([[pngCellBytes]]). */
+  def synthPngCells(seed: Column): Column =
+    staticCall(this, "pngCellBytes", BinaryType, nullable = false, seed)
+
+  /** binary → 64-bit perceptual dHash, null when not a decodable PNG
+    * of at least 9×8. */
+  def pngDHash(bytes: Column): Column =
+    staticCall(this, "pngDHash64", LongType, nullable = true, bytes)
+
+  /** binary → 64-bit format-dispatched image dHash ([[imageDHash64]]),
+    * null when no decoder accepts the bytes. */
+  def imageDHashAny(bytes: Column): Column =
+    staticCall(this, "imageDHash64", LongType, nullable = true, bytes)
 
   /** binary → 64-bit audio fingerprint, null when not PCM-16 WAV of
     * at least 65 samples. */
-  case class WavFingerprintExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any = {
-      val v = wavFingerprint64(input.asInstanceOf[Array[Byte]])
-      if (v == null) null else v.longValue()
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tmp = ctx.freshName("afp")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        java.lang.Long $tmp = graft.ext.PixelDecode.wavFingerprint64($c);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp.longValue(); }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): WavFingerprintExpr =
-      copy(c)
-  }
+  def wavFingerprint(bytes: Column): Column =
+    staticCall(this, "wavFingerprint64", LongType, nullable = true, bytes)
+
+  /** binary → resampled WAV bytes ([[wavResampleBytes]]), null when
+    * not PCM-16 or the stride doesn't divide the rate. */
+  def wavResample(bytes: Column, stride: Int): Column =
+    staticCall(this, "wavResampleBytes", BinaryType, nullable = true,
+      bytes, lit(stride))
+
+  /** binary → 64-bit canonical-rate audio fingerprint
+    * ([[wavFingerprintAt64]]). */
+  def wavFingerprintAt(bytes: Column, canonicalRate: Int): Column =
+    staticCall(this, "wavFingerprintAt64", LongType, nullable = true,
+      bytes, lit(canonicalRate))
 
   /** (channels, sampleRate, nFrames, seed) → seed-keyed noise WAV
     * bytes ([[wavNoiseBytes]]). */
-  case class WavNoiseSynthExpr(first: Expression, second: Expression,
-      third: Expression, fourth: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-      wavNoiseBytes(a.asInstanceOf[Int], b.asInstanceOf[Int],
-        c.asInstanceOf[Int], d.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-        s"${ev.value} = graft.ext.PixelDecode.wavNoiseBytes($a, $b, $c, $d);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression, d: Expression): WavNoiseSynthExpr = copy(a, b, c, d)
-  }
-
-  /** (channels, sampleRate, nFrames, seed) → real-sample WAV bytes. */
-  case class WavToneSynthExpr(first: Expression, second: Expression,
-      third: Expression, fourth: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-      wavToneBytes(a.asInstanceOf[Int], b.asInstanceOf[Int],
-        c.asInstanceOf[Int], d.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-        s"${ev.value} = graft.ext.PixelDecode.wavToneBytes($a, $b, $c, $d);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression, d: Expression): WavToneSynthExpr = copy(a, b, c, d)
-  }
-
-  def pngStats(bytes: Column): Column =
-    GraftSqlBridge.column(PngStatsExpr(GraftSqlBridge.expression(bytes)))
-
-  def pngResizeStats(bytes: Column, tw: Int, th: Int): Column =
-    GraftSqlBridge.column(
-      PngResizeStatsExpr(GraftSqlBridge.expression(bytes), tw, th))
-
-  def wavStats(bytes: Column): Column =
-    GraftSqlBridge.column(WavStatsExpr(GraftSqlBridge.expression(bytes)))
-
-  def wavDecimate(bytes: Column, stride: Int): Column =
-    GraftSqlBridge.column(
-      WavDecimateStatsExpr(GraftSqlBridge.expression(bytes), stride))
-
-  def synthPngPixels(w: Column, h: Column, seed: Column): Column =
-    GraftSqlBridge.column(PngPixelSynthExpr(GraftSqlBridge.expression(w),
-      GraftSqlBridge.expression(h), GraftSqlBridge.expression(seed)))
-
-  def synthPngTexture(w: Column, h: Column, seed: Column): Column =
-    GraftSqlBridge.column(PngTextureSynthExpr(GraftSqlBridge.expression(w),
-      GraftSqlBridge.expression(h), GraftSqlBridge.expression(seed)))
-
-  def synthPngCells(seed: Column): Column =
-    GraftSqlBridge.column(PngCellSynthExpr(GraftSqlBridge.expression(seed)))
-
-  def pngDHash(bytes: Column): Column =
-    GraftSqlBridge.column(PngDHashExpr(GraftSqlBridge.expression(bytes)))
-
-  def imageDHashAny(bytes: Column): Column =
-    GraftSqlBridge.column(ImageDHashExpr(GraftSqlBridge.expression(bytes)))
-
-  def wavFingerprint(bytes: Column): Column =
-    GraftSqlBridge.column(WavFingerprintExpr(GraftSqlBridge.expression(bytes)))
-
-  def wavResample(bytes: Column, stride: Int): Column =
-    GraftSqlBridge.column(WavResampleExpr(GraftSqlBridge.expression(bytes), stride))
-
-  def wavFingerprintAt(bytes: Column, canonicalRate: Int): Column =
-    GraftSqlBridge.column(
-      WavFingerprintAtExpr(GraftSqlBridge.expression(bytes), canonicalRate))
-
   def synthWavNoise(channels: Column, sampleRate: Column, nFrames: Column,
       seed: Column): Column =
-    GraftSqlBridge.column(WavNoiseSynthExpr(GraftSqlBridge.expression(channels),
-      GraftSqlBridge.expression(sampleRate), GraftSqlBridge.expression(nFrames),
-      GraftSqlBridge.expression(seed)))
+    staticCall(this, "wavNoiseBytes", BinaryType, nullable = false,
+      channels, sampleRate, nFrames, seed)
 
+  /** (channels, sampleRate, nFrames, seed) → real-sample WAV bytes. */
   def synthWavTone(channels: Column, sampleRate: Column, nFrames: Column,
       seed: Column): Column =
-    GraftSqlBridge.column(WavToneSynthExpr(GraftSqlBridge.expression(channels),
-      GraftSqlBridge.expression(sampleRate), GraftSqlBridge.expression(nFrames),
-      GraftSqlBridge.expression(seed)))
+    staticCall(this, "wavToneBytes", BinaryType, nullable = false,
+      channels, sampleRate, nFrames, seed)
 }

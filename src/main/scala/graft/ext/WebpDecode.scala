@@ -1,11 +1,9 @@
 package graft.ext
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
-import org.apache.spark.sql.GraftSqlBridge
+import graft.functions.Expressions.staticCall
 
 /** [EXT] REAL WebP-lossless (VP8L) decode: a spec-complete
   * implementation of the public "WebP Lossless Bitstream
@@ -807,83 +805,22 @@ object WebpDecode {
     org.apache.spark.sql.types.StructField("max_val",
       org.apache.spark.sql.types.IntegerType)))
 
+  // ---- columns (StaticInvoke over the kernels above) --------------------
+
   /** binary → VP8L luma stats struct, null on anything else. */
-  case class WebpStatsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = WebpStatsType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      webpPixelStats(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tmp = ctx.freshName("wst")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        org.apache.spark.sql.catalyst.expressions.GenericInternalRow $tmp =
-          graft.ext.WebpDecode.webpPixelStats($c);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp; }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): WebpStatsExpr =
-      copy(c)
-  }
+  def webpStats(bytes: Column): Column =
+    staticCall(this, "webpPixelStats", WebpStatsType, nullable = true, bytes)
 
   /** (w, h, seed) → gray gradient VP8L bytes ([[webpGrayBytes]]). */
-  case class WebpGraySynthExpr(first: Expression, second: Expression,
-      third: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
-      webpGrayBytes(a.asInstanceOf[Int], b.asInstanceOf[Int],
-        c.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, c) =>
-        s"${ev.value} = graft.ext.WebpDecode.webpGrayBytes($a, $b, $c);")
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression): WebpGraySynthExpr = copy(a, b, c)
-  }
-
-  def webpStats(bytes: Column): Column =
-    GraftSqlBridge.column(WebpStatsExpr(GraftSqlBridge.expression(bytes)))
-
   def synthWebpGray(w: Column, h: Column, seed: Column): Column =
-    GraftSqlBridge.column(WebpGraySynthExpr(GraftSqlBridge.expression(w),
-      GraftSqlBridge.expression(h), GraftSqlBridge.expression(seed)))
+    staticCall(this, "webpGrayBytes", BinaryType, nullable = false, w, h, seed)
 
   /** seed → WebP-lossless cell-grid bytes ([[webpCellBytes]]). */
-  case class WebpCellSynthExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def nullSafeEval(input: Any): Any =
-      webpCellBytes(input.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, s =>
-        s"${ev.value} = graft.ext.WebpDecode.webpCellBytes($s);")
-    override protected def withNewChildInternal(c: Expression): WebpCellSynthExpr =
-      copy(c)
-  }
+  def synthWebpCells(seed: Column): Column =
+    staticCall(this, "webpCellBytes", BinaryType, nullable = false, seed)
 
   /** binary → 64-bit perceptual dHash, null when not decodable VP8L
     * of at least 9×8. */
-  case class WebpDHashExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any = {
-      val v = webpDHash64(input.asInstanceOf[Array[Byte]])
-      if (v == null) null else v.longValue()
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tmp = ctx.freshName("wdhash")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        java.lang.Long $tmp = graft.ext.WebpDecode.webpDHash64($c);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp.longValue(); }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): WebpDHashExpr =
-      copy(c)
-  }
-
-  def synthWebpCells(seed: Column): Column =
-    GraftSqlBridge.column(WebpCellSynthExpr(GraftSqlBridge.expression(seed)))
-
   def webpDHash(bytes: Column): Column =
-    GraftSqlBridge.column(WebpDHashExpr(GraftSqlBridge.expression(bytes)))
+    staticCall(this, "webpDHash64", LongType, nullable = true, bytes)
 }

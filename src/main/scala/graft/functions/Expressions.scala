@@ -1,50 +1,60 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, EvalMode, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/** Custom Catalyst expressions for the sketch hot paths.
+/** Catalyst surface of the sketch hot paths.
   *
   * The HOF formulations (transform/filter/aggregate) are semantically
   * fine but evaluate one lambda call per element per pass — a 64-bit
-  * SimHash is 64 interpreted passes per row. These expressions do the
+  * SimHash is 64 interpreted passes per row. These functions do the
   * same work in one tight JVM loop per row ([[SketchOps]]), the
-  * preference order of SURVEY.md §7.3 ((b): custom Expression before
-  * mapPartitions).
+  * preference order of SURVEY.md §7.3 ((b): a Catalyst expression
+  * before mapPartitions).
   *
-  * Every expression implements `doGenCode` by emitting a call to its
-  * static [[SketchOps]] kernel — the per-row loop runs as compiled
-  * bytecode AND the enclosing operator pipeline stays inside one
-  * WholeStageCodegen span (a CodegenFallback here would split the
-  * stage and bounce rows through InternalRow on the dedup/ANN scan
-  * path). Interpreted eval calls the identical kernel, so the two
-  * paths cannot diverge.
+  * A kernel that is a pure function of its arguments reaches the plan
+  * through [[staticCall]]: Spark's own `StaticInvoke` node, whose
+  * generated code calls the kernel's static forwarder (the per-row
+  * loop runs as compiled bytecode AND the enclosing operator pipeline
+  * stays inside one WholeStageCodegen span) and whose interpreted
+  * eval reflects on the same method, so the two paths cannot diverge.
+  * The byte decoders of `graft.ext` (PNG/GIF/WebP/JPEG/WAV/MP4/EXIF)
+  * take the same path.
+  *
+  * The classes below stay custom because `StaticInvoke` cannot
+  * express them: MinHash, nearest-centroid, max-cosine, PQ and
+  * hyperplane hold codegen reference objects, cosine dispatches on the
+  * resolved element type, dot and int8 quantize have real codegen
+  * bodies; the Avro, proto and BPE expressions elsewhere call into
+  * instance state.
   */
 object Expressions {
 
   private def col(e: Expression): Column = GraftSqlBridge.column(e)
   private def ex(c: Column): Expression = GraftSqlBridge.expression(c)
 
+  /** `owner.method(args)` as one `StaticInvoke` node: null when any
+    * argument is null, and — when `nullable` — null where the kernel
+    * returns null. A misspelled `method` compiles and fails at first
+    * eval; `StaticKernelParitySpec` evaluates every caller. */
+  private[graft] def staticCall(owner: AnyRef, method: String,
+      dataType: DataType, nullable: Boolean, args: Column*): Column =
+    col(StaticInvoke(owner.getClass, dataType, method, args.map(ex),
+      propagateNull = true, returnNullable = nullable))
+
   private[functions] def splitmix64(seed: Long): Long =
     SketchOps.splitmix64(seed)
 
   private val Ops = "graft.functions.SketchOps"
 
-  /** 64-bit SimHash over an array<bigint> of token hashes. */
-  case class SimHash64Expr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      SketchOps.simhash64(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $Ops.simhash64($c);")
-    override protected def withNewChildInternal(c: Expression): SimHash64Expr =
-      copy(c)
-  }
+  private val LongArray = ArrayType(LongType, containsNull = false)
 
   /** k-permutation MinHash over an array<bigint> of element hashes.
     * Permutation p is the affine map a_p·h + b_p (a_p odd, from
@@ -66,77 +76,6 @@ object Expressions {
         c => s"${ev.value} = $Ops.minhashSig($c, $asRef, $bsRef);")
     }
     override protected def withNewChildInternal(c: Expression): MinHashSigExpr =
-      copy(child = c)
-  }
-
-  /** Distinct hashes of the n-gram windows of a pre-hashed token array:
-    * gram i is a polynomial mix of hashes i..i+n-1. One pass; output
-    * order = first occurrence. Set arithmetic over these (Jaccard,
-    * MinHash) is equivalent to string shingles up to 64-bit collisions.
-    */
-  case class NGramHashesExpr(child: Expression, n: Int,
-      dedupe: Boolean = true)
-      extends UnaryExpression {
-    require(n >= 1)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      SketchOps.ngramHashes(input.asInstanceOf[ArrayData], n, dedupe)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev,
-        c => s"${ev.value} = $Ops.ngramHashes($c, $n, $dedupe);")
-    override protected def withNewChildInternal(c: Expression): NGramHashesExpr =
-      copy(child = c)
-  }
-
-  /** Winnowing document fingerprint (Schleimer/Wilkerson/Aiken):
-    * Rabin-Karp rolling hash over the byte stream with window `w`;
-    * from each window of `w` consecutive k-gram hashes keep the
-    * minimum (rightmost on ties) — the classic plagiarism-detection
-    * fingerprint set, robust to insertions. Output: distinct selected
-    * hashes, first-occurrence order. One pass.
-    */
-  case class WinnowFingerprintExpr(child: Expression, k: Int, w: Int)
-      extends UnaryExpression {
-    require(k >= 1 && w >= 1)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    private val Base = 257L
-    @transient private lazy val basePowK1: Long = {
-      var p = 1L
-      var i = 0
-      while (i < k - 1) { p *= Base; i += 1 }
-      p
-    }
-    override def nullSafeEval(input: Any): Any =
-      SketchOps.winnow(input.asInstanceOf[Array[Byte]], k, w, basePowK1)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev,
-        c => s"${ev.value} = $Ops.winnow($c, $k, $w, ${basePowK1}L);")
-    override protected def withNewChildInternal(c: Expression): WinnowFingerprintExpr =
-      copy(child = c)
-  }
-
-  /** Unicode NFC normalization (java.text.Normalizer) — canonical
-    * composition so visually-identical strings dedup/fingerprint
-    * identically. Not exposed by Spark SQL builtins. */
-  case class StripAccentsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullSafeEval(input: Any): Any =
-      SketchOps.stripAccents(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $Ops.stripAccents($c);")
-    override protected def withNewChildInternal(c: Expression): StripAccentsExpr =
-      copy(child = c)
-  }
-
-  case class NormalizeNfcExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullSafeEval(input: Any): Any =
-      SketchOps.normalizeNfc(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $Ops.normalizeNfc($c);")
-    override protected def withNewChildInternal(c: Expression): NormalizeNfcExpr =
       copy(child = c)
   }
 
@@ -462,24 +401,54 @@ object Expressions {
   def pqAdc(codes: Column, lut: Column, ksub: Int): Column =
     col(PqAdcExpr(ex(codes), ex(lut), ksub))
 
+  /** 64-bit SimHash over an array<bigint> of token hashes. */
   def simhash64(tokenHashes: Column): Column =
-    col(SimHash64Expr(ex(tokenHashes)))
+    staticCall(SketchOps, "simhash64", LongType, nullable = false, tokenHashes)
 
   def minhashSignature(tokenHashes: Column, k: Int): Column =
     col(MinHashSigExpr(ex(tokenHashes), k))
 
+  /** Distinct hashes of the n-gram windows of a pre-hashed token array:
+    * gram i is a polynomial mix of hashes i..i+n-1. One pass; output
+    * order = first occurrence. Set arithmetic over these (Jaccard,
+    * MinHash) is equivalent to string shingles up to 64-bit collisions.
+    */
   def ngramHashes(tokenHashes: Column, n: Int): Column =
-    col(NGramHashesExpr(ex(tokenHashes), n))
+    ngrams(tokenHashes, n, dedupe = true)
 
+  /** [[ngramHashes]] keeping repeated grams (one per window). */
   def ngramHashesAll(tokenHashes: Column, n: Int): Column =
-    col(NGramHashesExpr(ex(tokenHashes), n, dedupe = false))
+    ngrams(tokenHashes, n, dedupe = false)
 
-  def winnowFingerprint(bytes: Column, k: Int = 5, w: Int = 4): Column =
-    col(WinnowFingerprintExpr(ex(bytes), k, w))
+  private def ngrams(tokenHashes: Column, n: Int, dedupe: Boolean): Column = {
+    require(n >= 1)
+    staticCall(SketchOps, "ngramHashes", LongArray, nullable = false,
+      tokenHashes, lit(n), lit(dedupe))
+  }
 
-  def normalizeNfc(text: Column): Column = col(NormalizeNfcExpr(ex(text)))
+  /** Winnowing document fingerprint (Schleimer/Wilkerson/Aiken):
+    * Rabin-Karp rolling hash over the byte stream with window `w`;
+    * from each window of `w` consecutive k-gram hashes keep the
+    * minimum (rightmost on ties) — the classic plagiarism-detection
+    * fingerprint set, robust to insertions. Output: distinct selected
+    * hashes, first-occurrence order. One pass.
+    */
+  def winnowFingerprint(bytes: Column, k: Int = 5, w: Int = 4): Column = {
+    require(k >= 1 && w >= 1)
+    val basePowK1 = (1 until k).foldLeft(1L)((p, _) => p * 257L)
+    staticCall(SketchOps, "winnow", LongArray, nullable = false,
+      bytes, lit(k), lit(w), lit(basePowK1))
+  }
 
-  def stripAccents(text: Column): Column = col(StripAccentsExpr(ex(text)))
+  /** Unicode NFC normalization (java.text.Normalizer) — canonical
+    * composition so visually-identical strings dedup/fingerprint
+    * identically. Not exposed by Spark SQL builtins. */
+  def normalizeNfc(text: Column): Column =
+    staticCall(SketchOps, "normalizeNfc", StringType, nullable = false, text)
+
+  /** Accent stripping ([[SketchOps.stripAccents]]): 'á' → 'a'. */
+  def stripAccents(text: Column): Column =
+    staticCall(SketchOps, "stripAccents", StringType, nullable = false, text)
 
   def cosineSim(a: Column, b: Column): Column =
     col(CosineSimExpr(ex(a), ex(b)))

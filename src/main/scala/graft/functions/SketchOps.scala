@@ -4,8 +4,9 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernels for the sketch expressions — one tight JVM loop per
-  * row, shared by interpreted eval AND generated code (the expressions'
-  * `doGenCode` emits a call to these static forwarders, the same
+  * row, shared by interpreted eval AND generated code (generated code
+  * calls these static forwarders: a `StaticInvoke` node for the pure
+  * kernels, the custom expressions' `doGenCode` for the rest — the
   * pattern Spark's own byte/string expressions use). Keeping a single
   * implementation means codegen and fallback can never diverge.
   */

@@ -77,6 +77,12 @@ final case class SchemaSettings(
 /** `outbox.log_topics` / `outbox.compact_topics`: `all`, or a list. */
 sealed trait TopicSelector {
   def matches(topic: String): Boolean
+
+  /** `Outbox.drainBatch`-shaped arguments: (compactAll, compactTopics). */
+  def allOrNames: (Boolean, Set[String]) = this match {
+    case TopicSelector.All => (true, Set.empty)
+    case TopicSelector.Names(n) => (false, n)
+  }
 }
 object TopicSelector {
   case object All extends TopicSelector {
@@ -92,15 +98,7 @@ object TopicSelector {
 
 final case class OutboxSettings(
     logTopics: TopicSelector = TopicSelector.Names(Set.empty),
-    compactTopics: TopicSelector = TopicSelector.Names(Set.empty)) {
-
-  /** `Outbox.drainBatch`-shaped arguments: (compactAll, compactTopics). */
-  def compactArgs: (Boolean, Set[String]) = args(compactTopics)
-  private def args(s: TopicSelector): (Boolean, Set[String]) = s match {
-    case TopicSelector.All => (true, Set.empty)
-    case TopicSelector.Names(n) => (false, n)
-  }
-}
+    compactTopics: TopicSelector = TopicSelector.Names(Set.empty))
 
 /** One `db_poller.<name>.*` block (reference setting_object
   * `db_poller`, `configuration.rb:275-315`; defaults mirrored). */

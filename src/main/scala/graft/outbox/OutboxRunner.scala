@@ -3,7 +3,7 @@ package graft.outbox
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.MessageCols
+import graft.model.{MessageCols, TopicSelector}
 import graft.observe.Metrics
 import graft.operators.Outbox
 
@@ -109,9 +109,11 @@ class OutboxRunner(
   }
 
   /** One sweep over all topics: drain ≤batchSize per topic in id
-    * order, produce, remove drained rows. Topics in error cooldown are
+    * order, last-wins-compacting the topics `compactTopics` selects
+    * (the config file's `outbox.compact_topics`, `all` included),
+    * produce, remove drained rows. Topics in error cooldown are
     * skipped this sweep. Returns drained count. */
-  def sweep(compactTopics: Set[String] = Set.empty)(
+  def sweep(compactTopics: TopicSelector = TopicSelector.Names(Set.empty))(
       produce: DataFrame => Unit): Long = {
     val now = clock()
     if (manifest.isEmpty) return 0L
@@ -120,10 +122,11 @@ class OutboxRunner(
       .collect().map(_.getString(0))
       .filter(t => cooldownUntil.getOrElse(t, 0L) <= now)
     if (eligibleTopics.isEmpty) return 0L
+    val (compactAll, compactNames) = compactTopics.allOrNames
     val drained = Outbox.drainBatch(
       all.filter(col(MessageCols.Topic).isin(eligibleTopics.toSeq: _*)),
-      MessageCols.Topic, "id", MessageCols.Key,
-      compactTopics = compactTopics, batchSize = batchSize)
+      MessageCols.Topic, "id", MessageCols.Key, compactTopics = compactNames,
+      compactAll = compactAll, batchSize = batchSize)
       .cache()
     try {
       // per-topic row counts in ONE job (a count() per topic would be

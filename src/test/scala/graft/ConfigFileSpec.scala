@@ -229,7 +229,7 @@ class ConfigFileSpec extends SparkSpec {
 
   test("outbox selectors from the file drive drainBatch compaction") {
     val cfg = GraftConfigFile.parse("outbox.compact_topics = orders\n")
-    val (compactAll, compactSet) = cfg.outbox.compactArgs
+    val (compactAll, compactSet) = cfg.outbox.compactTopics.allOrNames
     val staged = Seq(
       (1L, "orders", "k1", "v1"), (2L, "orders", "k1", "v2"),
       (3L, "audit", "k1", "a1"), (4L, "audit", "k1", "a2"))
@@ -240,7 +240,7 @@ class ConfigFileSpec extends SparkSpec {
     // orders compacts to the last version; audit keeps both rows
     assert(got === Set(2L, 3L, 4L))
     assert(GraftConfigFile.parse("outbox.compact_topics = all\n")
-      .outbox.compactArgs === ((true, Set.empty[String])))
+      .outbox.compactTopics.allOrNames === ((true, Set.empty[String])))
   }
 
   test("the file's kill-switch reaches the engine-wide producer gate") {

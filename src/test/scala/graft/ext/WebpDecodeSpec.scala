@@ -355,11 +355,6 @@ class WebpDecodeSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(got === Map(1L -> "image/webp", 2L -> "audio/wav",
       3L -> "image/webp"))
-    // and the mapPartitions twin dispatches identically
-    val mp = Multimodal.decodeStatsPartitions(rows)
-      .select(col("id"), col("st.media_type"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(mp === got)
   }
 
   test("MediaProbe reads VP8L dims from the header without decoding") {

@@ -14,16 +14,30 @@ class CodegenSpec extends SparkSpec {
   import spark.implicits._
 
   test("sketch expressions declare doGenCode, not CodegenFallback") {
-    val classes: Seq[Class[_]] = Seq(
-      classOf[Expressions.SimHash64Expr],
-      classOf[Expressions.MinHashSigExpr],
-      classOf[Expressions.NGramHashesExpr],
-      classOf[Expressions.WinnowFingerprintExpr],
-      classOf[Expressions.NormalizeNfcExpr],
-      classOf[Expressions.CosineSimExpr])
-    classes.foreach { c =>
-      assert(!classOf[CodegenFallback].isAssignableFrom(c),
-        s"${c.getSimpleName} still falls back to interpreted eval")
+    // every node of the analyzed plans of projections over each custom
+    // sketch expression and each StaticInvoke-backed function
+    val vecs = Seq((Seq(1L, 2L), Seq(0.6f, 0.8f), Array[Byte](0), Seq(0.0)))
+      .toDF("hs", "vec", "codes", "lut")
+    val book = Array(Array(Array(0.0, 0.0)))
+    val custom = vecs.select(
+      Expressions.minhashSignature(col("hs"), 4),
+      Expressions.cosineSim(col("vec"), col("vec")),
+      Expressions.nearestCentroids(col("vec"), Array(Array(0.0, 1.0)), 1),
+      Expressions.maxCosineAgainst(col("vec"), Array(7L), Array(Array(1.0, 0.0))),
+      Expressions.pqEncode(col("vec"), book),
+      Expressions.pqLut(col("vec"), book),
+      Expressions.pqAdc(col("codes"), col("lut"), 1),
+      Expressions.hyperplaneBucket(col("vec"), Array(Array(1.0, 0.0))),
+      Expressions.hyperplaneRanked(col("vec"), Array(Array(1.0, 0.0))),
+      Expressions.dotProduct(col("vec"), col("vec")),
+      Expressions.quantizeInt8(col("vec")))
+    val converted = graft.StaticKernelParitySpec.cases.map(c =>
+      graft.StaticKernelParitySpec.frame(spark, c).select(c.fn(c.args)))
+    (custom +: converted).foreach { df =>
+      val fallbacks = df.queryExecution.analyzed.flatMap(_.expressions)
+        .flatMap(_.collect { case f: CodegenFallback => f.nodeName })
+      assert(fallbacks.isEmpty,
+        s"${fallbacks.mkString(", ")} still fall back to interpreted eval")
     }
   }
 
@@ -33,18 +47,29 @@ class CodegenSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
-      val df = Seq(
-        (Seq(1L, 2L, 3L, 4L), Seq(0.1f, 0.2f, 0.3f), "café au lait"))
-        .toDF("hashes", "vec", "text")
-      val got = df.select(
+      import graft.ext.{Mp4Demux, PixelDecode}
+      val png = PixelDecode.pngCellBytes(3)
+      val mp4 = Mp4Demux.mp4FramesBytes(4, 3, 2, 9)
+      val local = Seq(
+        (Seq(1L, 2L, 3L, 4L), Seq(0.1f, 0.2f, 0.3f), "café au lait", png, mp4))
+        .toDF("hashes", "vec", "text", "png", "mp4")
+      // RDD-backed: a local relation's projection is folded on the
+      // driver by interpreted eval and never reaches codegen
+      val df = spark.createDataFrame(local.rdd, local.schema)
+      val projected = df.select(
         Expressions.simhash64(col("hashes")).as("sh"),
         Expressions.minhashSignature(col("hashes"), 8).as("mh"),
         Expressions.ngramHashes(col("hashes"), 2).as("ng"),
         Expressions.winnowFingerprint(
           encode(col("text"), "UTF-8"), 3, 2).as("wf"),
         Expressions.normalizeNfc(col("text")).as("nfc"),
-        Expressions.cosineSim(col("vec"), col("vec")).as("cos"))
-        .collect().head
+        Expressions.cosineSim(col("vec"), col("vec")).as("cos"),
+        PixelDecode.pngDHash(col("png")).as("dh"),
+        PixelDecode.pngStats(col("png")).getField("n_samples").as("ns"),
+        Mp4Demux.frameStats(col("mp4"), lit(1)).getField("sum_val").as("fs"))
+      val plan = projected.queryExecution.executedPlan.toString
+      assert(plan.contains("*(1)"), s"no codegen span in:\n$plan")
+      val got = projected.collect().head
 
       import org.apache.spark.sql.catalyst.util.GenericArrayData
       val hashes = new GenericArrayData(Array(1L, 2L, 3L, 4L))
@@ -58,6 +83,9 @@ class CodegenSpec extends SparkSpec {
       assert(got.getAs[String]("nfc") === "café au lait")
       assert(math.abs(got.getAs[Double]("cos") - 1.0) < 1e-12)
       assert(got.getAs[scala.collection.Seq[Long]]("wf").nonEmpty)
+      assert(got.getAs[Long]("dh") === PixelDecode.pngDHash64(png).longValue)
+      assert(got.getAs[Long]("ns") === PixelDecode.pngPixelStats(png).getLong(3))
+      assert(got.getAs[Long]("fs") === Mp4Demux.mp4FrameStats(mp4, 1).getLong(5))
     } finally {
       def restore(key: String, prev: Option[String]): Unit = prev match {
         case Some(v) => spark.conf.set(key, v)
@@ -82,17 +110,21 @@ class CodegenSpec extends SparkSpec {
       val proto = new ProtoBackend(ProtoWire.ProtoMessage("C", Seq(
         ProtoWire.ProtoField("a", 1, ProtoWire.PInt64),
         ProtoWire.ProtoField("s", 2, ProtoWire.PString))))
-      val df = Seq((7L, "x"), (8L, "y")).toDF("a", "s")
-      val round = df.select(
+      val local = Seq((7L, "x", 9, 4), (8L, "y", 9, 4)).toDF("a", "s", "w", "h")
+      // RDD-backed, as above: a local relation never reaches codegen
+      val df = spark.createDataFrame(local.rdd, local.schema)
+      val projected = df.select(
         avro.decodeExpr(avro.encodeExpr(struct(col("a"), col("s"))))
           .as("av"),
         proto.decodeExpr(proto.encodeExpr(struct(col("a"), col("s"))))
           .as("pr"),
         graft.ext.MediaProbe.probeMedia(
-          graft.ext.MediaProbe.synthPng(lit(9), lit(4))).as("m"))
+          graft.ext.MediaProbe.synthPng(col("w"), col("h"))).as("m"))
         .select(col("av.a").as("aa"), col("pr.s").as("ps"),
           col("m.width").as("w"))
-        .as[(Long, String, Long)].collect().toSet
+      val plan = projected.queryExecution.executedPlan.toString
+      assert(plan.contains("*(1)"), s"no codegen span in:\n$plan")
+      val round = projected.as[(Long, String, Long)].collect().toSet
       assert(round === Set((7L, "x", 9L), (8L, "y", 9L)))
     } finally {
       def restore(key: String, prev: Option[String]): Unit = prev match {
